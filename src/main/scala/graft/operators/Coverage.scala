@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Q
+import graft.sources.Memo
 import graft.sources.Tables.{t, events}
 
 /** Inventory completers for SURVEY.md §2 rows not covered elsewhere:
@@ -439,28 +440,28 @@ object Coverage {
         .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_))
         .mkString
     }
-    val tmp = System.getProperty("java.io.tmpdir")
-    def ensure(table: String, src: String, dataDir: String,
+    // the bucket files are written once through a throwaway table
+    // (bucketBy needs saveAsTable), then bound like every later JVM's
+    def ensure(table: String, src: String, memo: String,
         ddlCols: String, bucketCol: String, cols: Seq[String]): Unit =
       if (!s.catalog.tableExists(table)) {
-        if (new java.io.File(dataDir, "_SUCCESS").exists())
-          graft.sources.Tables.timedMemo(s"bucketBind:$table")(
-            s.sql(s"""CREATE TABLE $table ($ddlCols) USING parquet
-                      CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-                      INTO 8 BUCKETS LOCATION '$dataDir'"""))
-        else
-          graft.sources.Tables.timedMemo(s"bucketWrite:$table")(
-            t(s, dir, src).select(cols.head, cols.tail: _*)
-              .write.bucketBy(8, bucketCol).sortBy(bucketCol)
-              .option("path", dataDir)
-              .mode("overwrite").saveAsTable(table))
+        val dataDir = Memo.publish(memo) { d =>
+          t(s, dir, src).select(cols.head, cols.tail: _*)
+            .write.bucketBy(8, bucketCol).sortBy(bucketCol)
+            .option("path", d.getPath)
+            .mode("overwrite").saveAsTable(s"${table}_w")
+          s.sql(s"DROP TABLE ${table}_w") // external: files stay
+        }
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $table ($ddlCols) USING parquet
+                  CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
+                  INTO 8 BUCKETS LOCATION '$dataDir'""")
       }
     val ot = s"graft_orders_b_${fp("orders.parquet")}"
     val lt = s"graft_lineitem_b_${fp("lineitem.parquet")}"
-    ensure(ot, "orders", s"$tmp/graft_bucket_o_${fp("orders.parquet")}",
+    ensure(ot, "orders", s"graft_bucket_o_${fp("orders.parquet")}",
       "o_orderkey BIGINT, o_totalprice DOUBLE", "o_orderkey",
       Seq("o_orderkey", "o_totalprice"))
-    ensure(lt, "lineitem", s"$tmp/graft_bucket_l_${fp("lineitem.parquet")}",
+    ensure(lt, "lineitem", s"graft_bucket_l_${fp("lineitem.parquet")}",
       "l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE",
       "l_orderkey", Seq("l_orderkey", "l_linenumber", "l_quantity"))
     // merge hint: at toy SF the planner would broadcast instead and skip
@@ -748,17 +749,14 @@ object Coverage {
     * path rebuilds the layout instead of serving stale partitions, and
     * two distinct dirs can never alias (round-6 ADVICE class). */
   private def partitionedEventsDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_part_" +
-      graft.sources.Tables.fingerprint(dir, "events")
-    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      dir: String): String =
+    Memo.publish("graft_part_" +
+        graft.sources.Tables.fingerprint(dir, "events")) { d =>
       events(s, dir)
         .selectExpr("event_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts",
           "user_id", "value", "event_type")
-        .write.mode("overwrite").partitionBy("event_type").parquet(out)
-    }
-    out
-  }
+        .write.mode("overwrite").partitionBy("event_type").parquet(d.getPath)
+    }.getPath
 
   val partitionedWritePrune: Q = (s, dir) => {
     s.read.parquet(partitionedEventsDir(s, dir))
@@ -900,41 +898,21 @@ object Coverage {
   }
 
   private[operators] def compactedEventsDir(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Coverage.synchronized {
-      // Writes go to a pid-tagged stage dir renamed into place, so a
-      // concurrent session either wins the rename or discards its
-      // (identical, same-fingerprint) copy — never reads a
-      // half-written layout.
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
-      def build(target: String)(write: String => Unit): Unit =
-        if (!new java.io.File(target, "_SUCCESS").exists())
-          graft.sources.Tables.timedMemo(
-            s"compactLayout:${new java.io.File(target).getName}") {
-            val stage = s"${target}_stage_${ProcessHandle.current().pid()}"
-            rmTree(new java.io.File(stage))
-            write(stage)
-            if (!new java.io.File(stage).renameTo(new java.io.File(target)))
-              rmTree(new java.io.File(stage)) // lost the race to an equal copy
-          }
-      val (frag, comp) = compactionDirs(dir)
-      build(frag) { p =>
-        events(s, dir)
-          .selectExpr("event_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts",
-            "user_id", "value", "event_type")
-          .repartition(16)
-          .write.mode("overwrite").parquet(p)
-      }
-      build(comp) { p =>
-        s.read.parquet(frag)
-          .repartition(2)
-          .write.mode("overwrite").parquet(p)
-      }
-      comp
+      s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val (frag, comp) = compactionDirs(dir)
+    val fragDir = Memo.publish(new java.io.File(frag).getName) { d =>
+      events(s, dir)
+        .selectExpr("event_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts",
+          "user_id", "value", "event_type")
+        .repartition(16)
+        .write.mode("overwrite").parquet(d.getPath)
     }
+    Memo.publish(new java.io.File(comp).getName) { d =>
+      s.read.parquet(fragDir.getPath)
+        .repartition(2)
+        .write.mode("overwrite").parquet(d.getPath)
+    }.getPath
+  }
 
   val maintenanceCompactFiles: Q = (s, dir) =>
     s.read.parquet(compactedEventsDir(s, dir))
@@ -1104,16 +1082,15 @@ object Coverage {
     * sizes, so a purely in-memory dim would not trigger it). */
   val joinDppPrune: Q = (s, dir) => {
     val fact = s.read.parquet(partitionedEventsDir(s, dir))
-    val dimPath = s"${System.getProperty("java.io.tmpdir")}/graft_dim_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    if (!new java.io.File(dimPath, "_SUCCESS").exists()) {
+    // the dim rows are constant, so one memo serves every corpus
+    val dimPath = Memo.publish("graft_dim_dpp") { d =>
       import s.implicits._
       Seq(("click", "engagement"), ("view", "engagement"),
         ("purchase", "revenue"), ("signup", "acquisition"),
         ("error", "ops"))
         .toDF("event_type", "category")
-        .coalesce(1).write.mode("overwrite").parquet(dimPath)
-    }
+        .coalesce(1).write.mode("overwrite").parquet(d.getPath)
+    }.getPath
     val dim = s.read.parquet(dimPath).filter(col("category") === "revenue")
     fact.join(dim, "event_type")
       .groupBy("event_type", "category")

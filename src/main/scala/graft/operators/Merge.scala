@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.sources.Memo.rmTree
 import graft.sources.Tables.events
 
 /** MERGE INTO / upsert semantics over a partitioned parquet table —
@@ -49,11 +50,6 @@ import graft.sources.Tables.events
 object Merge {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def rmTree(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   /** Stats the caller (and MergeSpec) can assert on. */
   final case class MergeStats(affectedShards: Seq[Long],

@@ -19,6 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Q
+import graft.sources.Memo.rmTree
 
 /** SQL `MERGE INTO` / `UPDATE` / `DELETE` as a FIRST-CLASS connector
   * capability — the DSv2 row-level-operation stack
@@ -684,10 +685,6 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
 
   override def dropTable(ident: Identifier): Boolean =
     if (isLake(ident.namespace()) && descriptorFile(ident.name()).exists()) {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
       rmTree(tableDir(ident.name()))
       descriptorFile(ident.name()).delete()
     } else false
@@ -1645,10 +1642,6 @@ object GraftLakeIO {
     val base =
       if (baseV >= 1) commitMicros(dataDir, baseV) else Long.MinValue
     math.max(now, base + 1)
-  }
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
   }
 
   // ---- NAMED SNAPSHOT TAGS (`_refs.json` at the table root) ----
@@ -3557,10 +3550,6 @@ class GraftLakeStreamingWrite(table: GraftLakeTable, dataDir: String,
 
   private def stageDir(epochId: Long) =
     new java.io.File(dataDir, s"_stage_${queryId}_e$epochId")
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write
@@ -3628,10 +3617,6 @@ class GraftLakeBatchWrite(table: GraftLakeTable, dataDir: String,
     op: Option[GraftLakeRowLevelOperation], queryId: String)
     extends BatchWrite {
   private def stageDir = new java.io.File(dataDir, s"_stage_$queryId")
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
@@ -5151,35 +5136,26 @@ object Lake {
     registerCatalog(s)
     val fp = Tables.fingerprint(dir, "events")
     val (tbl, dataDir) = countsHistoryTable(s, dir) // v1..v3
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(): Unit
-    }
     val latest = GraftLakeIO.latestVersion(dataDir)
     // the staged change-batch files are a pure function of the scripted
-    // v1..v3 history — stage them ONCE per corpus fingerprint (guarded
-    // by _SUCCESS; callers hold the Lake lock) instead of recomputing
-    // three tableChanges diffs + writes per call; per-run foreachBatch
-    // state lands in a separate per-call dir below
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_lake_cdf_replay_v${latest}_$fp")
-    if (!new java.io.File(stage, "_SUCCESS").exists()) {
+    // v1..v3 history — stage them ONCE per corpus fingerprint instead of
+    // recomputing three tableChanges diffs + writes per call; per-run
+    // foreachBatch state lands in a separate per-call dir below
+    val stage = Memo.publish(s"graft_lake_cdf_replay_v${latest}_$fp") { d =>
       // one change-batch FILE per commit, admitted in commit order
       val t0 = System.currentTimeMillis() - 1000000L
       (1 to latest).foreach { v =>
-        val sub = new java.io.File(stage, s"b$v")
+        val sub = new java.io.File(d, s"b$v")
         tableChanges(s, tbl, "user_id", v - 1, v)
           .coalesce(1).write.mode("overwrite").parquet(sub.getPath)
         val part = Option(sub.listFiles()).getOrElse(Array.empty)
           .find(_.getName.startsWith("part-"))
           .getOrElse(sys.error(s"no change file staged for v$v"))
-        val dst = new java.io.File(stage, f"batch-$v%04d.parquet")
+        val dst = new java.io.File(d, f"batch-$v%04d.parquet")
         java.nio.file.Files.move(part.toPath, dst.toPath): Unit
         dst.setLastModified(t0 + v * 1000L): Unit
         rmTree(sub)
       }
-      new java.io.File(stage, "_SUCCESS").createNewFile(): Unit
     }
     val stateRoot = new java.io.File(
       System.getProperty("java.io.tmpdir"),
@@ -8029,12 +8005,11 @@ object Lake {
     * analog of [[Tables.persistentMemo]]: a scripted fixture whose
     * state is identical in every run publishes it once under tmpdir
     * and later JVMs HARDLINK it back into their per-process lake root
-    * instead of re-running the script. Publish is atomic (staged dir
-    * renamed into place); staleness impossible (fingerprint keys the
-    * path). Hardlink restore is sound because the lake's commit
-    * protocol never mutates a published file in place — new commits
-    * write NEW version dirs, and deleting a link never touches the
-    * memo copy.
+    * instead of re-running the script ([[Memo.publish]]; staleness
+    * impossible — the fingerprint keys the path). Hardlink restore is
+    * sound because the lake's commit protocol never mutates a
+    * published file in place — new commits write NEW version dirs, and
+    * deleting a link never touches the memo copy.
     *
     * [[lakeMemoFormat]] is part of the key: the fingerprint captures
     * the INPUT data but not the fixture script or the lake's on-disk
@@ -8050,12 +8025,6 @@ object Lake {
     val root = new java.io.File(
       s.conf.get("spark.sql.catalog.graft_lake.path"))
     root.mkdirs()
-    val memo = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_memo_lake_${lakeMemoFormat}_${what}_$fp")
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(): Unit
-    }
     def copyTree(src: java.io.File, dst: java.io.File): Unit =
       if (src.isDirectory) {
         dst.mkdirs()
@@ -8071,7 +8040,16 @@ object Lake {
         }
       }
     def artifacts(n: String): Seq[String] = Seq(n, s"$n.lake.json")
-    if (new java.io.File(memo, "_SUCCESS").exists()) {
+    var built = false
+    val memo = Memo.publish(
+        s"graft_memo_lake_${lakeMemoFormat}_${what}_$fp") { d =>
+      build
+      built = true
+      names.flatMap(artifacts).foreach { a =>
+        copyTree(new java.io.File(root, a), new java.io.File(d, a))
+      }
+    }
+    if (!built)
       Tables.timedMemo(s"lakeState:$what (restored)") {
         names.flatMap(artifacts).foreach { a =>
           val dst = new java.io.File(root, a)
@@ -8079,20 +8057,6 @@ object Lake {
           copyTree(new java.io.File(memo, a), dst)
         }
       }
-    } else {
-      Tables.timedMemo(s"lakeState:$what (built+published)") {
-        build
-        val stage = new java.io.File(s"${memo.getPath}_stage_" +
-          s"${ProcessHandle.current().pid()}_${System.nanoTime()}")
-        rmTree(stage)
-        stage.mkdirs()
-        names.flatMap(artifacts).foreach { a =>
-          copyTree(new java.io.File(root, a), new java.io.File(stage, a))
-        }
-        new java.io.File(stage, "_SUCCESS").createNewFile(): Unit
-        if (!stage.renameTo(memo)) rmTree(stage)
-      }
-    }
   }
 
   private def textIndexRebuildFixture(

@@ -194,10 +194,6 @@ class GraftLakeDvBatchWrite(table: GraftLakeTable, dataDir: String,
       java.util.UUID.randomUUID().toString)
   private def stageDir =
     new java.io.File(dataDir, s"_stage_${queryId}_delta")
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   override def createBatchWriterFactory(
       physical: PhysicalWriteInfo): DeltaWriterFactory = {
@@ -287,10 +283,10 @@ class GraftLakeDvBatchWrite(table: GraftLakeTable, dataDir: String,
             attempts += 1
         }
       }
-    } finally rmTree(stageDir)
+    } finally Memo.rmTree(stageDir)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    rmTree(stageDir)
+    Memo.rmTree(stageDir)
 }
 
 /** Table-maintenance operations over the deletion-vector state — the

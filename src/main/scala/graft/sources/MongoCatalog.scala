@@ -183,11 +183,7 @@ class GraftMongoCatalog extends TableCatalog with SupportsNamespaces {
   override def dropTable(ident: Identifier): Boolean =
     if (isWeather(ident.namespace()) && ident.name() != "weatherny" &&
         descriptorFile(ident.name()).exists()) {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
-      rmTree(tableDir(ident.name()))
+      Memo.rmTree(tableDir(ident.name()))
       descriptorFile(ident.name()).delete()
     } else if (isWeather(ident.namespace()) && ident.name() == "weatherny")
       throw readOnly // the demo collection is not droppable
@@ -281,10 +277,6 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
     truncateFirst: Boolean, queryId: String)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   private def stageDir = new java.io.File(dataDir, s"_stage_$queryId")
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
@@ -326,11 +318,11 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       }
       GraftLakeIO.commitVersion(dataDir, baseV, build): Unit
-    } finally rmTree(stageDir)
+    } finally Memo.rmTree(stageDir)
   }
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit = rmTree(stageDir)
+      : Unit = Memo.rmTree(stageDir)
 }
 
 class GraftMongoWriterFactory(stagePath: String, declared: StructType)
@@ -654,56 +646,43 @@ object Mongo {
     * calendar (Jan 2024) is shifted onto the orders calendar (Jan
     * 1995) so the federated demo joins land — the same trick as the
     * reference's weather and stock datasets sharing 2022 dates.
-    * Cached under a content fingerprint with atomic publish, like the
+    * Cached under a content fingerprint ([[Memo.publish]]), like the
     * compaction fixture. */
-  private def ensureStore(s: SparkSession, dir: String): String =
-    Mongo.synchronized {
-      val src = new java.io.File(dir, "events.parquet")
-      val key = s"graft-mongo-v1:$dir:${src.length}:${src.lastModified}"
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_))
-        .mkString
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_mongo_$digest"
-      val target = new java.io.File(root, "weatherny")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
-      if (!new java.io.File(target, "_SUCCESS").exists()) {
-        val stage = new java.io.File(
-          s"${target.getPath}_stage_${ProcessHandle.current().pid()}")
-        rmTree(stage)
-        events(s, dir)
-          .groupBy(to_date(col("ts")).as("d0"))
-          .agg(
-            sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
-              .as("awnd"),
-            count(lit(1)).cast(DoubleType).as("pgtm"),
-            countDistinct(col("user_id")).cast(DoubleType).as("prcp"),
-            min(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
-              .as("snow"),
-            max(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
-              .as("snwd"),
-            sum(pmod(col("user_id"), lit(7))).cast(DoubleType).as("tavg"),
-            max(col("user_id")).cast(DoubleType).as("tmax"),
-            min(col("user_id")).cast(DoubleType).as("tmin"))
-          .selectExpr(
-            """date_add(DATE '1995-01-02',
-               CAST(datediff(d0, DATE '2024-01-01') AS INT)) AS day""",
-            "awnd", "pgtm", "prcp", "snow", "snwd", "tavg", "tmax", "tmin")
-          .select(to_json(struct(
-            struct(concat(date_format(col("day"), "yyyy-MM-dd"),
-              lit("T00:00:00Z")).as("$date")).as("_id"),
-            col("awnd"), col("pgtm"), col("prcp"), col("snow"),
-            col("snwd"), col("tavg"), col("tmax"), col("tmin")))
-            .as("value"))
-          .repartition(4)
-          .write.mode("overwrite").text(stage.getPath)
-        target.getParentFile.mkdirs()
-        if (!stage.renameTo(target)) rmTree(stage) // lost a benign race
-      }
-      root
-    }
+  private def ensureStore(s: SparkSession, dir: String): String = {
+    val src = new java.io.File(dir, "events.parquet")
+    val key = s"graft-mongo-v1:$dir:${src.length}:${src.lastModified}"
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_))
+      .mkString
+    Memo.publish(s"graft_mongo_$digest/weatherny") { d =>
+      events(s, dir)
+        .groupBy(to_date(col("ts")).as("d0"))
+        .agg(
+          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
+            .as("awnd"),
+          count(lit(1)).cast(DoubleType).as("pgtm"),
+          countDistinct(col("user_id")).cast(DoubleType).as("prcp"),
+          min(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
+            .as("snow"),
+          max(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
+            .as("snwd"),
+          sum(pmod(col("user_id"), lit(7))).cast(DoubleType).as("tavg"),
+          max(col("user_id")).cast(DoubleType).as("tmax"),
+          min(col("user_id")).cast(DoubleType).as("tmin"))
+        .selectExpr(
+          """date_add(DATE '1995-01-02',
+             CAST(datediff(d0, DATE '2024-01-01') AS INT)) AS day""",
+          "awnd", "pgtm", "prcp", "snow", "snwd", "tavg", "tmax", "tmin")
+        .select(to_json(struct(
+          struct(concat(date_format(col("day"), "yyyy-MM-dd"),
+            lit("T00:00:00Z")).as("$date")).as("_id"),
+          col("awnd"), col("pgtm"), col("prcp"), col("snow"),
+          col("snwd"), col("tavg"), col("tmax"), col("tmin")))
+          .as("value"))
+        .repartition(4)
+        .write.mode("overwrite").text(d.getPath)
+    }.getParent
+  }
 
   /** Bind the document store as the named catalog `graft_mongo` —
     * conf-driven like [[Jdbc.registerCatalog]], force-loaded so SHOW

@@ -80,51 +80,21 @@ object Tables {
 
   /** Cross-JVM memo of a small derived TABLE (verified pairs, exact
     * pairs, centroid index): the build result is published as parquet
-    * under tmpdir keyed by `what` + the source's CONTENT fingerprint,
-    * so a later driver run (Verify then Bench are separate JVMs; bench
-    * reps are separate JVMs) reads the few-KB table back instead of
-    * re-running the chain. Staleness is impossible by construction —
-    * a regenerated corpus changes the fingerprint and rebuilds.
-    * Publish is atomic (pid+seq-tagged stage dir renamed into place,
-    * like Coverage.compactedEventsDir): a concurrent builder either
-    * wins the rename or discards its identical same-fingerprint copy.
-    * The returned frame is a scan of the published copy — consumers
-    * keep the same rows; the on-disk layout is a single file because
-    * these tables are tiny by contract (pairs/centroids, not corpus).
-    */
-  private val memoSeq = new java.util.concurrent.atomic.AtomicLong()
-  // per-(what, fp) build locks — a GLOBAL lock here would serialize the
-  // concurrent fixture warmup (Bench) right where it matters most:
-  // independent memos (exactPairs / verifiedPairs / centroidIndex) must
-  // be able to build in parallel, while two threads wanting the SAME
-  // memo still build it once
-  private val memoLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
+    * under tmpdir keyed by `what` + the source's CONTENT fingerprint
+    * ([[Memo.publish]]), so a later driver run (Verify then Bench are
+    * separate JVMs; bench reps are separate JVMs) reads the few-KB table
+    * back instead of re-running the chain. Staleness is impossible by
+    * construction — a regenerated corpus changes the fingerprint and
+    * rebuilds. The returned frame is a scan of the published copy —
+    * consumers keep the same rows; the on-disk layout is a single file
+    * because these tables are tiny by contract (pairs/centroids, not
+    * corpus). */
   private[graft] def persistentMemo(s: SparkSession, what: String,
       fp: String)(build: => DataFrame): DataFrame = {
-    val lock = memoLocks.computeIfAbsent(s"${what}_$fp", _ => new Object)
-    lock.synchronized {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
-      val tmp = System.getProperty("java.io.tmpdir")
-      val target = new java.io.File(s"$tmp/graft_memo_${what}_$fp")
-      if (!new java.io.File(target, "_SUCCESS").exists()) {
-        timedMemo(what) {
-          val stage = new java.io.File(
-            s"${target.getPath}_stage_${ProcessHandle.current().pid()}" +
-              s"_${memoSeq.incrementAndGet()}")
-          rmTree(stage)
-          build.coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-          if (!stage.renameTo(target)) rmTree(stage)
-        }
-      } else {
-        System.out.println(s"[graft-memo] $what reused cached table ($fp)")
-      }
-      s.read.parquet(target.getPath)
+    val d = Memo.publish(s"graft_memo_${what}_$fp") { d =>
+      build.coalesce(1).write.mode("overwrite").parquet(d.getPath)
     }
+    s.read.parquet(d.getPath)
   }
 
   /** Session conf every graft SparkSession needs (oracle parity + ns reads). */

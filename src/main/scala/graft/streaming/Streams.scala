@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** Structured-Streaming binding of the reference's stream semantics
   * (SURVEY.md §2.9): the Kafka topics are append-only tables whose
@@ -39,19 +39,14 @@ object Streams {
     * arrival log); the harness ships a single parquet file, so stage a
     * symlink dir in tmp once per sf. In production this is the Kafka
     * topic / landing directory. */
-  private def stagedDir(dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(dir, "events.parquet").toAbsolutePath
+  private def stagedDir(dir: String): String =
     // content fingerprint, not dir.hashCode: two sf dirs can never
     // alias onto one staged symlink (round-6 ADVICE class)
-    val d = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stream_" + graft.sources.Tables.fingerprint(dir, "events"))
-    if (!Files.exists(d)) {
-      Files.createDirectories(d)
-      Files.createSymbolicLink(d.resolve("events.parquet"), src)
-    }
-    d.toString
-  }
+    Memo.publish("graft_stream_" + Tables.fingerprint(dir, "events")) { d =>
+      java.nio.file.Files.createSymbolicLink(
+        d.toPath.resolve("events.parquet"),
+        java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath): Unit
+    }.getPath
 
   /** File stream over a directory of event parquet files. The declared
     * schema must match the files' physical `ts` encoding (legacy int64
@@ -123,22 +118,18 @@ object Streams {
     val base =
       if (shm.isDirectory && shm.canWrite) shm.getPath
       else System.getProperty("java.io.tmpdir")
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(): Unit
-    }
     // reap scratch roots whose owning process is gone
     Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("graft_ckpt_"))
       .foreach { d =>
         val alive = d.getName.stripPrefix("graft_ckpt_").toLongOption
           .exists(pid => ProcessHandle.of(pid).isPresent)
-        if (!alive) rmTree(d)
+        if (!alive) Memo.rmTree(d)
       }
     val d = new java.io.File(base,
       s"graft_ckpt_${ProcessHandle.current().pid()}")
     d.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(d)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Memo.rmTree(d)))
     d.getPath
   }
 
@@ -698,35 +689,24 @@ object Streams {
   /** Time-range-chunked staged copy of the event log (one parquet
     * file per ts range — a chronological arrival log), built once per
     * corpus fingerprint. */
-  private def chunkedEventsDir(s: SparkSession, dir: String): String = {
-    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_chunks${replayChunks}_" +
-        graft.sources.Tables.fingerprint(dir, "events"))
-    Streams.synchronized {
-      if (!new java.io.File(d, "_SUCCESS").exists()) {
-        graft.sources.Tables.timedMemo("chunkedEvents") {
-          graft.sources.Tables.events(s, dir)
-            .repartitionByRange(replayChunks, col("ts"))
-            .write.mode("overwrite").parquet(d.getPath)
-          // the file stream admits files in MODIFICATION-TIME order,
-          // but the 4 range-partition tasks finish in arbitrary order —
-          // restamp mtimes ascending in part order (= ts-range order)
-          // so the replay is chronological; otherwise an out-of-order
-          // chunk arrives entirely behind the watermark and stateful
-          // consumers (outer joins) drop it as late data
-          val t0 = System.currentTimeMillis() - 1000000L
-          Option(new java.io.File(d.getPath).listFiles())
-            .getOrElse(Array.empty)
-            .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-            .zipWithIndex
-            .foreach { case (f, i) =>
-              f.setLastModified(t0 + i * 1000L): Unit
-            }
-        }
-      }
-    }
-    d.getPath
-  }
+  private def chunkedEventsDir(s: SparkSession, dir: String): String =
+    Memo.publish(s"graft_stream_chunks${replayChunks}_" +
+        Tables.fingerprint(dir, "events")) { d =>
+      Tables.events(s, dir)
+        .repartitionByRange(replayChunks, col("ts"))
+        .write.mode("overwrite").parquet(d.getPath)
+      // the file stream admits files in MODIFICATION-TIME order, but
+      // the range-partition tasks finish in arbitrary order — restamp
+      // mtimes ascending in part order (= ts-range order) so the replay
+      // is chronological; otherwise an out-of-order chunk arrives
+      // entirely behind the watermark and stateful consumers (outer
+      // joins) drop it as late data
+      val t0 = System.currentTimeMillis() - 1000000L
+      Option(d.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        .zipWithIndex
+        .foreach { case (f, i) => f.setLastModified(t0 + i * 1000L): Unit }
+    }.getPath
 
   /** Stream-stream inner join with watermarks on BOTH sides and a
     * time-range condition (the reference's Q2 weather⋈stock join in

@@ -11,7 +11,7 @@ import scala.concurrent.duration._
   * decisions made for exactly this reason: per-stream child sessions
   * pinning their own shuffle partitions, conf-driven catalog binding
   * (first registration wins), memoized fixtures behind
-  * content-fingerprint + atomic-rename publication. */
+  * content-fingerprint keys and Memo's locked, marker-last publish. */
 class ConcurrencySpec extends SparkSpec {
 
   // diverse on purpose: batch agg, join+sort, window, dedup chain,
@@ -24,7 +24,10 @@ class ConcurrencySpec extends SparkSpec {
     "bitmap_exact_distinct64", "text_bm25_topk", "graph_triangle_count",
     // round 10: DDL-bearing writers (lake MERGE, JDBC ingest) racing
     // the readers — both serialize internally, results must not change
-    "merge_sql_firstseen", "jdbc_ingest_roundtrip")
+    "merge_sql_firstseen", "jdbc_ingest_roundtrip",
+    // first-touch tmpdir memos (partitioned layout, constant DPP dim)
+    // published while other threads read them
+    "partitioned_write_prune", "join_dpp_prune")
 
   test("diverse registered queries race on one session with " +
       "serial-identical results") {

@@ -208,14 +208,15 @@ class RegistryGuardSpec extends SparkSpec {
         s"(remove to keep the lists honest): ${stale.mkString(", ")}")
   }
 
+  private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
+      case d if d.isDirectory => scalaFiles(d)
+      case f if f.getName.endsWith(".scala") => Seq(f)
+      case _ => Nil
+    }
+
   test("plan lint: driver-side collect() appears in main source only " +
       "at the allowlisted metadata/group-discovery sites") {
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case d if d.isDirectory => scalaFiles(d)
-        case f if f.getName.endsWith(".scala") => Seq(f)
-        case _ => Nil
-      }
     // file -> substring that must appear on (or within 3 lines above)
     // the collect() line, pinning WHY that collect is not a data path
     val allow = Map(
@@ -237,6 +238,22 @@ class RegistryGuardSpec extends SparkSpec {
       s"new driver-side collect() in main source (distributed " +
         s"operators must not round-trip rows through the driver): " +
         offenders.mkString(", "))
+  }
+
+  test("source lint: tmpdir memos publish and trees are removed only " +
+      "through Memo") {
+    // one publish protocol (marker + lock) and one rmTree: a private
+    // copy, or a memo trusting Spark's own completion file, is how the
+    // per-site protocols drifted apart
+    val offenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala/graft"))
+      if f.getName != "Memo.scala"
+      lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+      (line, i) <- lines.zipWithIndex
+      if line.contains("def rmTree") || line.contains("\"_SUCCESS\"")
+    } yield s"${f.getName}:${i + 1}"
+    assert(offenders.isEmpty,
+      s"memo protocol or rmTree outside Memo: ${offenders.mkString(", ")}")
   }
 
   test("ORDER BY keys totally order every oracled result on the " +
