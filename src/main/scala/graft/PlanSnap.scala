@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev aid: dump the executed plan of MANY registered queries into
-  * `<outDir>/<query>_<tag>.txt` in one JVM (PlanDump does one query per
-  * JVM, which costs a fixture warmup each). Used to capture the
-  * before/after plan evidence committed under plans/rNN/.
+/** Dev aid: dump the executed plan of one or more registered queries
+  * into `<outDir>/<query>_<tag>.txt` in one JVM, so the fixtures warm
+  * up once. Used to capture the before/after plan evidence committed
+  * under plans/rNN/.
   *
   * usage: runMain graft.PlanSnap <tag> <outDir> <sfDir> <q1> [q2 ...]
+  * (`all` in place of the names: every registered query)
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -16,7 +17,10 @@ object PlanSnap {
     val tag = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val sfDir = args(2)
-    val names = args.drop(3).toSeq
+    val names = args.drop(3).toSeq match {
+      case Seq("all") => SparkEntry.queries.keys.toSeq.sorted
+      case given => given
+    }
     java.nio.file.Files.createDirectories(outDir)
     val builder = SparkSession.builder()
       .master("local[32]")

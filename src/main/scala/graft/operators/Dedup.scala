@@ -484,8 +484,11 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("lab",
           org.apache.spark.sql.types.LongType, nullable = false)))
+      // a NULL endpoint is no edge: the dense path's d1 =!= d2 drops
+      // it, and the union-find below cannot read it (getLong throws)
       val labRdd = edges0
         .selectExpr("CAST(d1 AS BIGINT) AS d1", "CAST(d2 AS BIGINT) AS d2")
+        .where("d1 IS NOT NULL AND d2 IS NOT NULL")
         .coalesce(1).rdd.mapPartitions { it =>
           val parent = new scala.collection.mutable.LongMap[Long]()
           def find(x: Long): Long = {

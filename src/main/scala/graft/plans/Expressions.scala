@@ -740,6 +740,7 @@ object CharNgramHashes {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => GraftStrategies)
+    e.injectPlannerStrategy(SinglePartitionScans(_))
     // lake-catalog VIEW SQL (vanilla Spark doesn't wire DSv2 views —
     // the extension supplies the parser + resolution, Iceberg-style)
     e.injectParser((_, delegate) =>

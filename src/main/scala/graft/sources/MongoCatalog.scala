@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -445,41 +446,83 @@ class GraftMongoScanBuilder(declared: StructType, dataDir: String,
 class GraftMongoScan(required: StructType, dataDir: String,
     pushed: Array[Filter], bounds: Option[(Long, Long)],
     allowEmpty: Boolean = false)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftMongoScan(weatherny, cols=[${required.fieldNames.mkString(",")}]" +
       s", pushed=[${pushed.mkString(",")}])"
-  override def planInputPartitions(): Array[InputPartition] = {
-    // resolve the snapshot pointer ONCE here (versioned collections);
-    // the read then touches only immutable shard files
-    val shards = GraftMongoIO.shardFiles(dataDir)
-      .map(_.getAbsolutePath).sorted
+
+  // resolve the snapshot pointer ONCE per scan (versioned collections);
+  // the read then touches only immutable shard files
+  private lazy val shards: Array[java.io.File] = {
+    val fs = GraftMongoIO.shardFiles(dataDir).sortBy(_.getAbsolutePath)
     // a freshly CREATEd (writable) collection is legitimately empty;
     // an empty path for the demo collection means a misconfigured root
-    require(allowEmpty || shards.nonEmpty,
-      s"empty document store at $dataDir")
-    shards.map(GraftMongoInputPartition)
+    require(allowEmpty || fs.nonEmpty, s"empty document store at $dataDir")
+    fs
+  }
+  private lazy val totalBytes = shards.map(_.length).sum
+
+  /** The shard files' total bytes: what a full read opens. */
+  override def estimateStatistics(): Statistics =
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(totalBytes)
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+    }
+
+  /** One partition per shard file, unless the whole collection costs
+    * no more than opening one file (`spark.sql.files.openCostInBytes`,
+    * the file sources' own packing unit): then one partition reads
+    * every shard, and the planner can treat the scan as a single
+    * partition. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val paths = shards.map(_.getAbsolutePath).toSeq
+    if (paths.length > 1 && totalBytes <= SQLConf.get.filesOpenCostInBytes)
+      Array(GraftMongoInputPartition(paths))
+    else paths.map(p => GraftMongoInputPartition(Seq(p))).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftMongoReaderFactory(required, bounds)
 }
 
-case class GraftMongoInputPartition(path: String) extends InputPartition
+case class GraftMongoInputPartition(paths: Seq[String]) extends InputPartition
 
 class GraftMongoReaderFactory(required: StructType,
     bounds: Option[(Long, Long)]) extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = partition.asInstanceOf[GraftMongoInputPartition].path
-    // per-file dispatch: connector-written shards are columnar
-    // parquet; the pre-seeded demo fixture (and any externally staged
-    // wire dump) is extended-JSON text
-    if (path.endsWith(".parquet"))
-      new GraftMongoParquetReader(path, required, bounds)
-    else new GraftMongoPartitionReader(path, required, bounds)
+      partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftMongoShardsReader(
+      partition.asInstanceOf[GraftMongoInputPartition].paths, path =>
+        // per-file dispatch: connector-written shards are columnar
+        // parquet; the pre-seeded demo fixture (and any externally
+        // staged wire dump) is extended-JSON text
+        if (path.endsWith(".parquet"))
+          new GraftMongoParquetReader(path, required, bounds)
+        else new GraftMongoPartitionReader(path, required, bounds))
+}
+
+/** Reads a partition's shard files one after another, opening each
+  * only when the previous one is exhausted. */
+class GraftMongoShardsReader(paths: Seq[String],
+    open: String => PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private val rest = paths.iterator
+  private var cur: PartitionReader[InternalRow] = _
+
+  override def next(): Boolean = {
+    while (cur == null || !cur.next()) {
+      close()
+      cur = null
+      if (!rest.hasNext) return false
+      cur = open(rest.next())
+    }
+    true
   }
+  override def get(): InternalRow = cur.get()
+  override def close(): Unit = if (cur != null) cur.close()
 }
 
 /** Spec observability for the columnar collection reads (same role as

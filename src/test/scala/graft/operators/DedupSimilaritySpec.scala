@@ -622,6 +622,20 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("CC: an edge with a NULL endpoint joins nothing on either path") {
+    // (3, NULL) is no edge: the dense path's d1 =!= d2 drops it, and
+    // the sparse union-find must too, neither failing on the NULL nor
+    // reading it as vertex 0 (which would merge 3 into {0, 7})
+    val edges = Seq[(Long, Option[Long])](
+      (1L, Some(2L)), (0L, Some(7L)), (3L, None)).toDF("d1", "d2")
+    def labels(maxEdges: Long): Map[Long, Long] =
+      Dedup.ccFromEdges(edges, maxEdges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dense = labels(-1L)
+    assert(dense === Map(1L -> 1L, 2L -> 1L, 0L -> 0L, 7L -> 0L))
+    assert(labels(Long.MaxValue) === dense)
+  }
+
   test("CC dense (shuffle-join) path matches the sparse (broadcast) path") {
     // sparseMaxEdges = -1 forces every round onto the dense path: plain
     // shuffle hash-joins, no coalesce(1), no broadcast label table.

@@ -38,7 +38,7 @@ class MongoCatalogSpec extends SparkSpec {
   }
 
   test("documents decode: midnight-UTC $date ids, deterministic " +
-      "measures, parallel shards") {
+      "measures; a small sharded store plans as one partition") {
     Mongo.registerCatalog(spark, sf)
     val rows = spark.sql(
       """SELECT _id, pgtm, tmax, tmin
@@ -54,9 +54,21 @@ class MongoCatalogSpec extends SparkSpec {
       }
       assert(r.getDouble(1) > 0) // every day has events
     }
-    // the store is sharded for parallel reads
+    // the store is sharded on disk, but the whole collection costs
+    // less than opening one file: one partition reads every shard
+    val shards = GraftMongoIO.shardFiles(new java.io.File(
+      spark.conf.get("spark.sql.catalog.graft_mongo.path"),
+      "weatherny").getPath)
+    assert(shards.length > 1)
     assert(spark.table("graft_mongo.weather.weatherny")
-      .rdd.getNumPartitions > 1)
+      .rdd.getNumPartitions === 1)
+    // below the collection's size, each shard is its own partition
+    val small = spark.newSession()
+    Mongo.registerCatalog(small, sf)
+    small.conf.set("spark.sql.files.openCostInBytes",
+      (shards.map(_.length).sum - 1).toString)
+    assert(small.table("graft_mongo.weather.weatherny")
+      .rdd.getNumPartitions === shards.length)
   }
 
   test("_id range predicates push into the scan with no residual " +
