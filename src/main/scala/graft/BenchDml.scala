@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** DML-path micro-bench: copy-on-write vs merge-on-read row-level
   * operations, and append-commit cost vs table size (the multi-part
   * O(new data) claim). Prints one JSON line per measurement —
@@ -15,16 +13,7 @@ object BenchDml {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConf.foreach { case (k, v) =>
-      builder.config(k, v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Tables.session(logLevel = "WARN")
     graft.sources.Lake.registerCatalog(spark)
 
     def time[A](f: => A): (A, Double) = {

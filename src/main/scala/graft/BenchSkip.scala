@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.GraftLakeScanMetrics
 
 /** Skip-layer micro-bench: quantifies what each pruning layer —
@@ -18,16 +16,7 @@ object BenchSkip {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConf.foreach { case (k, v) =>
-      builder.config(k, v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Tables.session(logLevel = "WARN")
     graft.sources.Lake.registerCatalog(spark)
 
     def timeMed(f: => Long): (Long, Double) = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: dump the executed plan of one or more registered queries
   * into `<outDir>/<query>_<tag>.txt` in one JVM, so the fixtures warm
   * up once. Used to capture the before/after plan evidence committed
@@ -22,15 +20,7 @@ object PlanSnap {
       case given => given
     }
     java.nio.file.Files.createDirectories(outDir)
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConf.foreach { case (k, v) =>
-      builder.config(k, v)
-    }
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.sources.Tables.session()
     names.foreach { name =>
       val out = outDir.resolve(s"${name}_$tag.txt")
       try {

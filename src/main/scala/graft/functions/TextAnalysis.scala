@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.t
 
 /** Text-analysis operators for the training-data pipeline over `documents`
@@ -2203,93 +2203,49 @@ object TextAnalysis {
          CAST(count(*) - sum(keep) AS BIGINT) AS n_removed
        FROM flagged GROUP BY doc_id ORDER BY doc_id"""
 
-  val queries: Map[String, Q] = Map(
-    "text_boilerplate_lines" -> boilerplateLines,
-    "doc_chunk_overlap" -> docChunkOverlap,
-    "corpus_split_assign" -> corpusSplitAssign,
-    "corpus_split_grouped" -> corpusSplitGrouped,
-    "corpus_length_buckets" -> corpusLengthBuckets,
-    "corpus_mix_temperature" -> corpusMixTemperature,
-    "corpus_global_shuffle" -> corpusShuffle,
-    "corpus_budget_cap" -> corpusBudgetCap,
-    "text_char_entropy" -> charEntropy,
-    "text_repetition" -> repetitionStats,
-    "text_tfidf_topk" -> tfidfTopK,
-    "text_bm25_topk" -> bm25TopK,
-    "quality_top_percent" -> qualityTopPercent,
-    "pipeline_corpus_prep" -> pipelineCorpusPrep,
-    "pack_sequences" -> packSequences,
-    "decontam_overlap" -> decontamOverlap,
-    "decontam_bloom" -> decontamBloom,
-    "corpus_mix_weighted" -> mixWeighted,
-    "text_cm_frequency" -> cmFrequency,
-    "text_frequent_tokens" -> frequentTokens,
-    "text_heavy_hitters" -> heavyHittersPerLang,
-    "text_trigram_counts" -> trigramCounts,
-    "text_bpe_merge_step" -> bpeMergeStep,
-    "text_bpe_train_k" -> bpeTrainK,
-    "text_bpe_encode_docs" -> bpeEncodeDocs,
-    "text_unigram_train" -> unigramTrain,
-    "text_unigram_encode_docs" -> unigramEncodeDocs,
-    "text_bigram_pmi" -> bigramPmi,
-    "text_rank_keywords" -> textRankKeywords,
-    "text_lm_perplexity" -> lmPerplexity,
-    "corpus_sample_bottomk" -> sampleBottomK,
-    "corpus_sample_stratified" -> sampleStratified,
-    "corpus_sample_weighted" -> sampleWeighted,
-    "dedup_normalized" -> dedupNormalized,
-    "text_scrub" -> textScrub,
-    "doc_length_histogram" -> docLengthHistogram,
-    "text_token_count" -> tokenCount,
-    "corpus_pack_sequences" -> corpusPackSequences,
-    "text_pii_redact" -> piiRedact,
-    "text_quality_score" -> qualityScore,
-    "text_quality_classifier" -> qualityClassifier,
-    "text_lang_id" -> langId,
-    "text_fingerprint" -> fingerprint)
-
-  val oracles: Map[String, String] = Map(
-    "text_boilerplate_lines" -> boilerplateLinesOracle,
-    "doc_chunk_overlap" -> docChunkOverlapOracle,
-    "corpus_split_assign" -> corpusSplitAssignOracle,
-    "corpus_split_grouped" -> corpusSplitGroupedOracle,
-    "corpus_length_buckets" -> corpusLengthBucketsOracle,
-    "corpus_mix_temperature" -> corpusMixTemperatureOracle,
-    "corpus_global_shuffle" -> corpusShuffleOracle,
-    "corpus_budget_cap" -> corpusBudgetCapOracle,
-    "text_char_entropy" -> charEntropyOracle,
-    "text_repetition" -> repetitionStatsOracle,
-    "text_tfidf_topk" -> tfidfTopKOracle,
-    "text_bm25_topk" -> bm25TopKOracle,
-    "quality_top_percent" -> qualityTopPercentOracle,
-    "pipeline_corpus_prep" -> pipelineCorpusPrepOracle,
-    "pack_sequences" -> packSequencesOracle,
-    "decontam_overlap" -> decontamOverlapOracle,
-    "decontam_bloom" -> decontamBloomOracle,
-    "corpus_mix_weighted" -> mixWeightedOracle,
-    "text_cm_frequency" -> cmFrequencyOracle,
-    "text_frequent_tokens" -> frequentTokensOracle,
-    "text_heavy_hitters" -> heavyHittersPerLangOracle,
-    "text_trigram_counts" -> trigramCountsOracle,
-    "text_bpe_merge_step" -> bpeMergeStepOracle,
-    "text_bpe_train_k" -> bpeTrainKOracle,
-    "text_bpe_encode_docs" -> bpeEncodeDocsOracle,
-    "text_unigram_train" -> unigramTrainOracle,
-    "text_unigram_encode_docs" -> unigramEncodeDocsOracle,
-    "text_bigram_pmi" -> bigramPmiOracle,
-    "text_rank_keywords" -> textRankKeywordsOracle,
-    "text_lm_perplexity" -> lmPerplexityOracle,
-    "corpus_sample_bottomk" -> sampleBottomKOracle,
-    "corpus_sample_stratified" -> sampleStratifiedOracle,
-    "corpus_sample_weighted" -> sampleWeightedOracle,
-    "dedup_normalized" -> dedupNormalizedOracle,
-    "text_scrub" -> textScrubOracle,
-    "doc_length_histogram" -> docLengthHistogramOracle,
-    "text_token_count" -> tokenCountOracle,
-    "corpus_pack_sequences" -> corpusPackSequencesOracle,
-    "text_pii_redact" -> piiRedactOracle,
-    "text_quality_score" -> qualityScoreOracle,
-    "text_quality_classifier" -> qualityClassifierOracle,
-    "text_lang_id" -> langIdOracle,
-    "text_fingerprint" -> fingerprintOracle)
+  val ops: Seq[Op] = Seq(
+    Op("text_boilerplate_lines", boilerplateLines, boilerplateLinesOracle),
+    Op("doc_chunk_overlap", docChunkOverlap, docChunkOverlapOracle),
+    Op("corpus_split_assign", corpusSplitAssign, corpusSplitAssignOracle),
+    Op("corpus_split_grouped", corpusSplitGrouped, corpusSplitGroupedOracle),
+    Op("corpus_length_buckets", corpusLengthBuckets, corpusLengthBucketsOracle),
+    Op("corpus_mix_temperature", corpusMixTemperature,
+      corpusMixTemperatureOracle),
+    Op("corpus_global_shuffle", corpusShuffle, corpusShuffleOracle),
+    Op("corpus_budget_cap", corpusBudgetCap, corpusBudgetCapOracle),
+    Op("text_char_entropy", charEntropy, charEntropyOracle),
+    Op("text_repetition", repetitionStats, repetitionStatsOracle),
+    Op("text_tfidf_topk", tfidfTopK, tfidfTopKOracle),
+    Op("text_bm25_topk", bm25TopK, bm25TopKOracle),
+    Op("quality_top_percent", qualityTopPercent, qualityTopPercentOracle),
+    Op("pipeline_corpus_prep", pipelineCorpusPrep, pipelineCorpusPrepOracle),
+    Op("pack_sequences", packSequences, packSequencesOracle),
+    Op("decontam_overlap", decontamOverlap, decontamOverlapOracle),
+    Op("decontam_bloom", decontamBloom, decontamBloomOracle),
+    Op("corpus_mix_weighted", mixWeighted, mixWeightedOracle),
+    Op("text_cm_frequency", cmFrequency, cmFrequencyOracle),
+    Op("text_frequent_tokens", frequentTokens, frequentTokensOracle),
+    Op("text_heavy_hitters", heavyHittersPerLang, heavyHittersPerLangOracle),
+    Op("text_trigram_counts", trigramCounts, trigramCountsOracle),
+    Op("text_bpe_merge_step", bpeMergeStep, bpeMergeStepOracle),
+    Op("text_bpe_train_k", bpeTrainK, bpeTrainKOracle),
+    Op("text_bpe_encode_docs", bpeEncodeDocs, bpeEncodeDocsOracle),
+    Op("text_unigram_train", unigramTrain, unigramTrainOracle),
+    Op("text_unigram_encode_docs", unigramEncodeDocs, unigramEncodeDocsOracle),
+    Op("text_bigram_pmi", bigramPmi, bigramPmiOracle),
+    Op("text_rank_keywords", textRankKeywords, textRankKeywordsOracle),
+    Op("text_lm_perplexity", lmPerplexity, lmPerplexityOracle),
+    Op("corpus_sample_bottomk", sampleBottomK, sampleBottomKOracle),
+    Op("corpus_sample_stratified", sampleStratified, sampleStratifiedOracle),
+    Op("corpus_sample_weighted", sampleWeighted, sampleWeightedOracle),
+    Op("dedup_normalized", dedupNormalized, dedupNormalizedOracle),
+    Op("text_scrub", textScrub, textScrubOracle),
+    Op("doc_length_histogram", docLengthHistogram, docLengthHistogramOracle),
+    Op("text_token_count", tokenCount, tokenCountOracle),
+    Op("corpus_pack_sequences", corpusPackSequences, corpusPackSequencesOracle),
+    Op("text_pii_redact", piiRedact, piiRedactOracle),
+    Op("text_quality_score", qualityScore, qualityScoreOracle),
+    Op("text_quality_classifier", qualityClassifier, qualityClassifierOracle),
+    Op("text_lang_id", langId, langIdOracle),
+    Op("text_fingerprint", fingerprint, fingerprintOracle))
 }

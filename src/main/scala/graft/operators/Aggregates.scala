@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.{t, events, dsum, davg}
 
 /** Aggregations, distinct/dedup, statistics and window functions
@@ -1142,64 +1142,29 @@ object Aggregates {
        FROM events e JOIN m USING (event_type)
        ORDER BY event_id"""
 
-  val queries: Map[String, Q] = Map(
-    "anomaly_zscore" -> anomalyZscore,
-    "anomaly_mad" -> anomalyMad,
-    "scale_winsorize" -> scaleWinsorize,
-    "funnel_conversion" -> funnelConversion,
-    "pipeline_train_prep" -> pipelineTrainPrep,
-    "approx_distinct_kmv" -> kmvDistinct,
-    "bitmap_exact_distinct" -> bitmapExactDistinct,
-    "bitmap_partial_union" -> bitmapPartialUnion,
-    "bitmap_exact_distinct64" -> bitmapExactDistinct64,
-    "bitmap_partial_union64" -> bitmapPartialUnion64,
-    "bitmap_audience_overlap" -> bitmapAudienceOverlap,
-    "bitmap_audience_overlap_pruned" -> bitmapAudienceOverlapPruned,
-    "retention_cohorts" -> retentionCohorts,
-    "retention_cohorts_sharded" -> retentionCohortsSharded,
-    "churn_daily" -> churnDaily,
-    "churn_daily_sharded" -> churnDailySharded,
-    "groupby_agg" -> groupbyAgg,
-    "group_count_distinct" -> groupCountDistinct,
-    "rollup_agg" -> rollupAgg,
-    "rollup_grouping_id" -> rollupGroupingId,
-    "cube_agg" -> cubeAgg,
-    "distinct_rows" -> distinctRows,
-    "dedup_latest_by_key" -> dedupLatestByKey,
-    "agg_minmax_global" -> aggMinmaxGlobal,
-    "quantiles" -> quantiles,
-    "quantile_hist_sketch" -> quantileHistSketch,
-    "quantile_hist_auto" -> quantileHistAuto,
-    "corr_matrix" -> corrMatrix,
-    "approx_count_distinct" -> approxCountDistinct,
-    "window_rank_lag_lead" -> windowRankLagLead,
-    "window_rolling_sum" -> windowRollingSum,
-    "window_rolling_median" -> windowRollingMedian,
-    "window_ewma" -> windowEwma,
-    "agg_mode" -> aggMode,
-    "seq_window_arrays" -> seqWindowArrays,
-    "scale_minmax" -> scaleMinmax,
-    "scale_robust" -> scaleRobust,
-    "count_rows" -> countRows)
-
-  val oracles: Map[String, String] = Map(
-    "anomaly_zscore" -> anomalyZscoreOracle,
-    "anomaly_mad" -> anomalyMadOracle,
-    "scale_winsorize" -> scaleWinsorizeOracle,
-    "funnel_conversion" -> funnelConversionOracle,
-    "pipeline_train_prep" -> pipelineTrainPrepOracle,
-    "approx_distinct_kmv" -> kmvDistinctOracle,
-    "bitmap_exact_distinct" -> bitmapExactDistinctOracle,
-    "bitmap_partial_union" -> bitmapPartialUnionOracle,
-    "bitmap_exact_distinct64" -> bitmapExactDistinct64Oracle,
-    "bitmap_partial_union64" -> bitmapPartialUnion64Oracle,
-    "bitmap_audience_overlap" -> bitmapAudienceOverlapOracle,
-    "bitmap_audience_overlap_pruned" -> bitmapAudienceOverlapPrunedOracle,
-    "retention_cohorts" -> retentionCohortsOracle,
-    "retention_cohorts_sharded" -> retentionCohortsOracle,
-    "churn_daily" -> churnDailyOracle,
-    "churn_daily_sharded" -> churnDailyOracle,
-    "groupby_agg" ->
+  val ops: Seq[Op] = Seq(
+    Op("anomaly_zscore", anomalyZscore, anomalyZscoreOracle),
+    Op("anomaly_mad", anomalyMad, anomalyMadOracle),
+    Op("scale_winsorize", scaleWinsorize, scaleWinsorizeOracle),
+    Op("funnel_conversion", funnelConversion, funnelConversionOracle),
+    Op("pipeline_train_prep", pipelineTrainPrep, pipelineTrainPrepOracle),
+    Op("approx_distinct_kmv", kmvDistinct, kmvDistinctOracle),
+    Op("bitmap_exact_distinct", bitmapExactDistinct, bitmapExactDistinctOracle),
+    Op("bitmap_partial_union", bitmapPartialUnion, bitmapPartialUnionOracle),
+    Op("bitmap_exact_distinct64", bitmapExactDistinct64,
+      bitmapExactDistinct64Oracle),
+    Op("bitmap_partial_union64", bitmapPartialUnion64,
+      bitmapPartialUnion64Oracle),
+    Op("bitmap_audience_overlap", bitmapAudienceOverlap,
+      bitmapAudienceOverlapOracle),
+    Op("bitmap_audience_overlap_pruned", bitmapAudienceOverlapPruned,
+      bitmapAudienceOverlapPrunedOracle),
+    Op("retention_cohorts", retentionCohorts, retentionCohortsOracle),
+    Op("retention_cohorts_sharded", retentionCohortsSharded,
+      retentionCohortsOracle),
+    Op("churn_daily", churnDaily, churnDailyOracle),
+    Op("churn_daily_sharded", churnDailySharded, churnDailyOracle),
+    Op("groupby_agg", groupbyAgg,
       """SELECT l_returnflag, l_linestatus,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -1215,55 +1180,56 @@ object Aggregates {
          FROM lineitem
          WHERE l_shipdate <= TIMESTAMP '2001-09-01'
          GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "group_count_distinct" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Op("group_count_distinct", groupCountDistinct,
       """SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_customers,
          count(*) AS n_orders
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "rollup_grouping_id" -> rollupGroupingIdOracle,
-    "rollup_agg" ->
+         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    Op("rollup_agg", rollupAgg,
       """SELECT l_returnflag, l_linestatus,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
          count(*) AS n
          FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "cube_agg" ->
+         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
+    Op("rollup_grouping_id", rollupGroupingId, rollupGroupingIdOracle),
+    Op("cube_agg", cubeAgg,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_price
          FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
          ORDER BY o_orderstatus ASC NULLS FIRST,
-                  o_orderpriority ASC NULLS FIRST""",
-    "distinct_rows" ->
+                  o_orderpriority ASC NULLS FIRST"""),
+    Op("distinct_rows", distinctRows,
       """SELECT DISTINCT user_id, event_type FROM events
-         ORDER BY user_id, event_type""",
-    "dedup_latest_by_key" ->
+         ORDER BY user_id, event_type"""),
+    Op("dedup_latest_by_key", dedupLatestByKey,
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
                 event_type, value
          FROM events
          QUALIFY row_number() OVER (PARTITION BY user_id
            ORDER BY ts DESC, event_id DESC) = 1
-         ORDER BY user_id""",
-    "agg_minmax_global" ->
+         ORDER BY user_id"""),
+    Op("agg_minmax_global", aggMinmaxGlobal,
       """SELECT min(l_extendedprice) AS min_price,
          max(l_extendedprice) AS max_price,
          min(l_shipdate) AS min_ship, max(l_shipdate) AS max_ship,
-         count(*) AS n FROM lineitem""",
-    "quantiles" ->
+         count(*) AS n FROM lineitem"""),
+    Op("quantiles", quantiles,
       """SELECT event_type,
          round(quantile_cont(value, 0.25), 6) AS q25,
          round(quantile_cont(value, 0.5), 6) AS median,
          round(quantile_cont(value, 0.75), 6) AS q75
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "quantile_hist_sketch" -> quantileHistSketchOracle,
-    "quantile_hist_auto" -> quantileHistAutoOracle,
-    "corr_matrix" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Op("quantile_hist_sketch", quantileHistSketch, quantileHistSketchOracle),
+    Op("quantile_hist_auto", quantileHistAuto, quantileHistAutoOracle),
+    Op("corr_matrix", corrMatrix,
       """SELECT round(corr(l_quantity, l_extendedprice), 6)
            AS corr_qty_price,
          round(corr(l_quantity, l_discount), 6) AS corr_qty_disc,
          round(corr(l_extendedprice, l_discount), 6) AS corr_price_disc
-         FROM lineitem""",
-    "window_rank_lag_lead" ->
+         FROM lineitem"""),
+    Op.unchecked("approx_count_distinct", approxCountDistinct),
+    Op("window_rank_lag_lead", windowRankLagLead,
       """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
          row_number() OVER w AS rn,
          rank() OVER wv AS value_rank,
@@ -1273,8 +1239,8 @@ object Aggregates {
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC),
            wv AS (PARTITION BY user_id ORDER BY value DESC, event_id ASC)
-         ORDER BY event_id""",
-    "window_rolling_sum" ->
+         ORDER BY event_id"""),
+    Op("window_rolling_sum", windowRollingSum,
       """SELECT event_id, user_id, value,
          CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
            AS rolling_sum,
@@ -1282,11 +1248,11 @@ object Aggregates {
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
            ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-    "window_rolling_median" -> windowRollingMedianOracle,
-    "window_ewma" -> windowEwmaOracle,
-    "agg_mode" -> aggModeOracle,
-    "seq_window_arrays" ->
+         ORDER BY event_id"""),
+    Op("window_rolling_median", windowRollingMedian, windowRollingMedianOracle),
+    Op("window_ewma", windowEwma, windowEwmaOracle),
+    Op("agg_mode", aggMode, aggModeOracle),
+    Op("seq_window_arrays", seqWindowArrays,
       """SELECT event_id, user_id,
            array_to_string(list_transform(seq_arr,
              x -> CAST(CAST(round(x * 1000000) AS BIGINT) AS VARCHAR)), ',')
@@ -1297,14 +1263,14 @@ object Aggregates {
            FROM events
            WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
              ROWS BETWEEN 9 PRECEDING AND CURRENT ROW))
-         WHERE seq_len = 10 ORDER BY event_id""",
-    "scale_minmax" ->
+         WHERE seq_len = 10 ORDER BY event_id"""),
+    Op("scale_minmax", scaleMinmax,
       """SELECT event_id, event_type, value,
          (value - min(value) OVER w) /
            (max(value) OVER w - min(value) OVER w) AS value_scaled
          FROM events WINDOW w AS (PARTITION BY event_type)
-         ORDER BY event_id""",
-    "scale_robust" ->
+         ORDER BY event_id"""),
+    Op("scale_robust", scaleRobust,
       """WITH s AS (
            SELECT event_type, quantile_cont(value, 0.5) AS med,
              quantile_cont(value, 0.25) AS q1,
@@ -1313,11 +1279,11 @@ object Aggregates {
          SELECT e.event_id, e.event_type, e.value,
            round((e.value - s.med) / (s.q3 - s.q1), 6) AS value_scaled
          FROM events e JOIN s USING (event_type)
-         ORDER BY event_id""",
-    "count_rows" ->
+         ORDER BY event_id"""),
+    Op("count_rows", countRows,
       """SELECT tbl, n FROM (
            SELECT 'lineitem' AS tbl, count(*) AS n FROM lineitem
            UNION ALL SELECT 'orders', count(*) FROM orders
            UNION ALL SELECT 'customer', count(*) FROM customer)
-         ORDER BY tbl""")
+         ORDER BY tbl"""))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Memo
 import graft.sources.Tables.{t, events}
 
@@ -1805,123 +1805,66 @@ object Coverage {
            AS BIGINT) AS p_micro
        FROM counts ORDER BY from_type, to_type"""
 
-  val queries: Map[String, Q] = Map(
-    "funnel_windowed" -> funnelWindowed,
-    "dq_constraint_report" -> dqConstraintReport,
-    "event_transitions" -> eventTransitions,
-    "meta_show_catalogs" -> metaShowCatalogs,
-    "meta_view_roundtrip" -> metaViewRoundtrip,
-    "decimal_halfup_overflow" -> decimalHalfUp,
-    "profile_column_stats" -> profileColumnStats,
-    "window_fill_forward" -> windowFillForward,
-    "join_theta_bnl" -> joinThetaBnl,
-    "sql_recursive_cte" -> recursiveCte,
-    "sql_parameterized" -> sqlParameterized,
-    "meta_analyze_stats" -> metaAnalyzeStats,
-    "cbo_stats_join" -> cboStatsJoin,
-    "subquery_not_in_null" -> subqueryNotInNull,
-    "join_lateral_topk" -> lateralJoin,
-    "try_funcs_ansi" -> tryFuncsAnsi,
-    "join_dpp_prune" -> joinDppPrune,
-    "topk_per_group" -> topkPerGroup,
-    "join_runtime_bloom" -> joinRuntimeBloom,
-    "orc_ingest" -> orcIngest,
-    "json_ingest" -> jsonIngest,
-    "avro_ingest" -> avroIngest,
-    "xml_ingest" -> xmlIngest,
-    "variant_extract" -> variantExtract,
-    "sql_udf_banding" -> sqlUdfBanding,
-    "unpivot_measures" -> unpivotMeasures,
-    "window_distinct_count" -> windowDistinctCount,
-    "window_rank_ratios" -> windowRankRatios,
-    "partitioned_write_prune" -> partitionedWritePrune,
-    "maintenance_compact_files" -> maintenanceCompactFiles,
-    "window_ntile" -> windowNtile,
-    "join_null_safe" -> joinNullSafe,
-    "incremental_agg_merge" -> incrementalAggMerge,
-    "maintenance_zorder_key" -> maintenanceZorderKey,
-    "string_pad_split" -> stringPadSplit,
-    "bitwise_nullsafe" -> bitwiseNullsafe,
-    "window_value_funcs" -> windowValueFuncs,
-    "conditional_agg" -> conditionalAgg,
-    "scalar_date_arith" -> scalarDateArith,
-    "posexplode_tokens" -> posexplodeTokens,
-    "min_by_max_by" -> minByMaxBy,
-    "string_agg_sorted" -> stringAggSorted,
-    "join_range_banded" -> joinRangeBanded,
-    "session_window_agg" -> sessionWindowAgg,
-    "join_salted" -> joinSalted,
-    "join_bucketed" -> joinBucketed,
-    "pivot_event_counts" -> pivotEventCounts,
-    "having_filter" -> havingFilter,
-    "scalar_subquery" -> scalarSubquery,
-    "csv_ingest" -> csvIngest,
-    "grouping_sets_agg" -> groupingSets,
-    "window_range_frame" -> windowRangeFrame,
-    "array_funcs" -> arrayFuncs,
-    "events_time_bounded" -> eventsTimeBounded,
-    "map_funcs" -> mapFuncs,
-    "subquery_exists" -> subqueryExists,
-    "meta_create_insert" -> metaCreateInsert,
-    "meta_show_tables" -> metaShowTables)
-
-  val oracles: Map[String, String] = Map(
-    "funnel_windowed" -> funnelWindowedOracle,
-    "dq_constraint_report" -> dqConstraintReportOracle,
-    "event_transitions" -> eventTransitionsOracle,
-    "meta_show_catalogs" -> metaShowCatalogsOracle,
-    "meta_view_roundtrip" -> metaViewRoundtripOracle,
-    "decimal_halfup_overflow" -> decimalHalfUpOracle,
-    "profile_column_stats" -> profileColumnStatsOracle,
-    "window_fill_forward" -> windowFillForwardOracle,
-    "join_theta_bnl" -> joinThetaBnlOracle,
-    "sql_recursive_cte" -> recursiveCteOracle,
-    "sql_parameterized" -> sqlParameterizedOracle,
-    "meta_analyze_stats" -> metaAnalyzeStatsOracle,
-    "cbo_stats_join" -> cboStatsJoinOracle,
-    "subquery_not_in_null" -> subqueryNotInNullOracle,
-    "join_lateral_topk" -> lateralJoinOracle,
-    "try_funcs_ansi" -> tryFuncsAnsiOracle,
-    "join_dpp_prune" -> joinDppPruneOracle,
-    "topk_per_group" -> topkPerGroupOracle,
-    "join_runtime_bloom" -> joinRuntimeBloomOracle,
-    "orc_ingest" -> orcIngestOracle,
-    "json_ingest" -> jsonIngestOracle,
-    "avro_ingest" -> avroIngestOracle,
-    "xml_ingest" -> xmlIngestOracle,
-    "variant_extract" -> variantExtractOracle,
-    "sql_udf_banding" -> sqlUdfBandingOracle,
-    "unpivot_measures" -> unpivotMeasuresOracle,
-    "window_distinct_count" -> windowDistinctCountOracle,
-    "window_rank_ratios" -> windowRankRatiosOracle,
-    "partitioned_write_prune" -> partitionedWritePruneOracle,
-    "maintenance_compact_files" -> maintenanceCompactFilesOracle,
-    "window_ntile" -> windowNtileOracle,
-    "join_null_safe" -> joinNullSafeOracle,
-    "incremental_agg_merge" -> incrementalAggMergeOracle,
-    "maintenance_zorder_key" -> maintenanceZorderKeyOracle,
-    "string_pad_split" -> stringPadSplitOracle,
-    "bitwise_nullsafe" -> bitwiseNullsafeOracle,
-    "window_value_funcs" -> windowValueFuncsOracle,
-    "conditional_agg" -> conditionalAggOracle,
-    "scalar_date_arith" -> scalarDateArithOracle,
-    "posexplode_tokens" -> posexplodeTokensOracle,
-    "min_by_max_by" -> minByMaxByOracle,
-    "string_agg_sorted" -> stringAggSortedOracle,
-    "join_range_banded" -> joinRangeBandedOracle,
-    "session_window_agg" -> sessionWindowAggOracle,
-    "join_salted" -> joinSaltedOracle,
-    "join_bucketed" -> joinBucketedOracle,
-    "pivot_event_counts" -> pivotEventCountsOracle,
-    "having_filter" -> havingFilterOracle,
-    "scalar_subquery" -> scalarSubqueryOracle,
-    "csv_ingest" -> csvIngestOracle,
-    "grouping_sets_agg" -> groupingSetsOracle,
-    "window_range_frame" -> windowRangeFrameOracle,
-    "array_funcs" -> arrayFuncsOracle,
-    "events_time_bounded" -> eventsTimeBoundedOracle,
-    "map_funcs" -> mapFuncsOracle,
-    "subquery_exists" -> subqueryExistsOracle,
-    "meta_create_insert" -> metaCreateInsertOracle,
-    "meta_show_tables" -> metaShowTablesOracle)
+  val ops: Seq[Op] = Seq(
+    Op("funnel_windowed", funnelWindowed, funnelWindowedOracle),
+    Op("dq_constraint_report", dqConstraintReport, dqConstraintReportOracle),
+    Op("event_transitions", eventTransitions, eventTransitionsOracle),
+    Op("meta_show_catalogs", metaShowCatalogs, metaShowCatalogsOracle),
+    Op("meta_view_roundtrip", metaViewRoundtrip, metaViewRoundtripOracle),
+    Op("decimal_halfup_overflow", decimalHalfUp, decimalHalfUpOracle),
+    Op("profile_column_stats", profileColumnStats, profileColumnStatsOracle),
+    Op("window_fill_forward", windowFillForward, windowFillForwardOracle),
+    Op("join_theta_bnl", joinThetaBnl, joinThetaBnlOracle),
+    Op("sql_recursive_cte", recursiveCte, recursiveCteOracle),
+    Op("sql_parameterized", sqlParameterized, sqlParameterizedOracle),
+    Op("meta_analyze_stats", metaAnalyzeStats, metaAnalyzeStatsOracle),
+    Op("cbo_stats_join", cboStatsJoin, cboStatsJoinOracle),
+    Op("subquery_not_in_null", subqueryNotInNull, subqueryNotInNullOracle),
+    Op("join_lateral_topk", lateralJoin, lateralJoinOracle),
+    Op("try_funcs_ansi", tryFuncsAnsi, tryFuncsAnsiOracle),
+    Op("join_dpp_prune", joinDppPrune, joinDppPruneOracle),
+    Op("topk_per_group", topkPerGroup, topkPerGroupOracle),
+    Op("join_runtime_bloom", joinRuntimeBloom, joinRuntimeBloomOracle),
+    Op("orc_ingest", orcIngest, orcIngestOracle),
+    Op("json_ingest", jsonIngest, jsonIngestOracle),
+    Op("avro_ingest", avroIngest, avroIngestOracle),
+    Op("xml_ingest", xmlIngest, xmlIngestOracle),
+    Op("variant_extract", variantExtract, variantExtractOracle),
+    Op("sql_udf_banding", sqlUdfBanding, sqlUdfBandingOracle),
+    Op("unpivot_measures", unpivotMeasures, unpivotMeasuresOracle),
+    Op("window_distinct_count", windowDistinctCount, windowDistinctCountOracle),
+    Op("window_rank_ratios", windowRankRatios, windowRankRatiosOracle),
+    Op("partitioned_write_prune", partitionedWritePrune,
+      partitionedWritePruneOracle),
+    Op("maintenance_compact_files", maintenanceCompactFiles,
+      maintenanceCompactFilesOracle),
+    Op("window_ntile", windowNtile, windowNtileOracle),
+    Op("join_null_safe", joinNullSafe, joinNullSafeOracle),
+    Op("incremental_agg_merge", incrementalAggMerge, incrementalAggMergeOracle),
+    Op("maintenance_zorder_key", maintenanceZorderKey,
+      maintenanceZorderKeyOracle),
+    Op("string_pad_split", stringPadSplit, stringPadSplitOracle),
+    Op("bitwise_nullsafe", bitwiseNullsafe, bitwiseNullsafeOracle),
+    Op("window_value_funcs", windowValueFuncs, windowValueFuncsOracle),
+    Op("conditional_agg", conditionalAgg, conditionalAggOracle),
+    Op("scalar_date_arith", scalarDateArith, scalarDateArithOracle),
+    Op("posexplode_tokens", posexplodeTokens, posexplodeTokensOracle),
+    Op("min_by_max_by", minByMaxBy, minByMaxByOracle),
+    Op("string_agg_sorted", stringAggSorted, stringAggSortedOracle),
+    Op("join_range_banded", joinRangeBanded, joinRangeBandedOracle),
+    Op("session_window_agg", sessionWindowAgg, sessionWindowAggOracle),
+    Op("join_salted", joinSalted, joinSaltedOracle),
+    Op("join_bucketed", joinBucketed, joinBucketedOracle),
+    Op("pivot_event_counts", pivotEventCounts, pivotEventCountsOracle),
+    Op("having_filter", havingFilter, havingFilterOracle),
+    Op("scalar_subquery", scalarSubquery, scalarSubqueryOracle),
+    Op("csv_ingest", csvIngest, csvIngestOracle),
+    Op("grouping_sets_agg", groupingSets, groupingSetsOracle),
+    Op("window_range_frame", windowRangeFrame, windowRangeFrameOracle),
+    Op("array_funcs", arrayFuncs, arrayFuncsOracle),
+    Op("events_time_bounded", eventsTimeBounded, eventsTimeBoundedOracle),
+    Op("map_funcs", mapFuncs, mapFuncsOracle),
+    Op("subquery_exists", subqueryExists, subqueryExistsOracle),
+    Op("meta_create_insert", metaCreateInsert, metaCreateInsertOracle),
+    Op("meta_show_tables", metaShowTables, metaShowTablesOracle))
 }

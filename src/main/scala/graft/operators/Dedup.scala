@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.t
 import graft.functions.TextAnalysis.{hex60, hex60Duck}
 
@@ -1164,35 +1164,19 @@ object Dedup {
        WHERE d.doc_id >= 20
        ORDER BY d.doc_id"""
 
-  val queries: Map[String, Q] = Map(
-    "decontam_span_clean" -> decontamSpanClean,
-    "dedup_substring_spans" -> substringSpans,
-    "dedup_substring_clean" -> substringClean,
-    "dedup_lsh_recall" -> lshRecall,
-    "dedup_line_level" -> lineLevel,
-    "dedup_edit_distance" -> dedupEditDistance,
-    "dedup_clusters" -> clusters,
-    "graph_triangle_count" -> triangleCount,
-    "dedup_exact" -> exact,
-    "dedup_ngram_jaccard" -> ngramJaccard,
-    "dedup_minhash_lsh" -> minhashLsh,
-    "dedup_incremental_lsh" -> dedupIncrementalLsh,
-    "dedup_simhash" -> simhash,
-    "dedup_simhash_pairs" -> simhashPairs)
-
-  val oracles: Map[String, String] = Map(
-    "decontam_span_clean" -> decontamSpanCleanOracle,
-    "dedup_substring_spans" -> substringSpansOracle,
-    "dedup_substring_clean" -> substringCleanOracle,
-    "dedup_lsh_recall" -> lshRecallOracle,
-    "dedup_line_level" -> lineLevelOracle,
-    "dedup_edit_distance" -> dedupEditDistanceOracle,
-    "dedup_clusters" -> clustersOracle,
-    "graph_triangle_count" -> triangleCountOracle,
-    "dedup_exact" -> exactOracle,
-    "dedup_ngram_jaccard" -> ngramJaccardOracle,
-    "dedup_minhash_lsh" -> minhashLshOracle,
-    "dedup_incremental_lsh" -> dedupIncrementalLshOracle,
-    "dedup_simhash" -> simhashOracle,
-    "dedup_simhash_pairs" -> simhashPairsOracle)
+  val ops: Seq[Op] = Seq(
+    Op("decontam_span_clean", decontamSpanClean, decontamSpanCleanOracle),
+    Op("dedup_substring_spans", substringSpans, substringSpansOracle),
+    Op("dedup_substring_clean", substringClean, substringCleanOracle),
+    Op("dedup_lsh_recall", lshRecall, lshRecallOracle),
+    Op("dedup_line_level", lineLevel, lineLevelOracle),
+    Op("dedup_edit_distance", dedupEditDistance, dedupEditDistanceOracle),
+    Op("dedup_clusters", clusters, clustersOracle),
+    Op("graph_triangle_count", triangleCount, triangleCountOracle),
+    Op("dedup_exact", exact, exactOracle),
+    Op("dedup_ngram_jaccard", ngramJaccard, ngramJaccardOracle),
+    Op("dedup_minhash_lsh", minhashLsh, minhashLshOracle),
+    Op("dedup_incremental_lsh", dedupIncrementalLsh, dedupIncrementalLshOracle),
+    Op("dedup_simhash", simhash, simhashOracle),
+    Op("dedup_simhash_pairs", simhashPairs, simhashPairsOracle))
 }

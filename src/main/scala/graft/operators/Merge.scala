@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Memo.rmTree
 import graft.sources.Tables.events
 
@@ -206,11 +206,9 @@ object Merge {
       .orderBy("cohort_d", "offset_d")
   }
 
-  val queries: Map[String, Q] = Map(
-    "merge_upsert_firstseen" -> mergeUpsertFirstSeen,
-    "merge_retention_cohorts" -> mergeRetentionCohorts)
-
-  val oracles: Map[String, String] = Map(
-    "merge_upsert_firstseen" -> mergeUpsertFirstSeenOracle,
-    "merge_retention_cohorts" -> Aggregates.retentionCohortsOracle)
+  val ops: Seq[Op] = Seq(
+    Op("merge_upsert_firstseen", mergeUpsertFirstSeen,
+      mergeUpsertFirstSeenOracle),
+    Op("merge_retention_cohorts", mergeRetentionCohorts,
+      Aggregates.retentionCohortsOracle))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.t
 import graft.functions.TextAnalysis.{hex60, hex60Duck}
 
@@ -683,22 +683,13 @@ object Multimodal {
       .orderBy("kind", "codec")
   }
 
-  val queries: Map[String, Q] = Map(
-    "mm_codec_capabilities" -> mmCodecCapabilities,
-    "mm_audio_roundtrip" -> mmAudioRoundtrip,
-    "mm_embed_ann" -> mmEmbedAnn,
-    "mm_resize_real" -> mmResizeReal,
-    "mm_metadata" -> mmMetadata,
-    "mm_decode_features" -> mmDecodeFeatures,
-    "mm_codec_roundtrip" -> mmCodecRoundtrip,
-    "mm_frame_decode" -> mmFrameDecode)
-
-  val oracles: Map[String, String] = Map(
-    "mm_audio_roundtrip" -> mmAudioRoundtripOracle,
-    "mm_embed_ann" -> mmEmbedAnnOracle,
-    "mm_resize_real" -> mmResizeRealOracle,
-    "mm_metadata" -> mmMetadataOracle,
-    "mm_decode_features" -> mmDecodeFeaturesOracle,
-    "mm_codec_roundtrip" -> mmCodecRoundtripOracle,
-    "mm_frame_decode" -> mmFrameDecodeOracle)
+  val ops: Seq[Op] = Seq(
+    Op.unchecked("mm_codec_capabilities", mmCodecCapabilities),
+    Op("mm_audio_roundtrip", mmAudioRoundtrip, mmAudioRoundtripOracle),
+    Op("mm_embed_ann", mmEmbedAnn, mmEmbedAnnOracle),
+    Op("mm_resize_real", mmResizeReal, mmResizeRealOracle),
+    Op("mm_metadata", mmMetadata, mmMetadataOracle),
+    Op("mm_decode_features", mmDecodeFeatures, mmDecodeFeaturesOracle),
+    Op("mm_codec_roundtrip", mmCodecRoundtrip, mmCodecRoundtripOracle),
+    Op("mm_frame_decode", mmFrameDecode, mmFrameDecodeOracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.{t, events, dsum, davg}
 
 /** Relational core: the operator surface exercised by the reference's five
@@ -620,50 +620,8 @@ object Relational {
 
   // ------------------------------------------------------------ oracle SQL
 
-  val queries: Map[String, Q] = Map(
-    "q6_forecast_revenue" -> q6ForecastRevenue,
-    "q18_large_orders" -> q18LargeOrders,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q5_local_supplier" -> q5LocalSupplier,
-    "q7_volume_shipping" -> q7VolumeShipping,
-    "q10_returned_items" -> q10ReturnedItems,
-    "q14_promo_revenue" -> q14PromoRevenue,
-    "q19_discounted_revenue" -> q19DiscountedRevenue,
-    "q1_join_filter_sort" -> q1JoinFilterSort,
-    "scan_project" -> scanProject,
-    "select_star_limit" -> selectStarLimit,
-    "filter_date_range" -> filterDateRange,
-    "filter_in_between_like" -> filterInBetweenLike,
-    "case_when_project" -> caseWhenProject,
-    "cast_float32" -> castFloat32,
-    "scalar_string_funcs" -> scalarStringFuncs,
-    "scalar_date_funcs" -> scalarDateFuncs,
-    "scalar_math_funcs" -> scalarMathFuncs,
-    "json_extract" -> jsonExtract,
-    "join_broadcast_dims" -> joinBroadcastDims,
-    "join_left_outer" -> joinLeftOuter,
-    "join_left_outer_postfilter" -> joinLeftOuterPostfilter,
-    "join_full_outer" -> joinFullOuter,
-    "join_right_outer" -> joinRightOuter,
-    "setops_all" -> setopsAll,
-    "union_by_name" -> unionByNameEvolved,
-    "join_semi" -> joinSemi,
-    "join_anti" -> joinAnti,
-    "join_cross" -> joinCross,
-    "join_asof" -> joinAsof,
-    "join_asof_nearest" -> joinAsofNearest,
-    "na_fill" -> naFill,
-    "na_drop" -> naDrop,
-    "orderby_multi" -> orderbyMulti,
-    "top_k" -> topK,
-    "tail_k" -> tailK,
-    "union_all" -> unionAll,
-    "union_distinct" -> unionDistinct,
-    "intersect_keys" -> intersectKeys,
-    "except_keys" -> exceptKeys)
-
-  val oracles: Map[String, String] = Map(
-    "q6_forecast_revenue" ->
+  val ops: Seq[Op] = Seq(
+    Op("q6_forecast_revenue", q6ForecastRevenue,
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
            CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
          count(*) AS n_lines
@@ -671,8 +629,8 @@ object Relational {
          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
            AND l_shipdate < TIMESTAMP '1997-01-01'
            AND l_discount BETWEEN 0.02 AND 0.04
-           AND l_quantity < 25""",
-    "q18_large_orders" ->
+           AND l_quantity < 25"""),
+    Op("q18_large_orders", q18LargeOrders,
       """WITH big AS (
            SELECT l_orderkey,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
@@ -685,8 +643,8 @@ object Relational {
          FROM orders o
          JOIN big ON o.o_orderkey = big.l_orderkey
          JOIN customer c ON o.o_custkey = c.c_custkey
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20""",
-    "q3_shipping_priority" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20"""),
+    Op("q3_shipping_priority", q3ShippingPriority,
       """SELECT l.l_orderkey, o.o_orderdate,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -698,8 +656,8 @@ object Relational {
            AND o.o_orderdate < TIMESTAMP '1999-06-01'
            AND l.l_shipdate > TIMESTAMP '1999-06-01'
          GROUP BY l.l_orderkey, o.o_orderdate
-         ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""",
-    "q5_local_supplier" ->
+         ORDER BY revenue DESC, l_orderkey ASC LIMIT 10"""),
+    Op("q5_local_supplier", q5LocalSupplier,
       """SELECT n.n_name,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -715,8 +673,8 @@ object Relational {
            AND o.o_orderdate >= TIMESTAMP '1996-01-01'
            AND o.o_orderdate < TIMESTAMP '1998-01-01'
          GROUP BY n.n_name
-         ORDER BY revenue DESC, n_name ASC""",
-    "q7_volume_shipping" ->
+         ORDER BY revenue DESC, n_name ASC"""),
+    Op("q7_volume_shipping", q7VolumeShipping,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          CAST(year(l.l_shipdate) AS INT) AS l_year,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -734,8 +692,8 @@ object Relational {
            AND ((n1.n_name = 'NATION_20' AND n2.n_name = 'NATION_11') OR
                 (n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_20'))
          GROUP BY 1, 2, 3
-         ORDER BY supp_nation, cust_nation, l_year""",
-    "q10_returned_items" ->
+         ORDER BY supp_nation, cust_nation, l_year"""),
+    Op("q10_returned_items", q10ReturnedItems,
       """SELECT c.c_custkey, c.c_name, n.n_name,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -750,8 +708,8 @@ object Relational {
            AND o.o_orderdate < TIMESTAMP '1996-07-01'
          GROUP BY 1, 2, 3
          ORDER BY revenue DESC, c_custkey ASC
-         LIMIT 20""",
-    "q14_promo_revenue" ->
+         LIMIT 20"""),
+    Op("q14_promo_revenue", q14PromoRevenue,
       """WITH a AS (
          SELECT
            CAST(sum(CASE WHEN p.p_type = 'PROMO'
@@ -767,8 +725,8 @@ object Relational {
            AND l.l_shipdate < TIMESTAMP '1996-03-01')
          SELECT round(100.0 * promo_revenue / total_revenue, 6)
            AS promo_pct, promo_revenue, total_revenue
-         FROM a""",
-    "q19_discounted_revenue" ->
+         FROM a"""),
+    Op("q19_discounted_revenue", q19DiscountedRevenue,
       """SELECT
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -780,58 +738,58 @@ object Relational {
             OR (p.p_brand = 'Brand#19' AND p.p_size BETWEEN 1 AND 25
                 AND l.l_quantity BETWEEN 10 AND 20)
             OR (p.p_brand = 'Brand#9' AND p.p_size BETWEEN 1 AND 35
-                AND l.l_quantity BETWEEN 20 AND 30)""",
-    "q1_join_filter_sort" ->
+                AND l.l_quantity BETWEEN 20 AND 30)"""),
+    Op("q1_join_filter_sort", q1JoinFilterSort,
       """SELECT o.o_orderkey, o.o_orderdate, o.o_totalprice,
          l.l_linenumber, l.l_quantity, l.l_extendedprice
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
          WHERE o.o_orderdate < TIMESTAMP '1999-01-01'
          ORDER BY o_orderkey ASC, l_linenumber ASC, l_quantity ASC,
-           l_extendedprice ASC""",
-    "scan_project" ->
+           l_extendedprice ASC"""),
+    Op("scan_project", scanProject,
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, l_extendedprice""",
-    "select_star_limit" ->
-      "SELECT * FROM orders ORDER BY o_orderkey LIMIT 5",
-    "filter_date_range" ->
+         ORDER BY l_orderkey, l_linenumber, l_extendedprice"""),
+    Op("select_star_limit", selectStarLimit,
+      "SELECT * FROM orders ORDER BY o_orderkey LIMIT 5"),
+    Op("filter_date_range", filterDateRange,
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
            AND l_shipdate <  TIMESTAMP '1997-01-01'
-         ORDER BY l_orderkey, l_linenumber, l_shipdate, l_quantity""",
-    "filter_in_between_like" ->
+         ORDER BY l_orderkey, l_linenumber, l_shipdate, l_quantity"""),
+    Op("filter_in_between_like", filterInBetweenLike,
       """SELECT p_partkey, p_name, p_brand, p_size FROM part
          WHERE p_size BETWEEN 10 AND 30
            AND p_brand IN ('Brand#1','Brand#2','Brand#3')
            AND p_name LIKE '%e%'
-         ORDER BY p_partkey""",
-    "case_when_project" ->
+         ORDER BY p_partkey"""),
+    Op("case_when_project", caseWhenProject,
       """SELECT o_orderkey,
          CASE WHEN o_totalprice > 300000 THEN 'big'
               WHEN o_totalprice > 100000 THEN 'mid'
               ELSE 'small' END AS price_band
-         FROM orders ORDER BY o_orderkey""",
-    "cast_float32" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Op("cast_float32", castFloat32,
       """SELECT l_orderkey, l_linenumber,
          CAST(l_extendedprice AS FLOAT) AS price_f32,
          CAST(l_quantity AS FLOAT) AS qty_f32
          FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, price_f32, qty_f32""",
-    "scalar_string_funcs" ->
+         ORDER BY l_orderkey, l_linenumber, price_f32, qty_f32"""),
+    Op("scalar_string_funcs", scalarStringFuncs,
       """SELECT p_partkey, upper(p_name) AS name_upper,
          substring(p_name, 1, 4) AS name_pfx,
          replace(p_name, ' ', '_') AS name_snake,
          length(p_name) AS name_len,
          concat_ws('/', p_brand, p_type) AS brand_type
-         FROM part ORDER BY p_partkey""",
-    "scalar_date_funcs" ->
+         FROM part ORDER BY p_partkey"""),
+    Op("scalar_date_funcs", scalarDateFuncs,
       """SELECT o_orderkey,
          year(o_orderdate) AS yr, month(o_orderdate) AS mo,
          day(o_orderdate) AS dom,
          CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
          o_orderdate + INTERVAL 5 DAY AS plus5
-         FROM orders ORDER BY o_orderkey""",
-    "scalar_math_funcs" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Op("scalar_math_funcs", scalarMathFuncs,
       """SELECT l_orderkey, l_linenumber,
          abs(l_quantity - 25) AS qty_dev,
          round(l_extendedprice * 0.07, 2) AS fee,
@@ -839,42 +797,41 @@ object Relational {
          round(ln(l_extendedprice + 1), 6) AS price_ln,
          round(pow(l_discount + 1, 3), 6) AS disc_cube
          FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, qty_dev, fee, disc_cube""",
-    "json_extract" ->
+         ORDER BY l_orderkey, l_linenumber, qty_dev, fee, disc_cube"""),
+    Op("json_extract", jsonExtract,
       """SELECT event_id,
          CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-         FROM events ORDER BY event_id""",
-    "join_broadcast_dims" ->
+         FROM events ORDER BY event_id"""),
+    Op("join_broadcast_dims", joinBroadcastDims,
       """SELECT c.c_custkey, c.c_name, n.n_name AS nation, r.r_name AS region
          FROM customer c
          JOIN nation n ON c.c_nationkey = n.n_nationkey
          JOIN region r ON n.n_regionkey = r.r_regionkey
-         ORDER BY c_custkey""",
-    "join_left_outer" ->
+         ORDER BY c_custkey"""),
+    Op("join_left_outer", joinLeftOuter,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
          FROM customer c
          LEFT OUTER JOIN (SELECT * FROM orders WHERE o_orderstatus = 'F') o
            ON c.c_custkey = o.o_custkey
-         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""",
-    "join_left_outer_postfilter" ->
+         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST"""),
+    Op("join_left_outer_postfilter", joinLeftOuterPostfilter,
       """SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate
          FROM customer c LEFT OUTER JOIN orders o ON c.c_custkey = o.o_custkey
          WHERE o.o_orderdate > TIMESTAMP '2000-01-01'
-         ORDER BY c_custkey, o_orderkey""",
-    "join_full_outer" ->
+         ORDER BY c_custkey, o_orderkey"""),
+    Op("join_full_outer", joinFullOuter,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
          FROM (SELECT * FROM customer WHERE c_custkey < 1000) c
          FULL OUTER JOIN (SELECT * FROM orders WHERE o_orderstatus = 'F') o
            ON c.c_custkey = o.o_custkey
-         ORDER BY c_custkey ASC NULLS FIRST, o_orderkey ASC NULLS FIRST""",
-    "join_right_outer" ->
+         ORDER BY c_custkey ASC NULLS FIRST, o_orderkey ASC NULLS FIRST"""),
+    Op("join_right_outer", joinRightOuter,
       """SELECT c.c_custkey, c.c_name, o.o_orderkey
          FROM (SELECT * FROM orders WHERE o_orderstatus = 'F') o
          RIGHT OUTER JOIN (SELECT * FROM customer WHERE c_custkey < 1000) c
            ON o.o_custkey = c.c_custkey
-         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""",
-    "union_by_name" -> unionByNameEvolvedOracle,
-    "setops_all" ->
+         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST"""),
+    Op("setops_all", setopsAll,
       """SELECT * FROM (
            SELECT o_custkey, 'except_all' AS op FROM (
              SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
@@ -885,24 +842,25 @@ object Relational {
              SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
              INTERSECT ALL
              SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'))
-         ORDER BY op, o_custkey""",
-    "join_semi" ->
+         ORDER BY op, o_custkey"""),
+    Op("union_by_name", unionByNameEvolved, unionByNameEvolvedOracle),
+    Op("join_semi", joinSemi,
       """SELECT c_custkey, c_name FROM customer c
          WHERE EXISTS (SELECT 1 FROM orders o
            WHERE o.o_custkey = c.c_custkey
              AND o.o_orderpriority = '1-URGENT')
-         ORDER BY c_custkey""",
-    "join_anti" ->
+         ORDER BY c_custkey"""),
+    Op("join_anti", joinAnti,
       """SELECT c_custkey, c_name FROM customer c
          WHERE NOT EXISTS (SELECT 1 FROM orders o
            WHERE o.o_custkey = c.c_custkey
              AND o.o_orderpriority = '1-URGENT')
-         ORDER BY c_custkey""",
-    "join_cross" ->
+         ORDER BY c_custkey"""),
+    Op("join_cross", joinCross,
       """SELECT r.r_regionkey, r.r_name, n.n_nationkey, n.n_name
          FROM region r CROSS JOIN nation n
-         ORDER BY r_regionkey, n_nationkey""",
-    "join_asof" ->
+         ORDER BY r_regionkey, n_nationkey"""),
+    Op("join_asof", joinAsof,
       """WITH clicks AS (
            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
            FROM events WHERE event_type = 'click'),
@@ -913,8 +871,8 @@ object Relational {
                 p.ts AS purchase_ts, p.value AS purchase_value
          FROM clicks c ASOF LEFT JOIN purchases p
            ON c.user_id = p.user_id AND p.ts <= c.ts
-         ORDER BY c.event_id""",
-    "join_asof_nearest" ->
+         ORDER BY c.event_id"""),
+    Op("join_asof_nearest", joinAsofNearest,
       """WITH clicks AS (
            SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
            FROM events WHERE event_type = 'click'),
@@ -941,55 +899,55 @@ object Relational {
                     CASE WHEN p.ts <= c.ts THEN -p.event_id
                          ELSE p.event_id END ASC
            LIMIT 1) n ON true
-         ORDER BY c.event_id""",
-    "na_fill" ->
+         ORDER BY c.event_id"""),
+    Op("na_fill", naFill,
       """SELECT c.c_custkey, o.o_orderkey,
          coalesce(o.o_totalprice, 0.0) AS totalprice_filled
          FROM customer c
          LEFT OUTER JOIN (SELECT * FROM orders WHERE o_orderstatus = 'F') o
            ON c.c_custkey = o.o_custkey
-         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""",
-    "na_drop" ->
+         ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST"""),
+    Op("na_drop", naDrop,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
          FROM customer c
          LEFT OUTER JOIN (SELECT * FROM orders WHERE o_orderstatus = 'F') o
            ON c.c_custkey = o.o_custkey
          WHERE c.c_custkey IS NOT NULL AND o.o_orderkey IS NOT NULL
            AND o.o_totalprice IS NOT NULL
-         ORDER BY c_custkey, o_orderkey""",
-    "orderby_multi" ->
+         ORDER BY c_custkey, o_orderkey"""),
+    Op("orderby_multi", orderbyMulti,
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-         ORDER BY o_orderstatus ASC, o_totalprice DESC, o_orderkey ASC""",
-    "top_k" ->
+         ORDER BY o_orderstatus ASC, o_totalprice DESC, o_orderkey ASC"""),
+    Op("top_k", topK,
       """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "tail_k" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""),
+    Op("tail_k", tailK,
       """SELECT * FROM (
            SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
            ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 10)
-         ORDER BY o_orderdate ASC, o_orderkey ASC""",
-    "union_all" ->
+         ORDER BY o_orderdate ASC, o_orderkey ASC"""),
+    Op("union_all", unionAll,
       """SELECT * FROM (
            SELECT o_orderkey, 'hi' AS bucket FROM orders
            WHERE o_totalprice > 400000
            UNION ALL
            SELECT o_orderkey, 'lo' AS bucket FROM orders
            WHERE o_totalprice < 10000)
-         ORDER BY o_orderkey, bucket""",
-    "union_distinct" ->
+         ORDER BY o_orderkey, bucket"""),
+    Op("union_distinct", unionDistinct,
       """SELECT DISTINCT o_custkey FROM (
            SELECT o_custkey FROM orders WHERE o_totalprice > 400000
            UNION ALL
            SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-         ORDER BY o_custkey""",
-    "intersect_keys" ->
+         ORDER BY o_custkey"""),
+    Op("intersect_keys", intersectKeys,
       """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
          INTERSECT
          SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-         ORDER BY o_custkey""",
-    "except_keys" ->
+         ORDER BY o_custkey"""),
+    Op("except_keys", exceptKeys,
       """SELECT c_custkey AS k FROM customer
          EXCEPT
          SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'
-         ORDER BY k""")
+         ORDER BY k"""))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.t
 import graft.functions.TextAnalysis.hex60Duck
 
@@ -365,6 +365,24 @@ object Similarity {
         centroids(s, dir)))
   }
 
+  /** Nearest-centroid argmax as ONE hash aggregate instead of a
+    * row_number window (the kmAssignSpark rewrite, same rationale): the
+    * broadcast cross join emits each vector's k candidate rows inside
+    * one task, partial aggregation collapses them map-side, the
+    * exchange carries one row per vector (not k rows each dragging the
+    * embedding), no sort. Per `vec_id`, struct `m` holds the `pick`
+    * columns of the candidate that the DuckDB twins' window
+    * `ORDER BY cent_sim DESC, c_label ASC` ranks first. max_by over
+    * struct(cent_sim, -c_label) is that order exactly, NaN included:
+    * NaN sorts above every double, so both rank a NaN similarity
+    * first, and a NULL one last. (cent_sim, c_label) is unique per
+    * vector (one row per centroid), so the pick is deterministic. */
+  private[operators] def nearestCell(cand: DataFrame,
+                                     pick: String*): DataFrame =
+    cand.groupBy("vec_id")
+      .agg(max_by(struct(pick.map(col): _*),
+        struct(col("cent_sim"), negate(col("c_label")))).as("m"))
+
   /** IVF cell assignment — the coarse-recall stage of the scaled
     * semantic-dedup path: every vector routes to its NEAREST computed
     * centroid (the same deterministic rounded-mean centroids the IVF
@@ -376,21 +394,10 @@ object Similarity {
     val cents = centroidIndex(s, dir)
       .selectExpr("label AS c_label", "centroid",
         s"${normS("centroid")} AS c_cnrm")
-    // argmax as ONE hash aggregate instead of a row_number window (the
-    // kmAssignSpark rewrite, same rationale): the broadcast cross join
-    // emits each vector's k candidate rows inside one task, partial
-    // aggregation collapses them map-side, the exchange carries one row
-    // per vector (not k rows each dragging the embedding), no sort.
-    // min_by over struct(-cent_sim, c_label) is the window's exact
-    // (cent_sim DESC, c_label ASC) tiebreak; (cent_sim, c_label) is
-    // unique per vector (one row per centroid), so the pick is
-    // deterministic.
-    vecs(s, dir).crossJoin(broadcast(cents))
+    nearestCell(vecs(s, dir).crossJoin(broadcast(cents))
       .selectExpr("vec_id", "embedding", "nrm", "c_label",
-        s"${dotS("embedding", "centroid")} / (nrm * c_cnrm) AS cent_sim")
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("embedding"), col("nrm"), col("c_label")),
-        struct(negate(col("cent_sim")), col("c_label"))).as("m"))
+        s"${dotS("embedding", "centroid")} / (nrm * c_cnrm) AS cent_sim"),
+      "embedding", "nrm", "c_label")
       .selectExpr("vec_id", "m.embedding AS embedding", "m.nrm AS nrm",
         "m.c_label AS cell")
   }
@@ -543,14 +550,10 @@ object Similarity {
     val cents = centroidIndex(s, dir)
       .selectExpr("label AS c_label", "centroid",
         s"${normS("centroid")} AS c_cnrm")
-    // same argmax-as-aggregate rewrite as [[cellAssigned]]: one hash
-    // aggregate with map-side combine instead of a row_number window
-    val assigned = vecs(s, dir).crossJoin(broadcast(cents))
+    val assigned = nearestCell(vecs(s, dir).crossJoin(broadcast(cents))
       .selectExpr("vec_id", "c_label",
-        s"${dotS("embedding", "centroid")} / (nrm * c_cnrm) AS cent_sim")
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("c_label"), col("cent_sim")),
-        struct(negate(col("cent_sim")), col("c_label"))).as("m"))
+        s"${dotS("embedding", "centroid")} / (nrm * c_cnrm) AS cent_sim"),
+      "c_label", "cent_sim")
       .selectExpr("vec_id", "m.c_label AS cell", "m.cent_sim AS cent_sim")
     val wCell = Window.partitionBy("cell")
       .orderBy(col("cent_sim").asc, col("vec_id").asc)
@@ -1682,53 +1685,33 @@ object Similarity {
          CAST(dense_rank AS BIGINT) AS dense_rank
        FROM rk WHERE rank <= 10 ORDER BY q_id, rank"""
 
-  val queries: Map[String, Q] = Map(
-    "embedding_random_projection" -> randomProjection,
-    "ann_ivf_centroid_topk" -> annIvfCentroidTopk,
-    "embedding_centroids" -> centroidsSer,
-    "embedding_quantize_int8" -> quantizeInt8Ser,
-    "ann_custom_exec_topk" -> annCustomTopk,
-    "ann_brute_topk" -> annBruteTopk,
-    "ann_ivf_label_topk" -> annIvfLabelTopk,
-    "ann_lsh_topk" -> annLshTopk,
-    "ann_int8_topk" -> annInt8Topk,
-    "ann_two_stage_rerank" -> annTwoStageRerank,
-    "dedup_semantic_keep" -> dedupSemanticKeep,
-    "dedup_semantic_scaled" -> dedupSemanticScaled,
-    "embedding_cosine_neardup" -> cosineNeardup,
-    "embedding_cosine_neardup_cells" -> cosineNeardupCells,
-    "knn_graph_cells" -> knnGraphCells,
-    "embedding_outlier_cells" -> embeddingOutlierCells,
-    "cluster_mutual_knn" -> clusterMutualKnn,
-    "embedding_norm_stats" -> normStats,
-    "embedding_kmeans" -> embeddingKmeans,
-    "ann_pq_adc" -> annPqAdc,
-    "ann_ivf_multiprobe_recall" -> annIvfMultiprobeRecall,
-    "search_hybrid_rrf" -> searchHybridRrf,
-    "ann_hard_negatives" -> annHardNegatives)
-
-  val oracles: Map[String, String] = Map(
-    "embedding_random_projection" -> randomProjectionOracle,
-    "ann_ivf_centroid_topk" -> annIvfCentroidTopkOracle,
-    "embedding_centroids" -> centroidsOracle,
-    "embedding_quantize_int8" -> quantizeInt8Oracle,
-    "ann_custom_exec_topk" -> annBruteTopkOracle, // identical result set
-    "ann_brute_topk" -> annBruteTopkOracle,
-    "ann_ivf_label_topk" -> annIvfLabelTopkOracle,
-    "ann_lsh_topk" -> annLshTopkOracle,
-    "ann_int8_topk" -> annInt8TopkOracle,
-    "ann_two_stage_rerank" -> annBruteTopkOracle, // rerank recovers exact
-    "dedup_semantic_keep" -> dedupSemanticKeepOracle,
-    "dedup_semantic_scaled" -> dedupSemanticScaledOracle,
-    "embedding_cosine_neardup" -> cosineNeardupOracle,
-    "embedding_cosine_neardup_cells" -> cosineNeardupCellsOracle,
-    "knn_graph_cells" -> knnGraphCellsOracle,
-    "embedding_outlier_cells" -> embeddingOutlierCellsOracle,
-    "cluster_mutual_knn" -> clusterMutualKnnOracle,
-    "embedding_norm_stats" -> normStatsOracle,
-    "embedding_kmeans" -> embeddingKmeansOracle,
-    "ann_pq_adc" -> annPqAdcOracle,
-    "ann_ivf_multiprobe_recall" -> annIvfMultiprobeRecallOracle,
-    "search_hybrid_rrf" -> searchHybridRrfOracle,
-    "ann_hard_negatives" -> annHardNegativesOracle)
+  val ops: Seq[Op] = Seq(
+    Op("embedding_random_projection", randomProjection, randomProjectionOracle),
+    Op("ann_ivf_centroid_topk", annIvfCentroidTopk, annIvfCentroidTopkOracle),
+    Op("embedding_centroids", centroidsSer, centroidsOracle),
+    Op("embedding_quantize_int8", quantizeInt8Ser, quantizeInt8Oracle),
+    Op("ann_custom_exec_topk", annCustomTopk,
+      annBruteTopkOracle), // identical result set
+    Op("ann_brute_topk", annBruteTopk, annBruteTopkOracle),
+    Op("ann_ivf_label_topk", annIvfLabelTopk, annIvfLabelTopkOracle),
+    Op("ann_lsh_topk", annLshTopk, annLshTopkOracle),
+    Op("ann_int8_topk", annInt8Topk, annInt8TopkOracle),
+    Op("ann_two_stage_rerank", annTwoStageRerank,
+      annBruteTopkOracle), // rerank recovers exact
+    Op("dedup_semantic_keep", dedupSemanticKeep, dedupSemanticKeepOracle),
+    Op("dedup_semantic_scaled", dedupSemanticScaled, dedupSemanticScaledOracle),
+    Op("embedding_cosine_neardup", cosineNeardup, cosineNeardupOracle),
+    Op("embedding_cosine_neardup_cells", cosineNeardupCells,
+      cosineNeardupCellsOracle),
+    Op("knn_graph_cells", knnGraphCells, knnGraphCellsOracle),
+    Op("embedding_outlier_cells", embeddingOutlierCells,
+      embeddingOutlierCellsOracle),
+    Op("cluster_mutual_knn", clusterMutualKnn, clusterMutualKnnOracle),
+    Op("embedding_norm_stats", normStats, normStatsOracle),
+    Op("embedding_kmeans", embeddingKmeans, embeddingKmeansOracle),
+    Op("ann_pq_adc", annPqAdc, annPqAdcOracle),
+    Op("ann_ivf_multiprobe_recall", annIvfMultiprobeRecall,
+      annIvfMultiprobeRecallOracle),
+    Op("search_hybrid_rrf", searchHybridRrf, searchHybridRrfOracle),
+    Op("ann_hard_negatives", annHardNegatives, annHardNegativesOracle))
 }

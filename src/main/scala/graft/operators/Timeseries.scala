@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.{dsum, events}
 
 /** Time-series operators over the event stream — the engine-side versions
@@ -309,19 +309,11 @@ object Timeseries {
          FROM e GROUP BY 2)
        ORDER BY grain, period_start"""
 
-  val queries: Map[String, Q] = Map(
-    "gapfill_date_spine" -> gapfillDateSpine,
-    "scd2_history" -> scd2History,
-    "scd2_point_in_time" -> scd2PointInTime,
-    "join_point_in_time" -> joinPointInTime,
-    "gapfill_linear_interp" -> gapfillLinearInterp,
-    "time_rollup_multi" -> timeRollupMulti)
-
-  val oracles: Map[String, String] = Map(
-    "gapfill_date_spine" -> gapfillDateSpineOracle,
-    "scd2_history" -> scd2HistoryOracle,
-    "scd2_point_in_time" -> scd2PointInTimeOracle,
-    "join_point_in_time" -> joinPointInTimeOracle,
-    "gapfill_linear_interp" -> gapfillLinearInterpOracle,
-    "time_rollup_multi" -> timeRollupMultiOracle)
+  val ops: Seq[Op] = Seq(
+    Op("gapfill_date_spine", gapfillDateSpine, gapfillDateSpineOracle),
+    Op("scd2_history", scd2History, scd2HistoryOracle),
+    Op("scd2_point_in_time", scd2PointInTime, scd2PointInTimeOracle),
+    Op("join_point_in_time", joinPointInTime, joinPointInTimeOracle),
+    Op("gapfill_linear_interp", gapfillLinearInterp, gapfillLinearInterpOracle),
+    Op("time_rollup_multi", timeRollupMulti, timeRollupMultiOracle))
 }

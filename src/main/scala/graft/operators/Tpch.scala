@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.{t, dsum}
 
 /** The rest of the TPC-H dial (SURVEY.md §2 macro benchmarks; the first 9
@@ -409,23 +409,8 @@ object Tpch {
 
   // ------------------------------------------------------------ registry
 
-  val queries: Map[String, Q] = Map(
-    "q2_min_cost_supplier" -> q2MinCostSupplier,
-    "q4_order_priority" -> q4OrderPriority,
-    "q8_market_share" -> q8MarketShare,
-    "q9_product_profit" -> q9ProductProfit,
-    "q11_important_parts" -> q11ImportantParts,
-    "q12_late_priority" -> q12LatePriority,
-    "q13_customer_orders_dist" -> q13CustomerOrdersDist,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q16_supplier_cnt" -> q16SupplierCnt,
-    "q17_small_qty_revenue" -> q17SmallQtyRevenue,
-    "q20_promotion_suppliers" -> q20PromotionSuppliers,
-    "q21_suppliers_waiting" -> q21SuppliersWaiting,
-    "q22_inactive_customers" -> q22InactiveCustomers)
-
-  val oracles: Map[String, String] = Map(
-    "q2_min_cost_supplier" ->
+  val ops: Seq[Op] = Seq(
+    Op("q2_min_cost_supplier", q2MinCostSupplier,
       """WITH supply AS (
            SELECT l_partkey AS pk, l_suppkey AS sk,
                   min(l_extendedprice / l_quantity) AS cost
@@ -445,8 +430,8 @@ object Tpch {
              JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
              WHERE sp2.pk = p.p_partkey AND r2.r_name = 'EUROPE')
          ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
-         LIMIT 100""",
-    "q4_order_priority" ->
+         LIMIT 100"""),
+    Op("q4_order_priority", q4OrderPriority,
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders o
          WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
@@ -454,8 +439,8 @@ object Tpch {
            AND EXISTS (SELECT 1 FROM lineitem l
              WHERE l.l_orderkey = o.o_orderkey
                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q8_market_share" ->
+         GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    Op("q8_market_share", q8MarketShare,
       """WITH flat AS (
            SELECT year(o.o_orderdate) AS o_year,
              CAST(l.l_extendedprice AS DECIMAL(18,2)) *
@@ -477,8 +462,8 @@ object Tpch {
                                ELSE CAST(0 AS DECIMAL(18,2)) END)
                       AS DOUBLE) /
                  CAST(sum(volume) AS DOUBLE), 6) AS mkt_share
-         FROM flat GROUP BY o_year ORDER BY o_year""",
-    "q9_product_profit" ->
+         FROM flat GROUP BY o_year ORDER BY o_year"""),
+    Op("q9_product_profit", q9ProductProfit,
       """SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
            CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
                       (1 - CAST(l.l_discount AS DECIMAL(18,2))) -
@@ -492,8 +477,8 @@ object Tpch {
          JOIN orders o ON o.o_orderkey = l.l_orderkey
          JOIN nation n ON n.n_nationkey = s.s_nationkey
          WHERE p.p_name LIKE 'red%'
-         GROUP BY nation, o_year ORDER BY nation ASC, o_year DESC""",
-    "q11_important_parts" ->
+         GROUP BY nation, o_year ORDER BY nation ASC, o_year DESC"""),
+    Op("q11_important_parts", q11ImportantParts,
       """WITH natsupply AS (
            SELECT l.l_partkey,
              sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
@@ -505,8 +490,8 @@ object Tpch {
            GROUP BY l.l_partkey)
          SELECT l_partkey, CAST(vd AS DOUBLE) AS value FROM natsupply
          WHERE vd * 1000 > (SELECT sum(vd) FROM natsupply)
-         ORDER BY value DESC, l_partkey ASC""",
-    "q12_late_priority" ->
+         ORDER BY value DESC, l_partkey ASC"""),
+    Op("q12_late_priority", q12LatePriority,
       """SELECT l.l_linestatus,
            CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -516,8 +501,8 @@ object Tpch {
          WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
            AND l.l_shipdate < TIMESTAMP '1997-01-01'
            AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY
-         GROUP BY l_linestatus ORDER BY l_linestatus""",
-    "q13_customer_orders_dist" ->
+         GROUP BY l_linestatus ORDER BY l_linestatus"""),
+    Op("q13_customer_orders_dist", q13CustomerOrdersDist,
       """WITH c_orders AS (
            SELECT c.c_custkey, count(o.o_orderkey) AS c_count
            FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
@@ -525,8 +510,8 @@ object Tpch {
            GROUP BY c.c_custkey)
          SELECT c_count, count(*) AS custdist
          FROM c_orders GROUP BY c_count
-         ORDER BY custdist DESC, c_count DESC""",
-    "q15_top_supplier" ->
+         ORDER BY custdist DESC, c_count DESC"""),
+    Op("q15_top_supplier", q15TopSupplier,
       """WITH revenue AS (
            SELECT l_suppkey AS supplier_no,
              CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -539,8 +524,8 @@ object Tpch {
          SELECT s.s_suppkey, s.s_name, r.total_revenue
          FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
          WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
-         ORDER BY s_suppkey""",
-    "q16_supplier_cnt" ->
+         ORDER BY s_suppkey"""),
+    Op("q16_supplier_cnt", q16SupplierCnt,
       """SELECT p.p_brand, p.p_type, p.p_size,
            count(DISTINCT l.l_suppkey) AS supplier_cnt
          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -550,16 +535,16 @@ object Tpch {
              (SELECT s_suppkey FROM supplier WHERE s_acctbal < 100.0)
          GROUP BY p.p_brand, p.p_type, p.p_size
          ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC,
-           p_size ASC""",
-    "q17_small_qty_revenue" ->
+           p_size ASC"""),
+    Op("q17_small_qty_revenue", q17SmallQtyRevenue,
       """SELECT round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)))
              AS DOUBLE) / 7.0, 6) AS avg_yearly,
            count(*) AS n_lines
          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
          WHERE p.p_brand = 'Brand#2'
            AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-             FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)""",
-    "q20_promotion_suppliers" ->
+             FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)"""),
+    Op("q20_promotion_suppliers", q20PromotionSuppliers,
       """SELECT s.s_name, s.s_acctbal
          FROM supplier s
          JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -573,8 +558,8 @@ object Tpch {
                AND l_shipdate < TIMESTAMP '1997-01-01'
              GROUP BY l_suppkey, l_partkey
              HAVING sum(l_quantity) > 50)
-         ORDER BY s_name""",
-    "q21_suppliers_waiting" ->
+         ORDER BY s_name"""),
+    Op("q21_suppliers_waiting", q21SuppliersWaiting,
       """SELECT s.s_name, count(*) AS numwait
          FROM supplier s
          JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
@@ -591,8 +576,8 @@ object Tpch {
                AND l3.l_suppkey <> l1.l_suppkey
                AND l3.l_shipdate > o.o_orderdate + INTERVAL 365 DAY)
          GROUP BY s_name
-         ORDER BY numwait DESC, s_name ASC LIMIT 100""",
-    "q22_inactive_customers" ->
+         ORDER BY numwait DESC, s_name ASC LIMIT 100"""),
+    Op("q22_inactive_customers", q22InactiveCustomers,
       """WITH cust AS (
            SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal,
                   c_custkey
@@ -611,5 +596,5 @@ object Tpch {
            AND NOT EXISTS (SELECT 1 FROM orders o
              WHERE o.o_custkey = c.c_custkey
                AND o.o_orderdate >= TIMESTAMP '2000-07-01')
-         GROUP BY cntrycode ORDER BY cntrycode""")
+         GROUP BY cntrycode ORDER BY cntrycode"""))
 }

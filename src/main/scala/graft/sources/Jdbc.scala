@@ -5,7 +5,7 @@ import java.sql.DriverManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.t
 
 /** JDBC source binding — the Spark side of the reference's PostgreSQL
@@ -297,14 +297,9 @@ object Jdbc {
        CAST(n_regionkey AS BIGINT) AS n_regionkey
        FROM nation ORDER BY n_nationkey"""
 
-  val queries: Map[String, Q] = Map(
-    "jdbc_scan_agg" -> jdbcScanAgg,
-    "jdbc_agg_pushdown" -> jdbcAggPushdown,
-    "jdbc_ingest_roundtrip" -> jdbcIngestRoundtrip,
-    "q1_cross_catalog" -> q1CrossCatalog)
-  val oracles: Map[String, String] = Map(
-    "jdbc_scan_agg" -> jdbcScanAggOracle,
-    "jdbc_agg_pushdown" -> jdbcAggPushdownOracle,
-    "jdbc_ingest_roundtrip" -> jdbcIngestRoundtripOracle,
-    "q1_cross_catalog" -> q1CrossCatalogOracle)
+  val ops: Seq[Op] = Seq(
+    Op("jdbc_scan_agg", jdbcScanAgg, jdbcScanAggOracle),
+    Op("jdbc_agg_pushdown", jdbcAggPushdown, jdbcAggPushdownOracle),
+    Op("jdbc_ingest_roundtrip", jdbcIngestRoundtrip, jdbcIngestRoundtripOracle),
+    Op("q1_cross_catalog", q1CrossCatalog, q1CrossCatalogOracle))
 }

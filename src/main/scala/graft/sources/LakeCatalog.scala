@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Memo.rmTree
 
 /** SQL `MERGE INTO` / `UPDATE` / `DELETE` as a FIRST-CLASS connector
@@ -8346,128 +8346,75 @@ object Lake {
          % 1000000 < 300000
        ORDER BY doc_id"""
 
-  val queries: Map[String, Q] = Map(
-    "sample_tablesample" -> sampleTablesample,
-    "sample_tablesample_parquet" -> sampleTablesampleParquet,
-    "ann_indexed_topk" -> annIndexedTopk,
-    "ann_indexed_filtered" -> annIndexedFiltered,
-    "ann_index_drift" -> annIndexDrift,
-    "lake_maintenance_plan" -> lakeMaintenancePlan,
-    "lake_maintenance_run" -> lakeMaintenanceRun,
-    "ann_indexed_pq" -> annIndexedPq,
-    "lake_branch_wap" -> lakeBranchWap,
-    "lake_hidden_partition_prune" -> lakeHiddenPartitionPrune,
-    "lake_partition_evolution" -> lakePartitionEvolution,
-    "lake_limit_pushdown" -> lakeLimitPushdown,
-    "lake_zorder_skip" -> lakeZorderSkip,
-    "lake_clustered_write" -> lakeClusteredWrite,
-    "lake_dpp_join" -> lakeDppJoin,
-    "lake_part_prune" -> lakePartPrune,
-    "lake_bloom_skip" -> lakeBloomSkip,
-    "lake_spj_join" -> lakeSpjJoin,
-    "lake_sorted_join" -> lakeSortedJoin,
-    "lake_sorted_rewrite" -> lakeSortedRewrite,
-    "search_indexed_bm25" -> searchIndexedBm25,
-    "search_indexed_wand" -> searchIndexedWand,
-    "stream_index_refresh" -> streamIndexRefresh,
-    "stream_index_group_refresh" -> streamIndexGroupRefresh,
-    "search_indexed_conjunctive" -> searchIndexedConjunctive,
-    "search_phrase_indexed" -> searchPhraseIndexed,
-    "search_proximity_indexed" -> searchProximityIndexed,
-    "lake_text_index_stats" -> lakeTextIndexStats,
-    "lake_text_index_rebuild" -> lakeTextIndexRebuild,
-    "search_hybrid_indexed" -> searchHybridIndexed,
-    "pipeline_forget_user" -> pipelineForgetUser,
-    "join_skew_aqe" -> joinSkewAqe,
-    "lake_recluster_skip" -> lakeReclusterSkip,
-    "merge_sql_firstseen" -> mergeSqlFirstSeen,
-    "lake_time_travel" -> lakeTimeTravel,
-    "lake_schema_evolution" -> lakeSchemaEvolution,
-    "lake_agg_pushdown" -> lakeAggPushdown,
-    "lake_merge_evolved" -> lakeMergeEvolved,
-    "lake_snapshot_isolation" -> lakeSnapshotIsolation,
-    "lake_delete_update" -> lakeDeleteUpdate,
-    "lake_delete_vectors" -> lakeDeleteVectors,
-    "lake_update_vectors" -> lakeUpdateVectors,
-    "lake_merge_mor" -> lakeMergeMor,
-    "lake_dv_compaction" -> lakeDvCompaction,
-    "lake_call_optimize" -> lakeCallOptimize,
-    "lake_tag_travel" -> lakeTagTravel,
-    "lake_files_table" -> lakeFilesTable,
-    "lake_metadata_delete" -> lakeMetadataDelete,
-    "lake_view_sql" -> lakeViewSql,
-    "lake_stats_skipping" -> lakeStatsSkipping,
-    "lake_string_skipping" -> lakeStringSkipping,
-    "lake_table_changes" -> lakeTableChanges,
-    "stream_lake_changes" -> streamLakeChanges,
-    "lake_history" -> lakeHistory,
-    "lake_incremental_mv" -> lakeIncrementalMv,
-    "lake_incremental_mv_join" -> lakeIncrementalMvJoin,
-    "lake_changes_table" -> lakeChangesTable,
-    "lake_changes_bounded" -> lakeChangesBounded,
-    "stream_lake_cdf_source" -> streamLakeCdfSource,
-    "lake_point_lookup" -> lakePointLookup)
-
-  val oracles: Map[String, String] = Map(
-    "sample_tablesample" -> sampleTablesampleOracle,
-    "sample_tablesample_parquet" -> sampleTablesampleParquetOracle,
-    "ann_indexed_topk" -> annIndexedTopkOracle,
-    "ann_indexed_filtered" -> annIndexedFilteredOracle,
-    "ann_index_drift" -> annIndexDriftOracle,
-    "lake_maintenance_plan" -> lakeMaintenancePlanOracle,
-    "lake_maintenance_run" -> lakeMaintenanceRunOracle,
-    "ann_indexed_pq" -> annIndexedPqOracle,
-    "lake_branch_wap" -> lakeBranchWapOracle,
-    "lake_hidden_partition_prune" -> lakeHiddenPartitionPruneOracle,
-    "lake_partition_evolution" -> lakePartitionEvolutionOracle,
-    "lake_limit_pushdown" -> lakeLimitPushdownOracle,
-    "lake_zorder_skip" -> lakeZorderSkipOracle,
-    "lake_clustered_write" -> lakeClusteredWriteOracle,
-    "lake_dpp_join" -> lakeDppJoinOracle,
-    "lake_part_prune" -> lakePartPruneOracle,
-    "lake_bloom_skip" -> lakeBloomSkipOracle,
-    "lake_spj_join" -> lakeSpjJoinOracle,
-    "lake_sorted_join" -> lakeSortedJoinOracle,
-    "lake_sorted_rewrite" -> lakeSortedRewriteOracle,
-    "search_indexed_bm25" -> searchIndexedBm25Oracle,
-    "search_indexed_wand" -> searchIndexedBm25Oracle,
-    "stream_index_refresh" -> searchIndexedBm25Oracle,
-    "stream_index_group_refresh" -> streamIndexGroupRefreshOracle,
-    "search_indexed_conjunctive" -> searchIndexedConjunctiveOracle,
-    "search_phrase_indexed" -> searchPhraseIndexedOracle,
-    "search_proximity_indexed" -> searchProximityIndexedOracle,
-    "lake_text_index_stats" -> lakeTextIndexStatsOracle,
-    "lake_text_index_rebuild" -> lakeTextIndexRebuildOracle,
-    "search_hybrid_indexed" -> searchHybridIndexedOracle,
-    "pipeline_forget_user" -> pipelineForgetUserOracle,
-    "join_skew_aqe" -> joinSkewAqeOracle,
-    "lake_recluster_skip" -> lakeStatsSkippingOracle,
-    "merge_sql_firstseen" ->
-      graft.operators.Merge.mergeUpsertFirstSeenOracle,
-    "lake_time_travel" -> lakeTimeTravelOracle,
-    "lake_schema_evolution" -> lakeSchemaEvolutionOracle,
-    "lake_agg_pushdown" -> lakeAggPushdownOracle,
-    "lake_merge_evolved" -> lakeMergeEvolvedOracle,
-    "lake_snapshot_isolation" -> lakeSnapshotIsolationOracle,
-    "lake_delete_update" -> lakeDeleteUpdateOracle,
-    "lake_delete_vectors" -> lakeDeleteVectorsOracle,
-    "lake_update_vectors" -> lakeUpdateVectorsOracle,
-    "lake_merge_mor" -> lakeMergeMorOracle,
-    "lake_dv_compaction" -> lakeDvCompactionOracle,
-    "lake_call_optimize" -> lakeCallOptimizeOracle,
-    "lake_tag_travel" -> lakeTagTravelOracle,
-    "lake_files_table" -> lakeFilesTableOracle,
-    "lake_metadata_delete" -> lakeMetadataDeleteOracle,
-    "lake_view_sql" -> lakeViewSqlOracle,
-    "lake_stats_skipping" -> lakeStatsSkippingOracle,
-    "lake_string_skipping" -> lakeStringSkippingOracle,
-    "lake_table_changes" -> lakeTableChangesOracle,
-    "stream_lake_changes" -> streamLakeChangesOracle,
-    "lake_history" -> lakeHistoryOracle,
-    "lake_incremental_mv" -> lakeIncrementalMvOracle,
-    "lake_incremental_mv_join" -> lakeIncrementalMvJoinOracle,
-    "lake_changes_table" -> lakeChangesTableOracle,
-    "lake_changes_bounded" -> lakeChangesBoundedOracle,
-    "stream_lake_cdf_source" -> lakeChangesTableOracle,
-    "lake_point_lookup" -> lakePointLookupOracle)
+  val ops: Seq[Op] = Seq(
+    Op("sample_tablesample", sampleTablesample, sampleTablesampleOracle),
+    Op("sample_tablesample_parquet", sampleTablesampleParquet,
+      sampleTablesampleParquetOracle),
+    Op("ann_indexed_topk", annIndexedTopk, annIndexedTopkOracle),
+    Op("ann_indexed_filtered", annIndexedFiltered, annIndexedFilteredOracle),
+    Op("ann_index_drift", annIndexDrift, annIndexDriftOracle),
+    Op("lake_maintenance_plan", lakeMaintenancePlan, lakeMaintenancePlanOracle),
+    Op("lake_maintenance_run", lakeMaintenanceRun, lakeMaintenanceRunOracle),
+    Op("ann_indexed_pq", annIndexedPq, annIndexedPqOracle),
+    Op("lake_branch_wap", lakeBranchWap, lakeBranchWapOracle),
+    Op("lake_hidden_partition_prune", lakeHiddenPartitionPrune,
+      lakeHiddenPartitionPruneOracle),
+    Op("lake_partition_evolution", lakePartitionEvolution,
+      lakePartitionEvolutionOracle),
+    Op("lake_limit_pushdown", lakeLimitPushdown, lakeLimitPushdownOracle),
+    Op("lake_zorder_skip", lakeZorderSkip, lakeZorderSkipOracle),
+    Op("lake_clustered_write", lakeClusteredWrite, lakeClusteredWriteOracle),
+    Op("lake_dpp_join", lakeDppJoin, lakeDppJoinOracle),
+    Op("lake_part_prune", lakePartPrune, lakePartPruneOracle),
+    Op("lake_bloom_skip", lakeBloomSkip, lakeBloomSkipOracle),
+    Op("lake_spj_join", lakeSpjJoin, lakeSpjJoinOracle),
+    Op("lake_sorted_join", lakeSortedJoin, lakeSortedJoinOracle),
+    Op("lake_sorted_rewrite", lakeSortedRewrite, lakeSortedRewriteOracle),
+    Op("search_indexed_bm25", searchIndexedBm25, searchIndexedBm25Oracle),
+    Op("search_indexed_wand", searchIndexedWand, searchIndexedBm25Oracle),
+    Op("stream_index_refresh", streamIndexRefresh, searchIndexedBm25Oracle),
+    Op("stream_index_group_refresh", streamIndexGroupRefresh,
+      streamIndexGroupRefreshOracle),
+    Op("search_indexed_conjunctive", searchIndexedConjunctive,
+      searchIndexedConjunctiveOracle),
+    Op("search_phrase_indexed", searchPhraseIndexed, searchPhraseIndexedOracle),
+    Op("search_proximity_indexed", searchProximityIndexed,
+      searchProximityIndexedOracle),
+    Op("lake_text_index_stats", lakeTextIndexStats, lakeTextIndexStatsOracle),
+    Op("lake_text_index_rebuild", lakeTextIndexRebuild,
+      lakeTextIndexRebuildOracle),
+    Op("search_hybrid_indexed", searchHybridIndexed, searchHybridIndexedOracle),
+    Op("pipeline_forget_user", pipelineForgetUser, pipelineForgetUserOracle),
+    Op("join_skew_aqe", joinSkewAqe, joinSkewAqeOracle),
+    Op("lake_recluster_skip", lakeReclusterSkip, lakeStatsSkippingOracle),
+    Op("merge_sql_firstseen", mergeSqlFirstSeen,
+      graft.operators.Merge.mergeUpsertFirstSeenOracle),
+    Op("lake_time_travel", lakeTimeTravel, lakeTimeTravelOracle),
+    Op("lake_schema_evolution", lakeSchemaEvolution, lakeSchemaEvolutionOracle),
+    Op("lake_agg_pushdown", lakeAggPushdown, lakeAggPushdownOracle),
+    Op("lake_merge_evolved", lakeMergeEvolved, lakeMergeEvolvedOracle),
+    Op("lake_snapshot_isolation", lakeSnapshotIsolation,
+      lakeSnapshotIsolationOracle),
+    Op("lake_delete_update", lakeDeleteUpdate, lakeDeleteUpdateOracle),
+    Op("lake_delete_vectors", lakeDeleteVectors, lakeDeleteVectorsOracle),
+    Op("lake_update_vectors", lakeUpdateVectors, lakeUpdateVectorsOracle),
+    Op("lake_merge_mor", lakeMergeMor, lakeMergeMorOracle),
+    Op("lake_dv_compaction", lakeDvCompaction, lakeDvCompactionOracle),
+    Op("lake_call_optimize", lakeCallOptimize, lakeCallOptimizeOracle),
+    Op("lake_tag_travel", lakeTagTravel, lakeTagTravelOracle),
+    Op("lake_files_table", lakeFilesTable, lakeFilesTableOracle),
+    Op("lake_metadata_delete", lakeMetadataDelete, lakeMetadataDeleteOracle),
+    Op("lake_view_sql", lakeViewSql, lakeViewSqlOracle),
+    Op("lake_stats_skipping", lakeStatsSkipping, lakeStatsSkippingOracle),
+    Op("lake_string_skipping", lakeStringSkipping, lakeStringSkippingOracle),
+    Op("lake_table_changes", lakeTableChanges, lakeTableChangesOracle),
+    Op("stream_lake_changes", streamLakeChanges, streamLakeChangesOracle),
+    Op("lake_history", lakeHistory, lakeHistoryOracle),
+    Op("lake_incremental_mv", lakeIncrementalMv, lakeIncrementalMvOracle),
+    Op("lake_incremental_mv_join", lakeIncrementalMvJoin,
+      lakeIncrementalMvJoinOracle),
+    Op("lake_changes_table", lakeChangesTable, lakeChangesTableOracle),
+    Op("lake_changes_bounded", lakeChangesBounded, lakeChangesBoundedOracle),
+    Op("stream_lake_cdf_source", streamLakeCdfSource, lakeChangesTableOracle),
+    Op("lake_point_lookup", lakePointLookup, lakePointLookupOracle))
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.Tables.events
 
 /** HAND-WRITTEN DataSource V2 connector + catalog for the reference's
@@ -864,14 +864,10 @@ object Mongo {
        FROM orders WHERE o_orderkey < 5000
        GROUP BY 1 ORDER BY day"""
 
-  val queries: Map[String, Q] = Map(
-    "mongo_catalog_scan" -> mongoCatalogScan,
-    "mongo_pushdown_scan" -> mongoPushdownScan,
-    "mongo_ingest_roundtrip" -> mongoIngestRoundtrip,
-    "q1_tri_catalog" -> q1TriCatalog)
-  val oracles: Map[String, String] = Map(
-    "mongo_catalog_scan" -> mongoCatalogScanOracle,
-    "mongo_pushdown_scan" -> mongoPushdownScanOracle,
-    "mongo_ingest_roundtrip" -> mongoIngestRoundtripOracle,
-    "q1_tri_catalog" -> q1TriCatalogOracle)
+  val ops: Seq[Op] = Seq(
+    Op("mongo_catalog_scan", mongoCatalogScan, mongoCatalogScanOracle),
+    Op("mongo_pushdown_scan", mongoPushdownScan, mongoPushdownScanOracle),
+    Op("mongo_ingest_roundtrip", mongoIngestRoundtrip,
+      mongoIngestRoundtripOracle),
+    Op("q1_tri_catalog", q1TriCatalog, q1TriCatalogOracle))
 }

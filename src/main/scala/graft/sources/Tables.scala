@@ -115,6 +115,22 @@ object Tables {
     "spark.sql.warehouse.dir" ->
       s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
 
+  /** The one graft SparkSession builder: `local[cores]` with `cores`
+    * shuffle partitions, the UI off, [[sessionConf]] plus `extra`. The
+    * mains take `cores` from SPARK_GRAFT_CPUS (default 32). */
+  def session(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+              logLevel: String = "ERROR",
+              extra: Map[String, String] = Map.empty): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false")
+    (sessionConf ++ extra).foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+
   // ---- declared schemas (streaming sources / test assertions) ----
 
   val eventsSchema: StructType = StructType(Seq(

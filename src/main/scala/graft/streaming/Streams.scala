@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.Q
+import graft.{Op, Q}
 import graft.sources.{Memo, Tables}
 
 /** Structured-Streaming binding of the reference's stream semantics
@@ -1080,46 +1080,32 @@ object Streams {
        SELECT a.user_id, n_events, sum_cents, last_event_id
        FROM agg a JOIN last USING (user_id) ORDER BY user_id"""
 
-  val queries: Map[String, Q] = Map(
-    "stream_tws_running_agg" -> streamTwsRunningAgg,
-    "stream_stream_join" -> streamStreamJoin,
-    "stream_hist_quantile" -> streamHistQuantile,
-    "stream_heavy_hitters" -> streamHeavyHitters,
-    "stream_exact_distinct" -> streamExactDistinct,
-    "stream_foreach_batch_sink" -> streamForeachBatchSink,
-    "stream_merge_upsert" -> streamMergeUpsert,
-    "stream_lake_sink" -> streamLakeSink,
-    "stream_lake_upsert_eq" -> streamLakeUpsertEq,
-    "stream_lake_upsert_eq2" -> streamLakeUpsertEq2,
-    "stream_stream_left_join" -> streamStreamLeftJoin,
-    "stream_stream_full_join" -> streamStreamFullJoin,
-    "stream_stateful_latest" -> streamStatefulLatest,
-    "stream_dedup_keys" -> streamDedupKeys,
-    "stream_tumbling_counts" -> streamTumblingCounts,
-    "stream_sliding_counts" -> streamSlidingCounts,
-    "stream_windowed_topk" -> streamWindowedTopk,
-    "stream_static_join" -> streamStaticJoin,
-    "sessionize_events" -> sessionizeEvents)
-
-  val oracles: Map[String, String] = Map(
-    "stream_tws_running_agg" -> streamTwsRunningAggOracle,
-    "stream_stream_join" -> streamStreamJoinOracle,
-    "stream_foreach_batch_sink" -> streamForeachBatchSinkOracle,
-    "stream_merge_upsert" ->
-      graft.operators.Merge.mergeUpsertFirstSeenOracle,
-    "stream_lake_sink" -> streamLakeSinkOracle,
-    "stream_lake_upsert_eq" -> streamLakeUpsertEqOracle,
-    "stream_lake_upsert_eq2" -> streamLakeUpsertEq2Oracle,
-    "stream_stream_left_join" -> streamStreamLeftJoinOracle,
-    "stream_stream_full_join" -> streamStreamFullJoinOracle,
-    "stream_stateful_latest" -> streamStatefulLatestOracle,
-    "stream_dedup_keys" -> streamDedupKeysOracle,
-    "stream_tumbling_counts" -> streamTumblingCountsOracle,
-    "stream_sliding_counts" -> streamSlidingCountsOracle,
-    "stream_windowed_topk" -> streamWindowedTopkOracle,
-    "stream_static_join" -> streamStaticJoinOracle,
-    "stream_hist_quantile" -> streamHistQuantileOracle,
-    "stream_heavy_hitters" -> streamHeavyHittersOracle,
-    "stream_exact_distinct" -> streamExactDistinctOracle,
-    "sessionize_events" -> sessionizeEventsOracle)
+  val ops: Seq[Op] = Seq(
+    Op("stream_tws_running_agg", streamTwsRunningAgg,
+      streamTwsRunningAggOracle),
+    Op("stream_stream_join", streamStreamJoin, streamStreamJoinOracle),
+    Op("stream_hist_quantile", streamHistQuantile, streamHistQuantileOracle),
+    Op("stream_heavy_hitters", streamHeavyHitters, streamHeavyHittersOracle),
+    Op("stream_exact_distinct", streamExactDistinct, streamExactDistinctOracle),
+    Op("stream_foreach_batch_sink", streamForeachBatchSink,
+      streamForeachBatchSinkOracle),
+    Op("stream_merge_upsert", streamMergeUpsert,
+      graft.operators.Merge.mergeUpsertFirstSeenOracle),
+    Op("stream_lake_sink", streamLakeSink, streamLakeSinkOracle),
+    Op("stream_lake_upsert_eq", streamLakeUpsertEq, streamLakeUpsertEqOracle),
+    Op("stream_lake_upsert_eq2", streamLakeUpsertEq2,
+      streamLakeUpsertEq2Oracle),
+    Op("stream_stream_left_join", streamStreamLeftJoin,
+      streamStreamLeftJoinOracle),
+    Op("stream_stream_full_join", streamStreamFullJoin,
+      streamStreamFullJoinOracle),
+    Op("stream_stateful_latest", streamStatefulLatest,
+      streamStatefulLatestOracle),
+    Op("stream_dedup_keys", streamDedupKeys, streamDedupKeysOracle),
+    Op("stream_tumbling_counts", streamTumblingCounts,
+      streamTumblingCountsOracle),
+    Op("stream_sliding_counts", streamSlidingCounts, streamSlidingCountsOracle),
+    Op("stream_windowed_topk", streamWindowedTopk, streamWindowedTopkOracle),
+    Op("stream_static_join", streamStaticJoin, streamStaticJoinOracle),
+    Op("sessionize_events", sessionizeEvents, sessionizeEventsOracle))
 }

@@ -34,6 +34,19 @@ class RegistryGuardSpec extends SparkSpec {
       n -> q(spark, sf)
     }
 
+  test("registry: keys are distinct, every oracle belongs to a " +
+      "registered key, and only the two engine-specific sketches go " +
+      "unoracled") {
+    // a lost oracle would otherwise only drop its key to the driver's
+    // weaker rows-only check
+    val keys = SparkEntry.ops.map(_.key)
+    assert(keys.diff(keys.distinct).isEmpty,
+      s"keys registered twice: ${keys.diff(keys.distinct).mkString(", ")}")
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ===
+      Set("approx_count_distinct", "mm_codec_capabilities"))
+  }
+
   private def decimalsIn(dt: DataType, path: String): Seq[String] = dt match {
     case _: DecimalType => Seq(path)
     case s: StructType =>

@@ -6,19 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide session via getOrCreate;
   * suites may run in parallel threads). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // fixed port for ConnectServerSpec's in-process gRPC server (a
-      // SparkConf-level setting, so it must ride the shared context)
-      .config("spark.connect.grpc.binding.port", "15937")
-    graft.sources.Tables.sessionConf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.sources.Tables.session("4",
+    // fixed port for ConnectServerSpec's in-process gRPC server (a
+    // SparkConf-level setting, so it must ride the shared context)
+    extra = Map("spark.connect.grpc.binding.port" -> "15937"))
 
   /** Tiny-SF harness dir: specs exercise operators on real tables where
     * literal frames would be noise. */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -634,6 +635,41 @@ class DedupSimilaritySpec extends SparkSpec {
     val dense = labels(-1L)
     assert(dense === Map(1L -> 1L, 2L -> 1L, 0L -> 0L, 7L -> 0L))
     assert(labels(Long.MaxValue) === dense)
+  }
+
+  test("IVF nearest cell: the aggregate picks the cent_sim DESC, " +
+      "c_label ASC window's row, NaN similarities and ties included") {
+    // Spark and DuckDB both sort NaN above every double, so the
+    // window ranks a NaN similarity FIRST. Cell 2's centroid carries a
+    // NaN element (the mean over a label with one NaN vector): vector 4
+    // must land there, not in its best finite cell 0. Vector 5 has a
+    // NaN element itself, so all its similarities tie at NaN, and
+    // vector 2 is equidistant from cells 0 and 1: both ties go to the
+    // lower label.
+    val cents = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)),
+      (2, Seq(Double.NaN, 1.0))).toDF("c_label", "centroid")
+    val finite = Seq((1L, Seq(2.0, 1.0)), (2L, Seq(1.0, 1.0)),
+      (3L, Seq(0.5, 3.0))).toDF("vec_id", "embedding")
+    val withNaN = Seq((4L, Seq(2.0, 1.0)), (5L, Seq(Double.NaN, 1.0)))
+      .toDF("vec_id", "embedding")
+    val cand = finite.crossJoin(cents.where("c_label < 2"))
+      .union(withNaN.crossJoin(cents))
+      .selectExpr("vec_id", "c_label",
+        "aggregate(zip_with(embedding, centroid, (a, b) -> a * b), 0D, " +
+          "(acc, x) -> acc + x) / (" +
+          "sqrt(aggregate(embedding, 0D, (acc, x) -> acc + x * x)) * " +
+          "sqrt(aggregate(centroid, 0D, (acc, x) -> acc + x * x))) " +
+          "AS cent_sim")
+    val window = cand
+      .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
+        .orderBy(col("cent_sim").desc, col("c_label").asc)))
+      .where("rn = 1").select("vec_id", "c_label")
+      .as[(Long, Int)].collect().toMap
+    assert(window === Map(1L -> 0, 2L -> 0, 3L -> 1, 4L -> 2, 5L -> 0))
+    val agg = Similarity.nearestCell(cand, "c_label", "cent_sim")
+      .selectExpr("vec_id", "m.c_label")
+      .as[(Long, Int)].collect().toMap
+    assert(agg === window)
   }
 
   test("CC dense (shuffle-join) path matches the sparse (broadcast) path") {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Plan-shape pins for the round-13 TPC-H queries: the decorrelated
   * forms must plan as joins/aggregates of the RIGHT kind — semi/anti
@@ -11,7 +11,7 @@ import graft.SparkSpec
 class TpchSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    Tpch.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("EXISTS/nested-IN queries plan as left-semi joins " +
       "(Q4, Q20)") {
@@ -37,7 +37,7 @@ class TpchSpec extends SparkSpec {
 
   test("correlated scalar subqueries are decorrelated to aggregates " +
       "— no per-row subquery re-execution anywhere in the dial") {
-    for ((name, _) <- Tpch.queries) {
+    for (name <- Tpch.ops.map(_.key)) {
       val p = plan(name)
       assert(!p.contains("CartesianProduct"), s"$name: cartesian")
       // a surviving correlated subquery would plan as a
