@@ -34,9 +34,15 @@ object Jdbc {
     java.lang.Integer.toHexString(dir.hashCode)
 
   /** One embedded database per sf dir, living for the JVM's lifetime —
-    * the analog of the reference's always-on Postgres service. */
+    * the analog of the reference's always-on Postgres service. The
+    * name is absolute: a relative in-memory name lands under the JVM's
+    * working directory, which is exactly where Spark's in-memory Hive
+    * metastore URL (`jdbc:derby:memory:;databaseName=…`, whose
+    * `databaseName` Derby ignores) creates its own database — once a
+    * mirror exists there, the metastore fails with "Directory
+    * memory:<cwd> already exists" (XJ041) and retries. */
   private def url(dir: String): String =
-    s"jdbc:derby:memory:graft_${tag(dir)};create=true"
+    s"jdbc:derby:memory:/graft_jdbc/graft_${tag(dir)};create=true"
 
   private[sources] val derbyDriver =
     "org.apache.derby.iapi.jdbc.AutoloadedDriver"

@@ -866,9 +866,9 @@ class GraftLakeTable(private[sources] val tableName: String,
         .getOrElse(return None) // pre-stats shard: unknowable
       if (GraftLakeIO.rangeUnusable(r)) return None
       val keyNulls = parts.iterator.map { f =>
-        val (schema, rows, nulls) = GraftShardCodec.footerWithNulls(f)
-        if (!schema.containsField(shardKey)) rows
-        else nulls.getOrElse(shardKey, None).getOrElse(return None)
+        val s = GraftShardCodec.summary(f)
+        if (!s.schema.containsField(shardKey)) s.rows
+        else s.nulls.getOrElse(shardKey, None).getOrElse(return None)
       }.sum
       val verdicts = conjuncts.map { case (op, b) =>
         val (lo, hi) = (r.minL, r.maxL)
@@ -2227,11 +2227,11 @@ class GraftLakeScanBuilder(declared: StructType, dataDir: String,
     // from metadata at all — so their presence refuses every pushdown
     if (GraftLakeIO.readEqDel(vdir).nonEmpty) return None
     lazy val dv = GraftLakeIO.readDv(vdir)
-    // one footer read per shard PART, shared by every COUNT term
-    lazy val footers: Seq[(org.apache.parquet.schema.MessageType, Long,
-      Map[String, Option[Long]])] =
+    // one memoized footer summary per shard PART, shared by every
+    // COUNT term
+    lazy val footers: Seq[GraftShardCodec.PartSummary] =
       shards.flatMap(k => GraftLakeIO.shardParts(vdir, k))
-        .map(GraftShardCodec.footerWithNulls)
+        .map(GraftShardCodec.summary)
     def singleCol(e: org.apache.spark.sql.connector.expressions
         .Expression): Option[String] = e match {
       case r: NamedReference if r.fieldNames().length == 1 =>
@@ -2267,14 +2267,14 @@ class GraftLakeScanBuilder(declared: StructType, dataDir: String,
     val terms: Seq[(DataType, Any)] =
       agg.aggregateExpressions().toSeq.map {
         case _: CountStar =>
-          (LongType, java.lang.Long.valueOf(footers.map(_._2).sum -
+          (LongType, java.lang.Long.valueOf(footers.map(_.rows).sum -
             dv.valuesIterator.map(_.getCardinality.toLong).sum))
         case c: Count if !c.isDistinct =>
           if (dv.nonEmpty) return None
           val name = singleCol(c.column()).getOrElse(return None)
-          val n = footers.map { case (schema, rows, nulls) =>
-            if (!schema.containsField(name)) 0L // pre-ADD file: NULLs
-            else rows - nulls.getOrElse(name, None)
+          val n = footers.map { s =>
+            if (!s.schema.containsField(name)) 0L // pre-ADD file: NULLs
+            else s.rows - s.nulls.getOrElse(name, None)
               .getOrElse(return None)
           }.sum
           (LongType, java.lang.Long.valueOf(n))
@@ -2639,7 +2639,7 @@ class GraftLakeScan(required: StructType, vdir: java.io.File,
     * shard goes range-wide even when each individual part is narrow
     * (the time-correlated ingest shape — each appended part covers a
     * recent ts band). Here each part's own parquet-footer column
-    * statistics ([[GraftShardCodec.footerRanges]]) are checked
+    * statistics ([[GraftShardCodec.summary]]) are checked
     * against the same conjuncts: a part that provably holds no
     * matching row — range-missed, the column ALL-NULL, or the column
     * absent from the part's schema entirely (pre-ADD history, reads
@@ -2659,20 +2659,17 @@ class GraftLakeScan(required: StructType, vdir: java.io.File,
     val bases = Seq.newBuilder[Long]
     val metaCols = Set("_shard", "_pos")
     all.foreach { f =>
-      val (schema, rows) = GraftShardCodec.footer(f)
+      val s = GraftShardCodec.summary(f)
       val conjuncts = zoneConjuncts.filterNot(c => metaCols(c._1))
-      val mayMatch = conjuncts.isEmpty || {
-        lazy val (ranges, allNull) = GraftShardCodec.footerRanges(f)
-        conjuncts.forall { case (name, op, lit) =>
-          if (!schema.containsField(name)) false // reads as NULL
-          else ranges.get(name) match {
-            case Some(rg) => GraftLakeIO.rangeMayMatch(rg, op, lit)
-            case None => !allNull.contains(name) // no stats: never skip
-          }
+      val mayMatch = conjuncts.forall { case (name, op, lit) =>
+        if (!s.schema.containsField(name)) false // reads as NULL
+        else s.ranges.get(name) match {
+          case Some(rg) => GraftLakeIO.rangeMayMatch(rg, op, lit)
+          case None => !s.allNull.contains(name) // no stats: never skip
         }
       }
       if (mayMatch) { keep += f; bases += base }
-      base += rows
+      base += s.rows
     }
     (keep.result(), bases.result())
   }
@@ -4118,6 +4115,7 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
               u.toString))
             if (bloomSet.contains(f.name))
               GraftLakeBloom.addUtf8(bloomBuf(k, f.name), u)
+          case BooleanType => g.add(f.name, row.getBoolean(i))
           case other => throw new IllegalArgumentException(
             s"unsupported lake type for ${f.name}: $other")
         }

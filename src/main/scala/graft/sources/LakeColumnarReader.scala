@@ -143,11 +143,7 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
       nullPartRemaining = rows
     } else {
       nullPartRemaining = 0L
-      vr = new VectorizedParquetRecordReader(
-        null, "CORRECTED", "UTC", "CORRECTED", "UTC",
-        /* useOffHeap = */ false, Capacity)
-      vr.initialize(f.getPath,
-        scala.jdk.CollectionConverters.SeqHasAsJava(present).asJava)
+      vr = GraftShardCodec.openVectorized(f, fileSchema, present, Capacity)
       // allocate the batch vectors (nextBatch requires it; no
       // partition columns — _shard rides as a constant vector instead)
       vr.initBatch(new StructType(), InternalRow.empty)

@@ -616,7 +616,7 @@ object GraftLakeMaintenance {
     * (Iceberg `rewrite_data_files` bin-packing): shards that
     * accumulated more than `maxParts` part files from append commits
     * merge ADJACENT runs of identical-schema parts into one file by
-    * raw row-group concatenation (`ParquetFileWriter.appendFile` —
+    * raw row-group concatenation (`GraftShardCodec.mergeShardFiles` —
     * byte movement, zero decode); schema boundaries stay part
     * boundaries (evolution state preserved, still no re-encode
     * anywhere). Raw append preserves row order, so the shard's

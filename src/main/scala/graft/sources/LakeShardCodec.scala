@@ -1,14 +1,25 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetReadSupport, ParquetToSparkSchemaConverter,
+  VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
   GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter,
-  ParquetReader, ParquetWriter}
+  ParquetInputFormat, ParquetReader, ParquetWriter}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -36,7 +47,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   *  - ENCODED + COMPRESSED pages (dictionary + snappy) instead of
   *    decimal-rendered text;
   *  - APPEND WITHOUT RE-ENCODE: commit-time shard merging copies raw
-  *    row groups ([[ParquetFileWriter.appendFile]]) when schemas
+  *    row groups ([[ParquetFileReader.appendTo]]) when schemas
   *    match — I/O-bound byte movement, the same cost class as the old
   *    text concatenation — and falls back to a Group-level re-encode
   *    only for schema-evolved bases ([[mergeShardFiles]]).
@@ -48,9 +59,9 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   * without opening them.
   *
   * Types are the lake's declared SQL surface (BIGINT, INT, DATE,
-  * DOUBLE, STRING) mapped to canonical parquet physical+logical
-  * types, so external tools could read the shards as ordinary
-  * parquet. */
+  * DOUBLE, STRING, TIMESTAMP, BOOLEAN) mapped to canonical parquet
+  * physical+logical types, so external tools could read the shards as
+  * ordinary parquet. */
 object GraftShardCodec {
 
   /** Canonical parquet schema of a shard file: every declared column
@@ -100,9 +111,32 @@ object GraftShardCodec {
     * few shards; at the demo scale the bound alone is plenty. */
   val RowGroupBytes: Long = 16L * 1024 * 1024
 
+  /** The one Hadoop conf every shard and lake-part open reads: Hadoop's
+    * defaults, parsed once per JVM. A fresh `Configuration` re-parses
+    * `core-default.xml` out of the Hadoop jar on first use (~2.6 ms
+    * warm, against ~0.08 ms to clone a loaded one), and parquet-mr's
+    * convenience entry points build one per open — that parse was a
+    * fifth of `ingest_mix`'s CPU samples (JFR). The properties are
+    * forced here, before publication, and no open mutates the conf:
+    * opens that carry per-file keys (a read schema, Spark's requested
+    * row schema) set them on their own clone. */
+  lazy val conf: Configuration = {
+    val c = new Configuration()
+    c.size(): Unit
+    c
+  }
+
+  /** A footer/row-group reader over `file` on the shared conf. The
+    * options are built per open: they carry a codec factory whose
+    * caches are not thread-safe, and the reader releases it on close. */
+  private def openFile(file: java.io.File): ParquetFileReader =
+    ParquetFileReader.open(new LocalInputFile(file.toPath),
+      HadoopReadOptions.builder(conf).build())
+
   def openWriter(file: java.io.File,
       schema: MessageType): ParquetWriter[Group] =
     ExampleParquetWriter.builder(new LocalOutputFile(file.toPath))
+      .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(RowGroupBytes)
@@ -111,21 +145,32 @@ object GraftShardCodec {
   def groupFactory(schema: MessageType): SimpleGroupFactory =
     new SimpleGroupFactory(schema)
 
+  /** Everything a planner reads from one part's footer: schema, total
+    * rows, per-column null counts summed across row groups
+    * (`Some(nulls)` when every chunk of that column carries one, None
+    * otherwise — then callers must fall back to reading pages), and
+    * the per-part zone ranges with the columns that are ALL-NULL in
+    * this file. */
+  final case class PartSummary(schema: MessageType, rows: Long,
+      nulls: Map[String, Option[Long]],
+      ranges: Map[String, GraftLakeIO.ColRange], allNull: Set[String])
+
   /** Published shard parts are IMMUTABLE (commits only ever hardlink
-    * or create files), so footer metadata is memoized on the file's
-    * identity — (fileKey = device+inode, size, mtime) — across paths,
-    * versions, and queries. Without this, every commit's live-row
-    * stamp and every scan's statistics estimate would re-open O(total
-    * parts) footers: measured super-linear append-commit cost as
-    * parts accumulate (BenchDml). Bounded LRU; hardlinked copies of
+    * or create files), so the footer summary is memoized on the
+    * file's identity — (fileKey = device+inode, size, mtime) — across
+    * paths, versions, and queries: one small tail read per part, ever.
+    * Without this, every commit's live-row stamp, every scan's
+    * statistics estimate and every `count(*)` pushdown would re-open
+    * O(total parts) footers: measured super-linear append-commit cost
+    * as parts accumulate (BenchDml). Bounded LRU; hardlinked copies of
     * one part share the entry (same inode). The mtime term guards the
     * rare inode-reuse-after-delete case. */
-  private val footerMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Object, Long, Long),
-      (MessageType, Long)](256, 0.75f, /* accessOrder = */ true) {
+  private val summaryMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(Object, Long, Long), PartSummary](256,
+      0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Object, Long, Long),
-            (MessageType, Long)]): Boolean = size() > 8192
+          e: java.util.Map.Entry[(Object, Long, Long), PartSummary])
+          : Boolean = size() > 8192
     })
 
   private def identityKey(file: java.io.File): (Object, Long, Long) = {
@@ -134,80 +179,36 @@ object GraftShardCodec {
     (a.fileKey(), a.size(), a.lastModifiedTime().toMillis)
   }
 
-  /** Footer-only metadata of a shard file: (schema, total row count).
-    * At most one small tail read per immutable part — memoized on
-    * file identity, never touches data pages. */
-  def footer(file: java.io.File): (MessageType, Long) = {
+  /** The memoized footer summary of a shard part; never touches data
+    * pages. */
+  def summary(file: java.io.File): PartSummary = {
     val key = identityKey(file)
-    val hit = footerMemo.get(key)
+    val hit = summaryMemo.get(key)
     if (hit != null) return hit
-    val r = ParquetFileReader.open(new LocalInputFile(file.toPath))
-    try {
-      val md = r.getFooter
-      val n = md.getBlocks.stream().mapToLong(_.getRowCount).sum()
-      val v = (md.getFileMetaData.getSchema, n)
-      footerMemo.put(key, v): Unit
-      v
-    } finally r.close()
+    val r = openFile(file)
+    val v = try summarize(r.getFooter) finally r.close()
+    summaryMemo.put(key, v): Unit
+    v
   }
 
-  /** Footer-only metadata PLUS per-column null counts summed across
-    * row groups: (schema, total rows, column name -> Some(nulls) when
-    * every chunk of that column carries a null count in its
-    * statistics, None otherwise). parquet-mr stamps chunk statistics
-    * (min/max/nulls) at write time, so `None` only appears for files
-    * produced by stats-suppressing writers — callers must then fall
-    * back to reading pages. One small tail read, no data pages. */
-  def footerWithNulls(file: java.io.File)
-      : (MessageType, Long, Map[String, Option[Long]]) = {
-    val r = ParquetFileReader.open(new LocalInputFile(file.toPath))
-    try {
-      val md = r.getFooter
-      val schema = md.getFileMetaData.getSchema
-      var rows = 0L
-      val nulls = scala.collection.mutable.Map[String, Option[Long]]()
-      md.getBlocks.forEach { b =>
-        rows += b.getRowCount
-        b.getColumns.forEach { c =>
-          val name = c.getPath.toDotString
-          val st = c.getStatistics
-          val chunk =
-            if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
-            else None
-          nulls.update(name, (nulls.getOrElse(name, Some(0L)), chunk)
-            match {
-              case (Some(a), Some(b2)) => Some(a + b2)
-              case _ => None
-            })
-        }
-      }
-      (schema, rows, nulls.toMap)
-    } finally r.close()
+  /** (schema, total row count) of a shard part — [[summary]]'s two
+    * most-asked fields. */
+  def footer(file: java.io.File): (MessageType, Long) = {
+    val s = summary(file)
+    (s.schema, s.rows)
   }
 
-  private val rangesMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Object, Long, Long),
-      (Map[String, GraftLakeIO.ColRange], Set[String])](256, 0.75f,
-      /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Object, Long, Long),
-            (Map[String, GraftLakeIO.ColRange], Set[String])])
-          : Boolean = size() > 8192
-    })
-
-  /** PER-PART zone ranges from the parquet footer's OWN column-chunk
-    * statistics (parquet-mr stamps min/max/nulls at write time):
-    * `(column -> merged range across row groups, columns that are
-    * ALL-NULL in this file)`. The shard-level `_stats.json` merges
-    * every part's values, so an append-heavy shard's ranges go wide;
-    * these per-part ranges are what lets a scan skip the COLD PARTS
-    * of a planned shard (a time-correlated append stream leaves each
-    * part covering a narrow ts band). Memoized on file identity like
-    * [[footer]] — one small tail read per immutable part, ever.
+  /** Per-part zone ranges come from the footer's OWN column-chunk
+    * statistics (parquet-mr stamps min/max/nulls at write time). The
+    * shard-level `_stats.json` merges every part's values, so an
+    * append-heavy shard's ranges go wide; these per-part ranges are
+    * what lets a scan skip the COLD PARTS of a planned shard (a
+    * time-correlated append stream leaves each part covering a narrow
+    * ts band).
     *
     * Conservatism ledger (a part skip must never lose rows):
-    *  - a column is in the map ONLY when every row group's chunk has
-    *    usable stats — any statless/foreign chunk drops it (never
+    *  - a column is in the range map ONLY when every row group's chunk
+    *    has usable stats — any statless/foreign chunk drops it (never
     *    skip);
     *  - DOUBLE/FLOAT never enter (parquet writers' NaN-in-stats
     *    behavior is not uniformly trustworthy — same refusal as the
@@ -217,82 +218,76 @@ object GraftShardCodec {
     *    rule);
     *  - all-NULL columns are reported separately: a null-rejecting
     *    conjunct on one proves the part row-free for that scan. */
-  def footerRanges(file: java.io.File)
-      : (Map[String, GraftLakeIO.ColRange], Set[String]) = {
-    val key = identityKey(file)
-    val hit = rangesMemo.get(key)
-    if (hit != null) return hit
-    val r = ParquetFileReader.open(new LocalInputFile(file.toPath))
-    try {
-      // per column: (unusable, merged range or null, any non-null
-      // chunk seen)
-      val acc = scala.collection.mutable.LinkedHashMap[String,
-        (Boolean, GraftLakeIO.ColRange, Boolean)]()
-      r.getFooter.getBlocks.forEach { b =>
-        b.getColumns.forEach { c =>
-          val name = c.getPath.toDotString
-          val st = c.getStatistics
-          val prev = acc.getOrElse(name, (false, null, false))
-          val next =
-            if (prev._1 || st == null) (true, null, false)
-            else if (st.hasNonNullValue) {
-              val tn = c.getPrimitiveType.getPrimitiveTypeName
-              val isStr = c.getPrimitiveType
-                .getLogicalTypeAnnotation != null &&
-                c.getPrimitiveType.getLogicalTypeAnnotation.toString
-                  .toLowerCase(java.util.Locale.ROOT)
-                  .startsWith("string")
-              val chunk: GraftLakeIO.ColRange = tn match {
-                case org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.INT64 =>
+  private def summarize(md: org.apache.parquet.hadoop.metadata
+      .ParquetMetadata): PartSummary = {
+    var rows = 0L
+    val nulls = scala.collection.mutable.Map[String, Option[Long]]()
+    // per column: (unusable, merged range or null, any non-null
+    // chunk seen)
+    val acc = scala.collection.mutable.LinkedHashMap[String,
+      (Boolean, GraftLakeIO.ColRange, Boolean)]()
+    md.getBlocks.forEach { b =>
+      rows += b.getRowCount
+      b.getColumns.forEach { c =>
+        val name = c.getPath.toDotString
+        val st = c.getStatistics
+        val chunkNulls =
+          if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
+          else None
+        nulls.update(name, (nulls.getOrElse(name, Some(0L)), chunkNulls)
+          match {
+            case (Some(a), Some(b2)) => Some(a + b2)
+            case _ => None
+          })
+        val prev = acc.getOrElse(name, (false, null, false))
+        val next =
+          if (prev._1 || st == null) (true, null, false)
+          else if (st.hasNonNullValue) {
+            val pt = c.getPrimitiveType
+            val isStr = pt.getLogicalTypeAnnotation != null &&
+              pt.getLogicalTypeAnnotation.toString
+                .toLowerCase(java.util.Locale.ROOT).startsWith("string")
+            val chunk: GraftLakeIO.ColRange =
+              pt.getPrimitiveTypeName match {
+                case PrimitiveTypeName.INT64 =>
                   val lo = st.genericGetMin
                     .asInstanceOf[java.lang.Long].longValue()
                   val hi = st.genericGetMax
                     .asInstanceOf[java.lang.Long].longValue()
                   GraftLakeIO.ColRange(isFloat = false, lo, hi,
                     lo.toDouble, hi.toDouble)
-                case org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.INT32 =>
+                case PrimitiveTypeName.INT32 =>
                   val lo = st.genericGetMin
                     .asInstanceOf[java.lang.Integer].longValue()
                   val hi = st.genericGetMax
                     .asInstanceOf[java.lang.Integer].longValue()
                   GraftLakeIO.ColRange(isFloat = false, lo, hi,
                     lo.toDouble, hi.toDouble)
-                case org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.BINARY if isStr =>
+                case PrimitiveTypeName.BINARY if isStr =>
                   GraftLakeIO.ColRange.ofString(st.genericGetMin
-                      .asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .toStringUsingUTF8)
-                    .merge(GraftLakeIO.ColRange.ofString(st
-                      .genericGetMax
-                      .asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .toStringUsingUTF8))
+                      .asInstanceOf[Binary].toStringUsingUTF8)
+                    .merge(GraftLakeIO.ColRange.ofString(st.genericGetMax
+                      .asInstanceOf[Binary].toStringUsingUTF8))
                 case _ => null // DOUBLE/FLOAT/other: never skip
               }
-              if (chunk == null || GraftLakeIO.rangeUnusable(chunk))
-                (true, null, false)
-              else (false,
-                if (prev._2 == null) chunk else prev._2.merge(chunk),
-                true)
-            } else if (st.isNumNullsSet &&
-              st.getNumNulls == b.getRowCount)
-              prev // all-null chunk: contributes nothing, stays sound
-            else (true, null, false)
-          acc.update(name, next)
-        }
+            if (chunk == null || GraftLakeIO.rangeUnusable(chunk))
+              (true, null, false)
+            else (false,
+              if (prev._2 == null) chunk else prev._2.merge(chunk),
+              true)
+          } else if (st.isNumNullsSet && st.getNumNulls == b.getRowCount)
+            prev // all-null chunk: contributes nothing, stays sound
+          else (true, null, false)
+        acc.update(name, next)
       }
-      val ranges = acc.collect {
-        case (n, (false, rg, true)) if rg != null &&
-          !GraftLakeIO.rangeUnusable(rg) => n -> rg
-      }.toMap
-      val allNull = acc.collect {
-        case (n, (false, null, false)) => n
-      }.toSet
-      val v = (ranges, allNull)
-      rangesMemo.put(key, v): Unit
-      v
-    } finally r.close()
+    }
+    val ranges = acc.collect {
+      case (n, (false, rg, true)) if rg != null &&
+        !GraftLakeIO.rangeUnusable(rg) => n -> rg
+    }.toMap
+    val allNull = acc.collect { case (n, (false, null, false)) => n }.toSet
+    PartSummary(md.getFileMetaData.getSchema, rows, nulls.toMap, ranges,
+      allNull)
   }
 
   /** The projection actually readable from `file`: the requested
@@ -310,17 +305,65 @@ object GraftShardCodec {
     b.named(fileSchema.getName)
   }
 
+  /** A Group reader over `file` decoding `projection`: a per-call
+    * clone of [[conf]] carries the read schema. */
   def openReader(file: java.io.File,
       projection: MessageType): ParquetReader[Group] = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport
-      .PARQUET_READ_SCHEMA, projection.toString)
-    ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(file.getPath))
-      .withConf(conf)
-      .build()
+    val c = new Configuration(conf)
+    c.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
+    new ParquetReader.Builder[Group](new LocalInputFile(file.toPath),
+        new HadoopParquetConfiguration(c)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
   }
+
+  /** Spark's vectorized reader over `file`, decoding `names` (each
+    * present in `fileSchema`; batch column i is `names(i)`). Opened the
+    * way Spark's own parquet source opens a file — split plus task
+    * context over a per-part clone of [[conf]] — because the
+    * `initialize(path, columns)` convenience overload builds a fresh
+    * `Configuration` per call. The clone carries what that overload
+    * set: the five schema-conversion switches off, Spark's read
+    * support, and the requested row schema. */
+  def openVectorized(file: java.io.File, fileSchema: MessageType,
+      names: Seq[String], capacity: Int): VectorizedParquetRecordReader = {
+    val c = new Configuration(conf)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => c.setBoolean(e.key, false))
+    c.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      new ParquetToSparkSchemaConverter(c)
+        .convert(projectionFor(fileSchema, names)).json)
+    val vr = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC",
+      /* useOffHeap = */ false, capacity)
+    try vr.initialize(
+      new FileSplit(new Path(file.getPath), 0L, file.length(),
+        Array.empty[String]),
+      taskContext(c))
+    catch { case e: Throwable => vr.close(); throw e }
+    vr
+  }
+
+  /** A task context that answers only `getConfiguration`, all Spark's
+    * reader asks of it. Hadoop's `TaskAttemptContextImpl` wraps its
+    * conf in a `JobConf`, whose class init adds mapred- and
+    * yarn-default.xml to every default-loading conf in the JVM: every
+    * later `new Configuration()` (Spark still builds some per query)
+    * would then parse three XML files instead of one. */
+  private def taskContext(c: Configuration): TaskAttemptContext =
+    java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[TaskAttemptContext]),
+      (_: AnyRef, m: java.lang.reflect.Method, _: Array[AnyRef]) =>
+        if (m.getName == "getConfiguration") c
+        else throw new UnsupportedOperationException(
+          s"TaskAttemptContext.${m.getName}")
+    ).asInstanceOf[TaskAttemptContext]
 
   /** One field of a Group as the JVM value the lake's InternalRows
     * carry (java.lang boxes + UTF8String); null when unset. `idx` is
@@ -440,8 +483,10 @@ object GraftShardCodec {
         ParquetFileWriter.Mode.CREATE, RowGroupBytes,
         /* maxPaddingSize = parquet's default */ 8388608)
       w.start()
-      sources.foreach(f =>
-        w.appendFile(new LocalInputFile(f.toPath)))
+      sources.foreach { f =>
+        val r = openFile(f)
+        try r.appendTo(w) finally r.close()
+      }
       w.end(java.util.Collections.emptyMap[String, String]())
     } else {
       val kinds: Seq[(String, PrimitiveTypeName, Boolean)] =

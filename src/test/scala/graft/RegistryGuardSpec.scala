@@ -269,6 +269,73 @@ class RegistryGuardSpec extends SparkSpec {
       s"memo protocol or rmTree outside Memo: ${offenders.mkString(", ")}")
   }
 
+  /** Parquet opens in `src` that bypass the codec's shared Hadoop
+    * conf: each either parses Hadoop's XML defaults per call or opens
+    * a file on default options. */
+  private def confBypasses(src: String): Seq[(Int, String)] = {
+    // top-level argument count of the call whose '(' ends at `at`
+    def arity(at: Int): Int = {
+      var depth = 1
+      var commas = 0
+      var blank = true
+      var i = at
+      while (i < src.length && depth > 0) {
+        val c = src.charAt(i)
+        if ("([{".indexOf(c) >= 0) depth += 1
+        else if (")]}".indexOf(c) >= 0) depth -= 1
+        else if (c == ',' && depth == 1) commas += 1
+        if (depth > 0 && !c.isWhitespace) blank = false
+        i += 1
+      }
+      if (blank) 0 else commas + 1
+    }
+    def calls(token: String, n: Int => Boolean): Seq[Int] =
+      java.util.regex.Pattern.quote(token).r.findAllMatchIn(src)
+        .map(_.start).filter(i => n(arity(i + token.length))).toSeq
+    val defaults =
+      raw"new (org\.apache\.hadoop\.conf\.)?Configuration\(\s*(true)?\s*\)"
+        .r.findAllMatchIn(src).map(_.start).toSeq
+    val hits =
+      defaults.map(_ -> "new Configuration()") ++
+        calls("ParquetFileReader.open(", _ == 1)
+          .map(_ -> "one-argument ParquetFileReader.open") ++
+        calls("ParquetReader.builder(", _ => true)
+          .map(_ -> "ParquetReader.builder") ++
+        calls("appendFile(", _ == 1).map(_ -> "one-argument appendFile") ++
+        (if (!src.contains("VectorizedParquetRecordReader")) Nil
+        else calls(".initialize(", _ == 2)
+          .map(_ -> "two-argument vectorized initialize"))
+    hits.map { case (at, what) =>
+      (src.substring(0, at).count(_ == '\n') + 1, what)
+    }
+  }
+
+  test("source lint: Parquet and Hadoop-conf opens go through " +
+      "GraftShardCodec's one parsed conf") {
+    // the lint itself catches every form it names
+    Seq("new Configuration()", "new Configuration(true)",
+      "new org.apache.hadoop.conf.Configuration()",
+      "ParquetFileReader.open(new LocalInputFile(p))",
+      "ParquetReader.builder(rs, path)",
+      "w.appendFile(new LocalInputFile(f.toPath))",
+      "var r: VectorizedParquetRecordReader = x; r.initialize(p, cols)")
+      .foreach(bad => assert(confBypasses(bad).nonEmpty, bad))
+    Seq("new Configuration(false)", "new Configuration(shared)",
+      "ParquetFileReader.open(in, opts)", "w.appendFile(conf, path)",
+      "super.initialize(name, options)")
+      .foreach(ok => assert(confBypasses(ok).isEmpty, ok))
+    val offenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      if f.getName != "LakeShardCodec.scala"
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      (line, what) <- confBypasses(src)
+    } yield s"${f.getName}:$line ($what)"
+    assert(offenders.isEmpty,
+      s"Parquet/Hadoop-conf opens outside GraftShardCodec (use its " +
+        s"shared conf): ${offenders.mkString(", ")}")
+  }
+
   test("ORDER BY keys totally order every oracled result on the " +
       "harness data") {
     val offenders = scala.collection.mutable.ArrayBuffer[String]()

@@ -148,4 +148,126 @@ class LakeColumnarSpec extends SparkSpec {
     assert(got === expect)
     spark.sql(s"DROP TABLE $tbl")
   }
+
+  /** Each row as comparable values: doubles by their bits, so NaN
+    * equals NaN and -0.0 differs from 0.0. */
+  private def canon(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+    rows.toSeq.map(_.toSeq.map {
+      case d: Double => s"d${java.lang.Double.doubleToLongBits(d)}"
+      case null => "null"
+      case v => s"${v.getClass.getSimpleName}:$v"
+    }.mkString("|")).sorted
+
+  private val typedRows = """SELECT id AS user_id,
+      CASE WHEN id % 11 = 0 THEN NULL
+        ELSE CAST(id * 7 % 1000 - 500 AS INT) END AS i,
+      CASE WHEN id % 13 = 0 THEN NULL
+        ELSE date_add(DATE '1960-01-01', CAST(id * 37 % 40000 AS INT))
+        END AS d,
+      CASE id % 9 WHEN 0 THEN double('NaN') WHEN 1 THEN double('0.0')
+        WHEN 2 THEN double('-0.0') WHEN 3 THEN NULL
+        WHEN 4 THEN double('Infinity') WHEN 5 THEN double('-Infinity')
+        ELSE CAST(id AS DOUBLE) / 7 END AS x,
+      CASE id % 5 WHEN 0 THEN NULL WHEN 1 THEN ''
+        WHEN 2 THEN concat('héllo 世界 😀 ', id)
+        ELSE CAST(id AS STRING) END AS s,
+      CASE WHEN id % 17 = 0 THEN NULL
+        ELSE timestamp_micros(id * 86400000123 - 2000000000000000) END
+        AS ts,
+      CASE id % 3 WHEN 0 THEN NULL ELSE id % 2 = 0 END AS b"""
+
+  test("the columnar path returns the row path's rows: every lake " +
+      "type (NaN, ±0.0, infinities, nulls), equality-deleted and " +
+      "DV-masked shards, and parts predating an ADD COLUMN") {
+    Lake.registerCatalog(spark)
+    val rowPath = spark.newSession()
+    Lake.registerCatalog(rowPath)
+    rowPath.conf.set("spark.graft.lake.columnar", "false")
+    val tbl = "graft_lake.lake.spec_colnar_eq"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"""CREATE TABLE $tbl (user_id BIGINT, i INT, d DATE,
+      x DOUBLE, s STRING, ts TIMESTAMP, b BOOLEAN)
+      TBLPROPERTIES ('shard_key'='user_id', 'n_shards'='2',
+        'delete_mode'='merge-on-read',
+        'write_upsert'='equality-delete')""")
+    val reads = Seq(
+      s"SELECT * FROM $tbl",
+      s"SELECT x, s, b FROM $tbl", // upsert key decoded, projected out
+      s"SELECT user_id, d, ts FROM $tbl WHERE i > 0")
+    def sameOnBothPaths(state: String): Unit = reads.foreach { q =>
+      val col = spark.sql(q)
+      assert(hasColumnarLakeScan(col), s"$state: $q must decode columnar")
+      assert(!hasColumnarLakeScan(rowPath.sql(q)),
+        s"$state: $q must take the row path with columnar off")
+      val got = canon(col.collect())
+      assert(got.nonEmpty)
+      assert(got === canon(rowPath.sql(q).collect()), s"$state: $q")
+    }
+
+    spark.sql(s"INSERT INTO $tbl $typedRows FROM range(10000)")
+    sameOnBothPaths("typed")
+    // upsert every 10th key: older versions die by equality delete
+    spark.sql(s"""INSERT INTO $tbl SELECT user_id, i + 1, d, x, s, ts, b
+      FROM ($typedRows FROM range(0, 10000, 10))""")
+    sameOnBothPaths("equality-deleted")
+    // merge-on-read DELETE: deletion-vector positions in every part
+    spark.sql(s"DELETE FROM $tbl WHERE user_id % 20 = 3")
+    sameOnBothPaths("DV-masked")
+    spark.sql(s"ALTER TABLE $tbl ADD COLUMN tag STRING")
+    spark.sql(s"""INSERT INTO $tbl SELECT *, concat('t', user_id) FROM
+      ($typedRows FROM range(10000, 10100))""")
+    sameOnBothPaths("evolved")
+    assert(spark.sql(s"SELECT count(tag) FROM $tbl").head().getLong(0) ===
+      100L, "parts predating ADD COLUMN serve NULL tags")
+    spark.sql(s"DROP TABLE $tbl")
+  }
+
+  test("8 threads reading different projections of one table at " +
+      "once each get their single-threaded answer; the shared Hadoop " +
+      "conf stays untouched") {
+    Lake.registerCatalog(spark)
+    val tbl = "graft_lake.lake.spec_colnar_conc"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"""CREATE TABLE $tbl (user_id BIGINT, i INT, d DATE,
+      x DOUBLE, s STRING, ts TIMESTAMP, b BOOLEAN)
+      TBLPROPERTIES ('shard_key'='user_id', 'n_shards'='4')""")
+    // three appends: several parts per shard
+    Seq(0 -> 3000, 3000 -> 6000, 6000 -> 9000).foreach { case (lo, hi) =>
+      spark.sql(s"INSERT INTO $tbl $typedRows FROM range($lo, $hi)")
+    }
+    val projections = Seq(Seq("user_id"), Seq("i"), Seq("d", "x"),
+      Seq("s"), Seq("ts", "b"), Seq("x", "s", "i"), Seq("b", "user_id"),
+      Seq("user_id", "i", "d", "x", "s", "ts", "b"))
+    def read(cols: Seq[String]) = {
+      val df = spark.table(tbl).select(cols.map(col): _*)
+      assert(hasColumnarLakeScan(df), s"$cols must decode columnar")
+      canon(df.collect())
+    }
+    val expect = projections.map(read)
+    val shared = GraftShardCodec.conf
+    def snapshot: Map[String, String] = {
+      val m = Map.newBuilder[String, String]
+      shared.forEach(e => m += e.getKey -> e.getValue)
+      m.result()
+    }
+    val before = snapshot
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = projections.map { cols =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Seq[String]]] {
+          override def call(): Seq[Seq[String]] = (1 to 3).map(_ => read(cols))
+        })
+      }
+      futures.zip(projections).zip(expect).foreach {
+        case ((f, cols), want) =>
+          f.get().foreach(got => assert(got === want, s"$cols"))
+      }
+    } finally pool.shutdown()
+    assert(shared.get(org.apache.spark.sql.execution.datasources.parquet
+      .ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA) === null)
+    assert(shared.get(org.apache.parquet.hadoop.api.ReadSupport
+      .PARQUET_READ_SCHEMA) === null)
+    assert(snapshot === before, "a read mutated the shared conf")
+    spark.sql(s"DROP TABLE $tbl")
+  }
 }

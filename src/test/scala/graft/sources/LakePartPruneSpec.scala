@@ -5,7 +5,7 @@ import java.io.File
 import graft.SparkSpec
 
 /** Part-level pruning inside planned shards via parquet footer
-  * statistics ([[GraftShardCodec.footerRanges]]): an append-heavy
+  * statistics ([[GraftShardCodec.summary]]): an append-heavy
   * shard whose parts each cover a narrow band (the time-correlated
   * ingest shape) reads ONLY the parts the predicate can touch, while
   * `_pos` row ids and deletion-vector masking stay exact because
