@@ -741,6 +741,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => GraftStrategies)
     e.injectPlannerStrategy(SinglePartitionScans(_))
+    e.injectQueryStagePrepRule(_ => SinglePartitionJoins)
+    e.injectOptimizerRule(_ => FoldConstantGeneratorJoins)
     // lake-catalog VIEW SQL (vanilla Spark doesn't wire DSv2 views —
     // the extension supplies the parser + resolution, Iceberg-style)
     e.injectParser((_, delegate) =>

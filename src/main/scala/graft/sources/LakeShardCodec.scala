@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
@@ -119,7 +121,8 @@ object GraftShardCodec {
     * fifth of `ingest_mix`'s CPU samples (JFR). The properties are
     * forced here, before publication, and no open mutates the conf:
     * opens that carry per-file keys (a read schema, Spark's requested
-    * row schema) set them on their own clone. */
+    * row schema) set them on a clone ([[vectorizedConf]] keeps one per
+    * requested schema). */
   lazy val conf: Configuration = {
     val c = new Configuration()
     c.size(): Unit
@@ -165,13 +168,16 @@ object GraftShardCodec {
     * as parts accumulate (BenchDml). Bounded LRU; hardlinked copies of
     * one part share the entry (same inode). The mtime term guards the
     * rare inode-reuse-after-delete case. */
-  private val summaryMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Object, Long, Long), PartSummary](256,
-      0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Object, Long, Long), PartSummary])
-          : Boolean = size() > 8192
-    })
+  private val summaryMemo = lru[(Object, Long, Long), PartSummary](8192)
+
+  /** A synchronized map that drops its least recently used entry past
+    * `cap` entries. */
+  private def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, /* accessOrder = */ true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V])
+            : Boolean = size() > cap
+      })
 
   private def identityKey(file: java.io.File): (Object, Long, Long) = {
     val a = java.nio.file.Files.readAttributes(file.toPath,
@@ -318,16 +324,10 @@ object GraftShardCodec {
     }.build()
   }
 
-  /** Spark's vectorized reader over `file`, decoding `names` (each
-    * present in `fileSchema`; batch column i is `names(i)`). Opened the
-    * way Spark's own parquet source opens a file — split plus task
-    * context over a per-part clone of [[conf]] — because the
-    * `initialize(path, columns)` convenience overload builds a fresh
-    * `Configuration` per call. The clone carries what that overload
-    * set: the five schema-conversion switches off, Spark's read
-    * support, and the requested row schema. */
-  def openVectorized(file: java.io.File, fileSchema: MessageType,
-      names: Seq[String], capacity: Int): VectorizedParquetRecordReader = {
+  /** [[conf]] plus what the vectorized reader's `initialize(path,
+    * columns)` convenience overload would set: the five
+    * schema-conversion switches off and Spark's read support. */
+  private lazy val vectorizedBase: Configuration = {
     val c = new Configuration(conf)
     Seq(SQLConf.PARQUET_BINARY_AS_STRING,
       SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
@@ -336,9 +336,38 @@ object GraftShardCodec {
       .foreach(e => c.setBoolean(e.key, false))
     c.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
-      new ParquetToSparkSchemaConverter(c)
-        .convert(projectionFor(fileSchema, names)).json)
+    c
+  }
+
+  /** One read-only conf per requested row schema (its JSON): a table
+    * has a handful of projections, so cloning the whole conf on every
+    * part open only rebuilt the same few. Spark's split-based
+    * `initialize` and parquet-mr's read options only read the conf.
+    * Bounded LRU beside [[summaryMemo]]. */
+  private val vectorizedConfs = lru[String, Configuration](256)
+
+  private def vectorizedConf(requestedSchema: String): Configuration =
+    vectorizedConfs.computeIfAbsent(requestedSchema, { json =>
+      val c = new Configuration(vectorizedBase)
+      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+      c
+    })
+
+  /** The confs [[vectorizedConf]] holds now (for tests). */
+  private[graft] def memoizedVectorizedConfs: Seq[Configuration] =
+    vectorizedConfs.synchronized(vectorizedConfs.values.asScala.toSeq)
+
+  /** Spark's vectorized reader over `file`, decoding `names` (each
+    * present in `fileSchema`; batch column i is `names(i)`). Opened the
+    * way Spark's own parquet source opens a file — split plus task
+    * context — because the `initialize(path, columns)` convenience
+    * overload builds a fresh `Configuration` per call. The context
+    * answers the memoized [[vectorizedConf]] of the requested row
+    * schema. */
+  def openVectorized(file: java.io.File, fileSchema: MessageType,
+      names: Seq[String], capacity: Int): VectorizedParquetRecordReader = {
+    val c = vectorizedConf(new ParquetToSparkSchemaConverter(vectorizedBase)
+      .convert(projectionFor(fileSchema, names)).json)
     val vr = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, capacity)

@@ -245,12 +245,18 @@ class LakeColumnarSpec extends SparkSpec {
     }
     val expect = projections.map(read)
     val shared = GraftShardCodec.conf
-    def snapshot: Map[String, String] = {
+    def snapshot(c: org.apache.hadoop.conf.Configuration)
+        : Map[String, String] = {
       val m = Map.newBuilder[String, String]
-      shared.forEach(e => m += e.getKey -> e.getValue)
+      c.forEach(e => m += e.getKey -> e.getValue)
       m.result()
     }
-    val before = snapshot
+    val before = snapshot(shared)
+    // the single-threaded reads memoized one reader conf per requested
+    // row schema; the concurrent reads share them
+    val memoized = GraftShardCodec.memoizedVectorizedConfs
+    assert(memoized.nonEmpty)
+    val memoBefore = memoized.map(snapshot)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val futures = projections.map { cols =>
@@ -267,7 +273,9 @@ class LakeColumnarSpec extends SparkSpec {
       .ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA) === null)
     assert(shared.get(org.apache.parquet.hadoop.api.ReadSupport
       .PARQUET_READ_SCHEMA) === null)
-    assert(snapshot === before, "a read mutated the shared conf")
+    assert(snapshot(shared) === before, "a read mutated the shared conf")
+    assert(memoized.map(snapshot) === memoBefore,
+      "a read mutated a memoized reader conf")
     spark.sql(s"DROP TABLE $tbl")
   }
 }
