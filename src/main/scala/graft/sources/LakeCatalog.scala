@@ -2135,9 +2135,9 @@ class GraftLakeScanBuilder(declared: StructType, dataDir: String,
   private var zonePreds: Array[V2Predicate] = Array.empty
   private var limit: Int = -1
 
-  /** PARTIAL limit pushdown: each partition reader stops after
-    * emitting `limit` live rows — a `LIMIT k` over a 100 TB table
-    * decodes at most k rows per shard instead of the shard
+  /** PARTIAL limit pushdown: each partition reader stops after the
+    * batch that crosses `limit` live rows — a `LIMIT k` over a 100 TB
+    * table decodes about k rows per shard instead of the shard
     * (parquet row groups beyond the cutoff are never read). Partial
     * because partitions are independent: Spark keeps its own
     * Local/GlobalLimit for the final cut. Never claimed for
@@ -2857,24 +2857,8 @@ class GraftLakeScan(required: StructType, vdir: java.io.File,
     else Array.empty
   }
 
-  /** Row vs columnar, decided once for the whole scan: VECTORIZED
-    * batches for plain data reads (the overwhelmingly common shape —
-    * see [[GraftLakeColumnarPartitionReader]]), INCLUDING LIMIT-pushed
-    * scans (round 15: batch-grained early stop — the decode win holds
-    * and reading still halts right after the batch crossing the
-    * limit); the row path keeps the cases it is structurally better
-    * at — `_pos`-bearing row-level-operation reads (stable row ids
-    * are per-row by nature) and projection-empty reads (served from
-    * footer counts, zero data pages — faster than any decode). */
-  private def columnarEligible: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.lake.columnar", "true").toBoolean &&
-      !required.fieldNames.contains("_pos") &&
-      required.fields.exists(f =>
-        f.name != "_shard" && f.name != "_pos")
-
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftLakeReaderFactory(required, limit, columnarEligible)
+    new GraftLakeReaderFactory(required, limit)
 
   override def description(): String =
     s"GraftLakeScan(${vdir.getName}, " +
@@ -2908,179 +2892,21 @@ case class GraftLakeInputPartition(paths: Seq[String], shard: Int,
     new GenericInternalRow(Array[Any](shard))
 }
 
-class GraftLakeReaderFactory(required: StructType, limit: Int = -1,
-    columnar: Boolean = false)
+class GraftLakeReaderFactory(required: StructType, limit: Int = -1)
     extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftLakeInputPartition]
-    new GraftLakePartitionReader(p.paths, p.shard, required, p.dv,
-      p.ordBases, limit, p.eqDel, p.eqKeys)
-  }
-  // the row/columnar choice is SCAN-GLOBAL (Spark refuses mixed
-  // partitions in one scan), decided where the scan knows its whole
-  // shape: see GraftLakeScan.createReaderFactory
+      partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "lake scans are columnar: every partition reads through " +
+        "GraftLakeColumnarPartitionReader")
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+    true
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftLakeInputPartition]
     new GraftLakeColumnarPartitionReader(p.paths, p.shard, required,
       p.dv, p.ordBases, p.eqDel, p.eqKeys, limit)
   }
-}
-
-/** Streams one shard's ORDERED PART LIST as a single columnar row
-  * sequence ([[GraftShardCodec]], executor-side). Only the requested
-  * columns' parquet pages are decoded — the projection is intersected
-  * with EACH part footer's own schema (parts written before an
-  * `ALTER TABLE ADD COLUMN` serve the new column as NULL without any
-  * rewrite — per-part projection IS the schema-evolution mechanism),
-  * and a projection-empty read (`count(*)`, or a `_shard`-only probe)
-  * is served ENTIRELY from footer row counts — zero data pages. The
-  * `_shard` metadata column is synthesized, not stored; `_pos` is the
-  * CONCATENATION ordinal across parts in seq order — stable under
-  * appends because new parts only land after all existing rows.
-  * A missing part file is an ERROR, never an empty shard: partitions
-  * are planned only from the immutable snapshot dir, so absence at
-  * read time means the snapshot was torn (expired mid-read, dropped,
-  * or corrupted) — surfacing it beats silently serving zero rows
-  * (advisor round 10). */
-class GraftLakePartitionReader(paths: Seq[String], shard: Int,
-    required: StructType, dvBytes: Array[Byte] = null,
-    ordBases: Seq[Long] = Nil, limit: Int = -1,
-    eqDel: Map[String, Long] = Map.empty, eqKeys: Seq[String] = Nil)
-    extends PartitionReader[InternalRow] {
-  // pushed partial LIMIT: live rows emitted by THIS partition
-  private var emitted = 0L
-  require(eqDel.isEmpty || eqKeys.nonEmpty,
-    s"shard $shard carries equality deletes but the scan has no key " +
-      "columns to mask by — refusing rather than serving dead rows")
-  paths.foreach { p =>
-    if (!new java.io.File(p).exists())
-      throw new java.io.FileNotFoundException(
-        s"lake shard part $p vanished after planning — the snapshot " +
-          "was expired or deleted while being read")
-  }
-
-  // equality deletes force the key columns into the decode set even
-  // when the projection pruned them (a `count(*)` over an upsert table
-  // must still resolve dead rows — the metadata-only fast path is
-  // refused upstream for exactly this reason)
-  private val dataNames = {
-    val req = required.fields.iterator.map(_.name)
-      .filter(n => n != "_shard" && n != "_pos").toSeq
-    if (eqDel.isEmpty) req
-    else req ++ eqKeys.filterNot(req.contains)
-  }
-  // this snapshot's deletion vector for the shard: positions are
-  // concatenation ordinals, masked here so every consumer sees live
-  // rows only; `_pos` reports the PRE-mask ordinal (the stable row id)
-  private val dv = GraftLakeIO.dvOf(dvBytes)
-
-  // per-part decode state, advanced lazily part by part
-  private var partIdx = -1
-  private var partRows = 0L        // rows of the current part
-  private var partOrd = 0L         // next ordinal within current part
-  private var projIdx: Array[Int] = null
-  private var eqKeyIdxs: Array[Int] = null // per key col; null = no mask
-  private var metadataOnly = true
-  private var reader: org.apache.parquet.hadoop
-    .ParquetReader[org.apache.parquet.example.data.Group] = null
-  private var ordBase = 0L         // concat ordinal of current part's row 0
-
-  /** Open the next part; false when all parts are exhausted. */
-  private def advancePart(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    ordBase += partRows
-    partIdx += 1
-    if (partIdx >= paths.length) return false
-    // planner-supplied concatenation bases (part pruning drops parts
-    // from the middle; ordinals of the survivors must not shift)
-    if (ordBases.nonEmpty) ordBase = ordBases(partIdx)
-    val f = new java.io.File(paths(partIdx))
-    val (fileSchema, rows) = GraftShardCodec.footer(f)
-    val projection = GraftShardCodec.projectionFor(fileSchema, dataNames)
-    partRows = rows
-    partOrd = 0L
-    // composite masking needs EVERY key part decodable from this
-    // part's own schema; key columns exist from table creation
-    // (DDL-validated, never droppable), so a missing one can only
-    // mean rows that predate the key — unaddressable, left live
-    eqKeyIdxs =
-      if (eqDel.nonEmpty && eqKeys.forall(projection.containsField))
-        eqKeys.map(projection.getFieldIndex).toArray
-      else null
-    projIdx = required.fields.map { fd =>
-      if (fd.name != "_shard" && fd.name != "_pos" &&
-        projection.containsField(fd.name))
-        projection.getFieldIndex(fd.name)
-      else -1
-    }
-    metadataOnly = projection.getFieldCount == 0
-    GraftLakeScanMetrics.decodedColumns
-      .addAndGet(projection.getFieldCount.toLong): Unit
-    if (metadataOnly)
-      GraftLakeScanMetrics.metadataOnlyReads.incrementAndGet(): Unit
-    else reader = GraftShardCodec.openReader(f, projection)
-    true
-  }
-
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (true) {
-      if (partIdx < 0 || partOrd >= partRows) {
-        if (!advancePart()) return false
-      } else {
-        val ord = ordBase + partOrd
-        partOrd += 1L
-        val g: org.apache.parquet.example.data.Group =
-          if (metadataOnly) null
-          else {
-            val r = reader.read()
-            if (r == null) return false
-            r
-          }
-        // equality deletes: a row whose ENCODED key k sits at
-        // ordinal < bound(k) is dead — an upserted key's older
-        // versions never become rows. A null key part makes the row
-        // unaddressable (commits refuse null keys, so only
-        // pre-contract rows can carry one) — left live.
-        val eqDead = eqKeyIdxs != null && g != null && {
-          val parts = eqKeyIdxs.map(i =>
-            GraftLakeIO.eqKeyPart(GraftShardCodec.rawValue(g, i)))
-          !parts.contains(null) &&
-            eqDel.get(GraftLakeIO.encodeEqKey(parts.toSeq))
-              .exists(ord < _)
-        }
-        // a deleted position still advances the file reader (the bytes
-        // are there; the row is dead) — it just never becomes a row
-        if (!eqDead &&
-          (ord > Int.MaxValue || !dv.contains(ord.toInt))) {
-          val vals = new Array[Any](required.length)
-          var i = 0
-          while (i < required.length) {
-            val f = required(i)
-            vals(i) =
-              if (f.name == "_shard") shard
-              else if (f.name == "_pos") ord
-              else if (projIdx(i) < 0) null
-              else GraftShardCodec.value(g, projIdx(i), f.dataType)
-            i += 1
-          }
-          row = new GenericInternalRow(vals)
-          emitted += 1L
-          return true
-        }
-      }
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = if (reader != null) reader.close()
 }
 
 /** Driver-computed metadata table: rows are (re)built at scan time
@@ -4324,9 +4150,10 @@ object Lake {
     * semantics): on a range-clustered table, `DELETE WHERE user_id <
     * 32` aligns with shard 0's key range exactly, so Spark's
     * OptimizeMetadataOnlyDeleteFromTable skips the rewrite job and
-    * the commit just drops the shard's files — the query asserts NO
-    * scan was planned for the delete (zero data I/O), and the oracle
-    * proves the surviving table is exactly the flat recompute. */
+    * the commit just drops the shard's files — the query asserts the
+    * DELETE's own plan is Spark's `DeleteFromTableExec` with NO scan
+    * (zero data I/O), and the oracle proves the surviving table is
+    * exactly the flat recompute. */
   val lakeMetadataDelete: Q = (s, dir) => Lake.synchronized {
     registerCatalog(s)
     val fp = Tables.fingerprint(dir, "events")
@@ -4340,10 +4167,18 @@ object Lake {
               TBLPROPERTIES ('shard_key'='user_id', 'n_shards'='8',
                 'shard_width'='32')""")
     s.sql(s"INSERT INTO $tbl SELECT * FROM graft_lake_mdel_b") // v1
-    GraftLakeScanMetrics.reset()
-    s.sql(s"DELETE FROM $tbl WHERE user_id < 32") // v2: drops shard 0
-    require(GraftLakeScanMetrics.planned.get() == 0L,
-      "a shard-aligned DELETE must be metadata-only (no scan planned)")
+    import org.apache.spark.sql.execution.CommandResultExec
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec,
+      DeleteFromTableExec}
+    val del = s.sql(s"DELETE FROM $tbl WHERE user_id < 32") // v2
+      .queryExecution.executedPlan match {
+        case c: CommandResultExec => c.commandPhysicalPlan
+        case p => p
+      }
+    require(del.isInstanceOf[DeleteFromTableExec] &&
+      del.collectFirst { case b: BatchScanExec => b }.isEmpty,
+      "a shard-aligned DELETE must be metadata-only (no scan planned), " +
+        s"planned:\n$del")
     s.sql(s"""SELECT user_id, n_events FROM $tbl ORDER BY user_id""")
   }
 

@@ -8,55 +8,44 @@ import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector,
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-/** VECTORIZED (columnar-batch) lake scan path — the same shard part
-  * list, projection, deletion-vector and equality-delete semantics as
-  * [[GraftLakePartitionReader]], decoded through Spark's OWN
-  * vectorized parquet reader instead of row-by-row parquet-mr Groups.
+/** The lake scan reader: one shard's ORDERED PART LIST decoded
+  * through Spark's OWN vectorized parquet reader into
+  * [[ColumnarBatch]] vectors, which the plan consumes through
+  * `ColumnarToRow` inside whole-stage codegen — per-batch amortized
+  * decode, no per-row boxing.
   *
-  * Why this is the round-14 scan lever (verdict #2): the Group API
-  * materializes every value as a boxed JVM object and every row as a
-  * heap record BEFORE Spark sees it, so a wide lake scan spends its
-  * time in allocation and virtual dispatch. The vectorized reader
-  * decodes whole column pages into [[ColumnarBatch]] vectors (the
-  * engine Spark's native parquet source uses), and the plan consumes
-  * them through `ColumnarToRow` inside whole-stage codegen — per-batch
-  * amortized decode, no per-row boxing. At 100 TB the scan IS the
-  * query for most of the registry; this is the difference between a
-  * connector that demos and one that competes with the built-in
-  * source.
-  *
-  * Semantics preserved exactly (LakeDeleteVectorSpec/LakeEqUpsertSpec
-  * re-stamp them over this path):
+  * Semantics (LakeDeleteVectorSpec/LakeEqUpsertSpec/LakeColumnarSpec
+  * stamp them):
   *
   *  - PER-PART PROJECTION: each part decodes only the requested
   *    columns present in its own footer schema; columns ADDed after
   *    the part was written are served as constant-NULL vectors —
-  *    schema evolution without rewrites, now without per-row work
-  *    either.
+  *    schema evolution without rewrites or per-row work.
   *  - `_shard` is synthesized as a [[ConstantColumnVector]] (it is
-  *    routing metadata, never stored).
+  *    routing metadata, never stored). `_pos` is the CONCATENATION
+  *    ordinal across parts in seq order (stable under appends: new
+  *    parts only land after all existing rows), served as one reused
+  *    on-heap vector holding each live row's PRE-mask ordinal — the
+  *    row id row-level DML writes back.
   *  - MASKING AS A SELECTION VECTOR: deletion-vector positions
   *    (concatenation ordinals) and equality-deleted key versions
   *    (`key at ord < bound(key)`) select the LIVE rows of each decoded
   *    batch; a fully-live batch passes through zero-copy, a masked
   *    batch compacts the survivors into reused on-heap vectors. The
   *    equality key is forced into the decode set even when projected
-  *    out, exactly like the row path.
+  *    out.
+  *  - PROJECTION-EMPTY parts (`count(*)`, `SELECT 1`, `_shard`/`_pos`
+  *    only, or a part predating every requested column) open no data
+  *    page: they are served from the footer row count, still masked
+  *    by ordinal.
+  *  - A missing part file is an ERROR, never an empty shard:
+  *    partitions are planned only from the immutable snapshot dir, so
+  *    absence at read time means the snapshot was torn.
   *
-  * LIMIT-pushed scans (round 15) take the columnar path too, with
-  * BATCH-grained early stop: the reader quits after the batch that
-  * crosses `limit` live rows (the pushdown is declared partial —
-  * `isPartiallyPushed` — so Spark's own Local/GlobalLimit trims the
-  * overshoot inside that final 4k-row batch). A `LIMIT k` over a wide
-  * 100 TB table thus keeps the vectorized decode win AND stops after
-  * ~k rows per shard.
-  *
-  * Row-path fallbacks (chosen PER SCAN, never per partition — Spark
-  * requires every partition of one scan to agree on row vs columnar):
-  * `_pos`-bearing reads (row-level DML needs the stable row id) and
-  * projection-empty reads (`count(*)` — the row path serves those
-  * from footer counts without opening data pages at all, which beats
-  * any decode). */
+  * LIMIT-pushed scans stop BATCH-grained: the reader quits after the
+  * batch that crosses `limit` live rows (the pushdown is declared
+  * partial — `isPartiallyPushed` — so Spark's own Local/GlobalLimit
+  * trims the overshoot inside that final 4k-row batch). */
 class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     required: StructType, dvBytes: Array[Byte] = null,
     ordBases: Seq[Long] = Nil,
@@ -64,9 +53,6 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     limit: Int = -1)
     extends PartitionReader[ColumnarBatch] {
 
-  require(!required.fieldNames.contains("_pos"),
-    "columnar lake reads never serve _pos — the scan must have " +
-      "planned the row path for row-level operations")
   require(eqDel.isEmpty || eqKeys.nonEmpty,
     s"shard $shard carries equality deletes but the scan has no key " +
       "columns to mask by — refusing rather than serving dead rows")
@@ -81,10 +67,11 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
   private val dv = GraftLakeIO.dvOf(dvBytes)
 
   // requested data columns in a stable order: `required` minus the
-  // synthesized `_shard`, plus the equality key when masking needs it
+  // synthesized `_shard`/`_pos`, plus the equality key when masking
+  // needs it
   private val dataNames: Seq[String] = {
     val req = required.fields.iterator.map(_.name)
-      .filter(_ != "_shard").toSeq
+      .filter(n => n != "_shard" && n != "_pos").toSeq
     if (eqDel.isEmpty) req
     else req ++ eqKeys.filterNot(req.contains)
   }
@@ -101,9 +88,15 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
       v.setNull()
       v
     }
-  // compaction targets, allocated lazily on the first masked batch
-  // and reused (reset) per batch thereafter
-  private var compacted: Array[OnHeapColumnVector] = null
+  // the live rows' pre-mask ordinals, refilled per batch
+  private val posVec: OnHeapColumnVector =
+    if (required.fieldNames.contains("_pos"))
+      new OnHeapColumnVector(Capacity, LongType)
+    else null
+  // compaction targets, allocated per column on its first masked
+  // batch and reused (reset) per batch thereafter
+  private val compacted = new Array[OnHeapColumnVector](required.length)
+  private val sel = new Array[Int](Capacity)
 
   // ---- per-part state ----
   private var partIdx = -1
@@ -121,6 +114,8 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     ordBase += partRows
     partIdx += 1
     if (partIdx >= paths.length) return false
+    // planner-supplied concatenation bases (part pruning drops parts
+    // from the middle; ordinals of the survivors must not shift)
     if (ordBases.nonEmpty) ordBase = ordBases(partIdx)
     val f = new java.io.File(paths(partIdx))
     val (fileSchema, rows) = GraftShardCodec.footer(f)
@@ -129,16 +124,17 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     present = dataNames.filter(fileSchema.containsField)
     GraftLakeScanMetrics.decodedColumns
       .addAndGet(present.length.toLong): Unit
-    presentIdx = required.fields.map { fd =>
-      if (fd.name == "_shard") -1 else present.indexOf(fd.name)
-    }
+    presentIdx = required.fields.map(fd => present.indexOf(fd.name))
+    // composite masking needs EVERY key part decodable from this
+    // part's own schema; a missing one can only mean rows that
+    // predate the key — unaddressable, left live
     eqKeyBatchIdxs =
       if (eqDel.nonEmpty && eqKeys.forall(present.contains))
         eqKeys.map(present.indexOf).toArray
       else null
     if (present.isEmpty) {
-      // a part predating every requested column: all-NULL content,
-      // only the live-row COUNT matters (ordinal-masked below)
+      // no requested column stored in this part: only the live rows'
+      // count and ordinals matter, served from the footer
       GraftLakeScanMetrics.metadataOnlyReads.incrementAndGet(): Unit
       nullPartRemaining = rows
     } else {
@@ -178,25 +174,11 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
           (vr != null && consumed >= partRows)) {
         if (!advancePart()) return false
       } else if (vr == null) {
-        // projection-empty part: emit live-count-only batches
+        // projection-empty part: batches of constant vectors
         val n = math.min(nullPartRemaining, Capacity.toLong).toInt
         val start = ordBase + (partRows - nullPartRemaining)
         nullPartRemaining -= n
-        var liveN = 0
-        var i = 0
-        while (i < n) {
-          if (live(start + i, _ => null, i)) liveN += 1
-          i += 1
-        }
-        if (liveN > 0) {
-          out = new ColumnarBatch(
-            nullConsts.zipWithIndex.map { case (v, j) =>
-              if (required.fields(j).name == "_shard") shardConst
-              else v
-            }.toArray[ColumnVector], liveN)
-          emitted += liveN
-          return true
-        }
+        if (emit(null, n, start)) return true
       } else if (!vr.nextBatch()) {
         consumed = partRows // defensive: footer said more than decoded
       } else {
@@ -205,87 +187,93 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
         val n = batch.numRows()
         val start = ordBase + consumed
         consumed += n
-        val keyCols =
-          if (eqKeyBatchIdxs != null)
-            eqKeyBatchIdxs.map(batch.column)
-          else null
-        val keyOf: Int => String = i =>
-          if (keyCols == null) null
-          else {
-            val parts = keyCols.map { c =>
-              if (c.isNullAt(i)) null
-              else c.dataType() match {
-                case LongType | TimestampType => c.getLong(i).toString
-                case IntegerType | DateType => c.getInt(i).toString
-                case StringType => c.getUTF8String(i).toString
-                case other => throw new IllegalArgumentException(
-                  s"unsupported upsert key type $other")
-              }
-            }
-            if (parts.contains(null)) null
-            else GraftLakeIO.encodeEqKey(parts.toSeq)
-          }
-        // selection vector over this batch
-        val sel = new Array[Int](n)
-        var liveN = 0
-        var i = 0
-        while (i < n) {
-          if (live(start + i, keyOf, i)) { sel(liveN) = i; liveN += 1 }
-          i += 1
-        }
-        if (liveN == 0) () // fully-dead batch: fall through, loop
-        else {
-          val passthrough = liveN == n
-          if (!passthrough && compacted == null)
-            compacted = required.fields.map(f =>
-              new OnHeapColumnVector(Capacity, f.dataType))
-          val cols: Array[ColumnVector] =
-            required.fields.zipWithIndex.map { case (fd, j) =>
-              if (fd.name == "_shard") shardConst: ColumnVector
-              else if (presentIdx(j) < 0) nullConsts(j): ColumnVector
-              else if (passthrough)
-                batch.column(presentIdx(j)): ColumnVector
-              else {
-                val src = batch.column(presentIdx(j))
-                val dst = compacted(j)
-                dst.reset()
-                var r = 0
-                while (r < liveN) {
-                  val s = sel(r)
-                  if (src.isNullAt(s)) dst.putNull(r)
-                  else fd.dataType match {
-                    case LongType | TimestampType =>
-                      dst.putLong(r, src.getLong(s))
-                    case IntegerType | DateType =>
-                      dst.putInt(r, src.getInt(s))
-                    case DoubleType => dst.putDouble(r, src.getDouble(s))
-                    case BooleanType =>
-                      dst.putBoolean(r, src.getBoolean(s))
-                    case StringType =>
-                      val b = src.getUTF8String(s).getBytes
-                      dst.putByteArray(r, b, 0, b.length): Unit
-                    case other => throw new IllegalArgumentException(
-                      s"unsupported lake type for ${fd.name}: $other")
-                  }
-                  r += 1
-                }
-                dst: ColumnVector
-              }
-            }
-          out = new ColumnarBatch(cols, liveN)
-          emitted += liveN
-          return true
-        }
+        if (emit(batch, n, start)) return true
       }
     }
     false // unreachable
+  }
+
+  /** Selects the live rows of `n` rows at ordinals `start ..` (from
+    * `batch`, or from no data page when null) into [[out]]; false when
+    * none is live. */
+  private def emit(batch: ColumnarBatch, n: Int, start: Long): Boolean = {
+    val keyCols =
+      if (eqKeyBatchIdxs != null) eqKeyBatchIdxs.map(batch.column)
+      else null
+    val keyOf: Int => String = i =>
+      if (keyCols == null) null
+      else {
+        val parts = keyCols.map { c =>
+          if (c.isNullAt(i)) null
+          else c.dataType() match {
+            case LongType | TimestampType => c.getLong(i).toString
+            case IntegerType | DateType => c.getInt(i).toString
+            case StringType => c.getUTF8String(i).toString
+            case other => throw new IllegalArgumentException(
+              s"unsupported upsert key type $other")
+          }
+        }
+        if (parts.contains(null)) null
+        else GraftLakeIO.encodeEqKey(parts.toSeq)
+      }
+    var liveN = 0
+    var i = 0
+    while (i < n) {
+      if (live(start + i, keyOf, i)) { sel(liveN) = i; liveN += 1 }
+      i += 1
+    }
+    if (liveN == 0) return false
+    val passthrough = liveN == n
+    if (posVec != null) {
+      var r = 0
+      while (r < liveN) { posVec.putLong(r, start + sel(r)); r += 1 }
+    }
+    val cols: Array[ColumnVector] =
+      required.fields.zipWithIndex.map { case (fd, j) =>
+        if (fd.name == "_shard") shardConst: ColumnVector
+        else if (fd.name == "_pos") posVec: ColumnVector
+        else if (presentIdx(j) < 0) nullConsts(j): ColumnVector
+        else if (passthrough) batch.column(presentIdx(j)): ColumnVector
+        else {
+          val src = batch.column(presentIdx(j))
+          if (compacted(j) == null)
+            compacted(j) = new OnHeapColumnVector(Capacity, fd.dataType)
+          val dst = compacted(j)
+          dst.reset()
+          var r = 0
+          while (r < liveN) {
+            val s = sel(r)
+            if (src.isNullAt(s)) dst.putNull(r)
+            else fd.dataType match {
+              case LongType | TimestampType =>
+                dst.putLong(r, src.getLong(s))
+              case IntegerType | DateType =>
+                dst.putInt(r, src.getInt(s))
+              case DoubleType => dst.putDouble(r, src.getDouble(s))
+              case BooleanType =>
+                dst.putBoolean(r, src.getBoolean(s))
+              case StringType =>
+                val b = src.getUTF8String(s).getBytes
+                dst.putByteArray(r, b, 0, b.length): Unit
+              case other => throw new IllegalArgumentException(
+                s"unsupported lake type for ${fd.name}: $other")
+            }
+            r += 1
+          }
+          dst: ColumnVector
+        }
+      }
+    out = new ColumnarBatch(cols, liveN)
+    emitted += liveN
+    true
   }
 
   override def get(): ColumnarBatch = out
 
   override def close(): Unit = {
     if (vr != null) { vr.close(); vr = null }
-    if (compacted != null) { compacted.foreach(_.close()); compacted = null }
+    compacted.foreach(v => if (v != null) v.close())
+    if (posVec != null) posVec.close()
     shardConst.close()
     nullConsts.foreach(_.close())
   }

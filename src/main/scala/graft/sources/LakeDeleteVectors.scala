@@ -41,7 +41,7 @@ import org.roaringbitmap.RoaringBitmap
   *    insert = staged append.
   *
   * Readers mask the positions at scan time
-  * ([[GraftLakePartitionReader]]), so queries, time travel, CDC
+  * ([[GraftLakeColumnarPartitionReader]]), so queries, time travel, CDC
   * diffs, statistics, and DESCRIBE HISTORY all see live rows only.
   * A later group-based rewrite of a shard (copy-on-write
   * UPDATE/MERGE/OVERWRITE/recluster) compacts its deletes away and

@@ -165,7 +165,7 @@ object GraftShardCodec {
     * Without this, every commit's live-row stamp, every scan's
     * statistics estimate and every `count(*)` pushdown would re-open
     * O(total parts) footers: measured super-linear append-commit cost
-    * as parts accumulate (BenchDml). Bounded LRU; hardlinked copies of
+    * as parts accumulate. Bounded LRU; hardlinked copies of
     * one part share the entry (same inode). The mtime term guards the
     * rare inode-reuse-after-delete case. */
   private val summaryMemo = lru[(Object, Long, Long), PartSummary](8192)
@@ -339,17 +339,23 @@ object GraftShardCodec {
     c
   }
 
-  /** One read-only conf per requested row schema (its JSON): a table
-    * has a handful of projections, so cloning the whole conf on every
-    * part open only rebuilt the same few. Spark's split-based
+  /** One read-only conf per (file schema, requested names): a table
+    * has a handful of part schemas and projections, so cloning the
+    * whole conf on every part open only rebuilt the same few. The key
+    * is what decides the requested row schema, so its conversion and
+    * JSON rendering run only on a miss. Spark's split-based
     * `initialize` and parquet-mr's read options only read the conf.
     * Bounded LRU beside [[summaryMemo]]. */
-  private val vectorizedConfs = lru[String, Configuration](256)
+  private val vectorizedConfs =
+    lru[(MessageType, Seq[String]), Configuration](256)
 
-  private def vectorizedConf(requestedSchema: String): Configuration =
-    vectorizedConfs.computeIfAbsent(requestedSchema, { json =>
+  private def vectorizedConf(fileSchema: MessageType,
+      names: Seq[String]): Configuration =
+    vectorizedConfs.computeIfAbsent((fileSchema, names), { _ =>
       val c = new Configuration(vectorizedBase)
-      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+        new ParquetToSparkSchemaConverter(vectorizedBase)
+          .convert(projectionFor(fileSchema, names)).json)
       c
     })
 
@@ -366,8 +372,7 @@ object GraftShardCodec {
     * schema. */
   def openVectorized(file: java.io.File, fileSchema: MessageType,
       names: Seq[String], capacity: Int): VectorizedParquetRecordReader = {
-    val c = vectorizedConf(new ParquetToSparkSchemaConverter(vectorizedBase)
-      .convert(projectionFor(fileSchema, names)).json)
+    val c = vectorizedConf(fileSchema, names)
     val vr = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, capacity)

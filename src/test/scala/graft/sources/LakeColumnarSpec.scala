@@ -7,13 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Vectorized lake reads ([[GraftLakeColumnarPartitionReader]]):
-  * plain scans must plan COLUMNAR (batches consumed via ColumnarToRow
+  * lake scans must plan COLUMNAR (batches consumed via ColumnarToRow
   * inside whole-stage codegen — the scan-throughput contract at
-  * 100 TB), the row path must remain for the shapes it is
-  * structurally better at, and DV/equality-delete masking must stay
-  * EXACT through batch compaction — including dead rows scattered
-  * across vectorized-batch boundaries, which the tiny existing
-  * fixtures never cross. */
+  * 100 TB), projection-empty reads must stay footer-served, and
+  * DV/equality-delete masking must stay EXACT through batch
+  * compaction — including dead rows scattered across vectorized-batch
+  * boundaries, which the tiny existing fixtures never cross. */
 class LakeColumnarSpec extends SparkSpec {
   import spark.implicits._
 
@@ -38,7 +37,7 @@ class LakeColumnarSpec extends SparkSpec {
 
   test("a plain lake read plans columnar batches (ColumnarToRow over " +
       "the lake scan); LIMIT-pushed reads are columnar WITH early " +
-      "stop; count(*) keeps the footer-served row path") {
+      "stop; count(*) stays footer-served") {
     Lake.registerCatalog(spark)
     val tbl = "graft_lake.lake.spec_colnar"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -61,8 +60,8 @@ class LakeColumnarSpec extends SparkSpec {
       spark.sql(s"SELECT user_id FROM $tbl LIMIT 3")),
       "LIMIT-pushed lake reads must decode columnar")
 
-    // count(*) stays footer-served (agg pushdown, or the metadata-only
-    // row path when pushdown is off): zero data pages either way
+    // count(*) stays footer-served (agg pushdown, or the reader's
+    // metadata-only parts when pushdown is off): zero data pages
     GraftLakeScanMetrics.reset()
     assert(spark.table(tbl).count() === 100L)
     assert(GraftLakeScanMetrics.aggPushdowns.get() > 0L ||
@@ -176,13 +175,11 @@ class LakeColumnarSpec extends SparkSpec {
         AS ts,
       CASE id % 3 WHEN 0 THEN NULL ELSE id % 2 = 0 END AS b"""
 
-  test("the columnar path returns the row path's rows: every lake " +
-      "type (NaN, ±0.0, infinities, nulls), equality-deleted and " +
-      "DV-masked shards, and parts predating an ADD COLUMN") {
+  test("the columnar path returns Spark SQL's rows for the same " +
+      "source: every lake type (NaN, ±0.0, infinities, nulls), " +
+      "equality-deleted and DV-masked shards, and parts predating an " +
+      "ADD COLUMN") {
     Lake.registerCatalog(spark)
-    val rowPath = spark.newSession()
-    Lake.registerCatalog(rowPath)
-    rowPath.conf.set("spark.graft.lake.columnar", "false")
     val tbl = "graft_lake.lake.spec_colnar_eq"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"""CREATE TABLE $tbl (user_id BIGINT, i INT, d DATE,
@@ -194,29 +191,38 @@ class LakeColumnarSpec extends SparkSpec {
       s"SELECT * FROM $tbl",
       s"SELECT x, s, b FROM $tbl", // upsert key decoded, projected out
       s"SELECT user_id, d, ts FROM $tbl WHERE i > 0")
-    def sameOnBothPaths(state: String): Unit = reads.foreach { q =>
+    // the table's expected content, computed by plain Spark SQL from
+    // the same source rows: each read runs over it in place of the table
+    var reference = s"($typedRows FROM range(10000))"
+    def sameAsReference(state: String): Unit = reads.foreach { q =>
       val col = spark.sql(q)
       assert(hasColumnarLakeScan(col), s"$state: $q must decode columnar")
-      assert(!hasColumnarLakeScan(rowPath.sql(q)),
-        s"$state: $q must take the row path with columnar off")
       val got = canon(col.collect())
       assert(got.nonEmpty)
-      assert(got === canon(rowPath.sql(q).collect()), s"$state: $q")
+      assert(got === canon(spark.sql(q.replace(tbl, s"$reference r"))
+        .collect()), s"$state: $q")
     }
 
     spark.sql(s"INSERT INTO $tbl $typedRows FROM range(10000)")
-    sameOnBothPaths("typed")
+    sameAsReference("typed")
     // upsert every 10th key: older versions die by equality delete
     spark.sql(s"""INSERT INTO $tbl SELECT user_id, i + 1, d, x, s, ts, b
       FROM ($typedRows FROM range(0, 10000, 10))""")
-    sameOnBothPaths("equality-deleted")
+    reference = s"""(SELECT user_id,
+      CASE WHEN user_id % 10 = 0 THEN i + 1 ELSE i END AS i, d, x, s, ts, b
+      FROM $reference u)"""
+    sameAsReference("equality-deleted")
     // merge-on-read DELETE: deletion-vector positions in every part
     spark.sql(s"DELETE FROM $tbl WHERE user_id % 20 = 3")
-    sameOnBothPaths("DV-masked")
+    reference = s"(SELECT * FROM $reference m WHERE user_id % 20 != 3)"
+    sameAsReference("DV-masked")
     spark.sql(s"ALTER TABLE $tbl ADD COLUMN tag STRING")
     spark.sql(s"""INSERT INTO $tbl SELECT *, concat('t', user_id) FROM
       ($typedRows FROM range(10000, 10100))""")
-    sameOnBothPaths("evolved")
+    reference = s"""(SELECT *, CAST(NULL AS STRING) AS tag FROM $reference o
+      UNION ALL SELECT *, concat('t', user_id) AS tag
+      FROM ($typedRows FROM range(10000, 10100)) n)"""
+    sameAsReference("evolved")
     assert(spark.sql(s"SELECT count(tag) FROM $tbl").head().getLong(0) ===
       100L, "parts predating ADD COLUMN serve NULL tags")
     spark.sql(s"DROP TABLE $tbl")
