@@ -1,8 +1,10 @@
 package graft
 
-/** Dev aid: dump the executed plan of one or more registered queries
-  * into `<outDir>/<query>_<tag>.txt` in one JVM, so the fixtures warm
-  * up once. Used to capture the before/after plan evidence committed
+/** Dev aid: run one or more registered queries and dump each one's
+  * FINAL executed plan (after adaptive execution: columnar transitions,
+  * AQE stage rewrites and query-stage prep rules included) into
+  * `<outDir>/<query>_<tag>.txt` in one JVM, so the fixtures warm up
+  * once. Used to capture the before/after plan evidence committed
   * under plans/rNN/.
   *
   * usage: runMain graft.PlanSnap <tag> <outDir> <sfDir> <q1> [q2 ...]
@@ -25,6 +27,7 @@ object PlanSnap {
       val out = outDir.resolve(s"${name}_$tag.txt")
       try {
         val df = SparkEntry.queries(name)(s, sfDir)
+        df.queryExecution.toRdd.count(): Unit // runs to the final plan
         java.nio.file.Files.write(out,
           df.queryExecution.executedPlan.toString
             .getBytes("UTF-8"))

@@ -17,11 +17,7 @@ object Verify {
       // drop any previous dump FIRST: a failed query must never leave a
       // stale (passing) parquet behind for the checker to compare — that
       // masked a real execution failure once (round 5, mm_embed_ann)
-      val target = Paths.get(outDir, name)
-      if (Files.exists(target)) {
-        Files.walk(target).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
+      graft.sources.Memo.rmTree(new java.io.File(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

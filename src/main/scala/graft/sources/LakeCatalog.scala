@@ -911,9 +911,7 @@ class GraftLakeTable(private[sources] val tableName: String,
     val cs = keyConjuncts(predicates).getOrElse(
       throw new IllegalStateException(
         "deleteWhere called with unprovable predicates"))
-    var attempts = 0
-    while (true) {
-      val headV = GraftLakeIO.latestVersion(dataDir)
+    GraftLakeIO.commitSnapshot(dataDir, None, "delete") { (headV, build) =>
       val headDir = GraftLakeIO.versionDir(dataDir, headV)
       // re-classify against THIS head: a concurrent commit may have
       // added rows that break the whole-shard alignment
@@ -922,43 +920,13 @@ class GraftLakeTable(private[sources] val tableName: String,
           s"$dataDir: a concurrent write made the metadata delete " +
             "unprovable — re-run the DELETE"))
       val dropped = cls.collect { case (k, true) => k }.toSet
-      if (dropped.isEmpty) return // nothing matches: no commit
-      val droppedFiles = dropped
-        .flatMap(k => GraftLakeIO.shardParts(headDir, k))
-        .map(_.getName)
-      val build = GraftLakeIO.newBuildDir(dataDir)
-      try {
-        Option(headDir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && f.getName != "_commit" &&
-            f.getName != GraftLakeIO.dvFile(headDir).getName &&
-            !droppedFiles.contains(f.getName))
-          .foreach { f =>
-            val dst = new java.io.File(build, f.getName)
-            try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-            catch {
-              case _: UnsupportedOperationException |
-                  _: java.io.IOException =>
-                java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-            }
-          }
-        GraftLakeIO.writeDv(build,
-          GraftLakeIO.readDv(headDir) -- dropped)
-        GraftLakeIO.writeCommitMeta(build,
-          GraftLakeIO.nextCommitStamp(dataDir, headV), "delete")
-        GraftLakeIO.commitVersion(dataDir, headV, build): Unit
-        return
-      } catch {
-        case _: GraftLakeCommitConflict if attempts < 5 =>
-          attempts += 1 // lost the CAS race: re-classify on new head
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          if (build.exists()) rm(build)
-          throw e
+      Option.when(dropped.nonEmpty) { // nothing matches: no commit
+        GraftLakeIO.linkSnapshot(headDir, build,
+          dropped.flatMap(k => GraftLakeIO.shardParts(headDir, k))
+            .map(_.getName) + GraftLakeIO.dvFile(headDir).getName)
+        GraftLakeIO.writeDv(build, GraftLakeIO.readDv(headDir) -- dropped)
       }
-    }
+    }: Unit
   }
 
   /** `TRUNCATE TABLE` — trivially metadata-only: a fresh empty
@@ -970,31 +938,13 @@ class GraftLakeTable(private[sources] val tableName: String,
   override def truncateTable(): Boolean = {
     require(pinnedVersion.isEmpty,
       s"$tableName: a time-travel snapshot is read-only")
-    var attempts = 0
-    while (true) {
-      val headV = GraftLakeIO.latestVersion(dataDir)
-      val build = GraftLakeIO.newBuildDir(dataDir)
-      try {
+    GraftLakeIO.commitSnapshot(dataDir, None, "truncate") {
+      (headV, build) =>
         val txns = GraftLakeIO.readTxns(
           GraftLakeIO.versionDir(dataDir, headV))
         if (txns.nonEmpty) GraftLakeIO.writeTxns(build, txns)
-        GraftLakeIO.writeCommitMeta(build,
-          GraftLakeIO.nextCommitStamp(dataDir, headV), "truncate")
-        GraftLakeIO.commitVersion(dataDir, headV, build): Unit
-        return true
-      } catch {
-        case _: GraftLakeCommitConflict if attempts < 5 =>
-          attempts += 1
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          if (build.exists()) rm(build)
-          throw e
-      }
-    }
-    false // unreachable
+        Some(true)
+    }.get
   }
 
   override def newRowLevelOperationBuilder(
@@ -1492,14 +1442,6 @@ object GraftLakeIO {
     out.result()
   }
 
-  /** Highest epoch the given streaming query has committed into this
-    * table, from the latest snapshot's carried txn map; -1 if none. */
-  def committedEpoch(dataDir: String, queryId: String): Long = {
-    val latest = latestVersion(dataDir)
-    if (latest == 0) -1L
-    else readTxns(versionDir(dataDir, latest)).getOrElse(queryId, -1L)
-  }
-
   def routingFile(vdir: java.io.File): java.io.File =
     new java.io.File(vdir, "_routing.json")
 
@@ -1732,23 +1674,6 @@ object GraftLakeIO {
         k.stripPrefix("branch:") -> v
     }
 
-  /** Hardlink every file of a published snapshot into a build dir
-    * (falling back to copy on filesystems without links) — the
-    * rollback idiom, shared by branch seed and fast-forward. The
-    * `_commit` stamp is NOT carried: each commit writes its own. */
-  private def linkSnapshot(srcV: java.io.File,
-      build: java.io.File): Unit =
-    Option(srcV.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName != "_commit")
-      .foreach { f =>
-        val dst = new java.io.File(build, f.getName)
-        try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-        }
-      }
-
   /** Create branch `name` at main's current head. Returns the base
     * version the branch forked from. */
   def createBranch(dataDir: String, name: String): Int =
@@ -1762,16 +1687,13 @@ object GraftLakeIO {
       val bdir = branchDir(dataDir, name)
       rmTree(bdir)
       bdir.mkdirs(): Unit
-      if (base > 0) {
+      if (base > 0)
         // seed = branch v1, a pure-link copy of main's head; the
         // branch's own commit lock is distinct (different dataDir),
         // so nesting under main's lock cannot self-deadlock
-        val build = newBuildDir(bdir.getPath)
-        linkSnapshot(versionDir(dataDir, base), build)
-        writeCommitMeta(build, nextCommitStamp(bdir.getPath, 0),
-          "branch")
-        commitVersion(bdir.getPath, 0, build): Unit
-      }
+        commitSnapshot(bdir.getPath, Some(0), "branch") { (_, build) =>
+          Some(linkSnapshot(versionDir(dataDir, base), build))
+        }: Unit
       writeRefs(dataDir, refs.updated(s"branch:$name", base))
       base
     }
@@ -1812,13 +1734,11 @@ object GraftLakeIO {
     val bHead = latestVersion(bdir.getPath)
     val seed = if (base > 0) 1 else 0
     if (bHead <= seed) { dropBranch(dataDir, name): Unit; return cur }
-    val build = newBuildDir(dataDir)
-    linkSnapshot(versionDir(bdir.getPath, bHead), build)
-    writeCommitMeta(build, nextCommitStamp(dataDir, cur),
-      "fast_forward")
-    val v = commitVersion(dataDir, cur, build)
+    commitSnapshot(dataDir, Some(cur), "fast_forward") { (_, build) =>
+      Some(linkSnapshot(versionDir(bdir.getPath, bHead), build))
+    }: Unit
     dropBranch(dataDir, name): Unit
-    v
+    cur + 1
   }
 
   // ---- EQUALITY DELETES (`_eqdel.json` per version dir) ----
@@ -1993,6 +1913,73 @@ object GraftLakeIO {
     newV
   }
 
+  /** The one lake commit routine; every snapshot writer goes through
+    * it. Its named steps: BUILD a fresh writer-unique dir; CARRY —
+    * `fill` gets the base version and the build and links unchanged
+    * files, writes new parts and sidecars, or returns None to decline
+    * (no commit); STAMP `_commit` with `operation`; then
+    * [[commitVersion]]'s RENAME and PUBLISH. `pinned` is the base the
+    * caller read at. With None the base is the head, and a lost CAS
+    * re-runs the fill against the new head (up to 5 times); a pinned
+    * base gets the conflict at once. A conflict the fill raises itself
+    * is always final. On any failure the build is removed and the
+    * error rethrown. Returns the fill's result. */
+  def commitSnapshot[T](dataDir: String, pinned: Option[Int],
+      operation: String)(
+      fill: (Int, java.io.File) => Option[T]): Option[T] = {
+    var attempts = 0
+    while (true) {
+      val baseV = pinned.getOrElse(latestVersion(dataDir))
+      val build = newBuildDir(dataDir)
+      try {
+        val out = fill(baseV, build)
+        if (out.isEmpty) { rmTree(build); return None }
+        writeCommitMeta(build, nextCommitStamp(dataDir, baseV), operation)
+        try { commitVersion(dataDir, baseV, build); return out }
+        catch {
+          case _: GraftLakeCommitConflict
+              if pinned.isEmpty && attempts < 5 =>
+            rmTree(build) // lost the CAS race: re-run on the new head
+            attempts += 1
+        }
+      } catch {
+        case e: Throwable => rmTree(build); throw e
+      }
+    }
+    None // unreachable
+  }
+
+  /** Hardlink `src` to `dst`, copying where the filesystem has no
+    * links. Sound because a published file is never written again. */
+  def linkOrCopy(src: java.io.File, dst: java.io.File): Unit =
+    try java.nio.file.Files.createLink(dst.toPath, src.toPath): Unit
+    catch {
+      case _: UnsupportedOperationException | _: java.io.IOException =>
+        java.nio.file.Files.copy(src.toPath, dst.toPath): Unit
+    }
+
+  /** Link every file of a published snapshot into a build, except its
+    * `_commit` stamp (each commit writes its own) and `skip`'s names. */
+  def linkSnapshot(srcV: java.io.File, build: java.io.File,
+      skip: Set[String] = Set.empty): Unit =
+    Option(srcV.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && f.getName != "_commit" &&
+        !skip.contains(f.getName))
+      .foreach(f => linkOrCopy(f, new java.io.File(build, f.getName)))
+
+  /** Run independent tasks on at most one thread per core; the first
+    * failure propagates once every task has been submitted. */
+  def runBounded(tasks: Seq[() => Unit]): Unit =
+    if (tasks.lengthCompare(2) < 0) tasks.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(tasks.length, Runtime.getRuntime.availableProcessors()))
+      try tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
+        override def call(): Unit = t()
+      })).foreach(_.get())
+      finally pool.shutdown()
+    }
+
   /** Optimistic compare-and-swap publish of an ALREADY-MATERIALIZED
     * version dir (spec-level primitive; the write paths go through
     * [[commitVersion]], which also owns the build-dir rename). */
@@ -2054,22 +2041,10 @@ object GraftLakeIO {
       s"$dataDir: rollback target v$target out of range 0..$base")
     require(target == 0 || versionDir(dataDir, target).exists(),
       s"$dataDir: rollback target v$target has been expired")
-    val build = newBuildDir(dataDir)
-    if (target > 0) {
-      val tdir = versionDir(dataDir, target)
-      Option(tdir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && f.getName != "_commit")
-        .foreach { f =>
-          val dst = new java.io.File(build, f.getName)
-          try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-          catch {
-            case _: UnsupportedOperationException | _: java.io.IOException =>
-              java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-          }
-        }
-    }
-    writeCommitMeta(build, nextCommitStamp(dataDir, base), "rollback")
-    commitVersion(dataDir, base, build)
+    commitSnapshot(dataDir, Some(base), "rollback") { (_, build) =>
+      if (target > 0) linkSnapshot(versionDir(dataDir, target), build)
+      Some(base + 1)
+    }.get
   }
 
   /** Atomic publish: the pointer move is the commit point. */
@@ -3383,28 +3358,16 @@ class GraftLakeStreamingWrite(table: GraftLakeTable, dataDir: String,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    try {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        if (GraftLakeIO.committedEpoch(dataDir, queryId) >= epochId)
-          done = true // replayed epoch after restart: idempotent no-op
-        else
-          try {
-            GraftLakeCommitter.commitStaged(table, dataDir, writeSchema,
-              truncateFirst = false, op = None,
-              messages.flatMap {
-                case GraftLakeTaskCommit(parts) => parts
-              }.groupBy(_.shard).view.mapValues(_.toSeq).toMap,
-              operationOverride = Some("streaming"),
-              txnUpdate = Some(queryId -> epochId))
-            done = true
-          } catch {
-            case _: GraftLakeCommitConflict if attempts < 5 =>
-              attempts += 1 // lost the CAS race: rebuild on new head
-          }
-      }
-    } finally rmTree(stageDir(epochId))
+    try GraftLakeCommitter.commitStaged(table, dataDir, writeSchema,
+      truncateFirst = false, op = None,
+      messages.flatMap { case GraftLakeTaskCommit(parts) => parts }
+        .groupBy(_.shard).view.mapValues(_.toSeq).toMap,
+      operationOverride = Some("streaming"),
+      txnUpdate = Some(queryId -> epochId), pinned = None,
+      // a replayed epoch after restart is an idempotent no-op
+      admit = v => GraftLakeIO.readTxns(GraftLakeIO.versionDir(dataDir, v))
+        .getOrElse(queryId, -1L) < epochId)
+    finally rmTree(stageDir(epochId))
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
@@ -3465,17 +3428,23 @@ class GraftLakeBatchWrite(table: GraftLakeTable, dataDir: String,
       truncateFirst, op,
       messages.flatMap { case GraftLakeTaskCommit(parts) => parts }
         .groupBy(_.shard).view.mapValues(_.toSeq).toMap,
-      operationOverride = None, txnUpdate = None)
+      operationOverride = None, txnUpdate = None,
+      pinned = Some(op.fold(GraftLakeIO.latestVersion(dataDir))(
+        _.snapshotV)))
     finally rmTree(stageDir)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     rmTree(stageDir)
 }
 
-/** The shared snapshot-building commit core: batch writes, row-level
-  * operations, and streaming epochs all build version N+1 the same
-  * way and differ only in their operation label and (for streaming)
-  * the txn watermark they record. */
+/** The shared snapshot-building fill: batch writes, row-level
+  * operations, streaming epochs and delta commits all build version
+  * N+1 the same way, through [[GraftLakeIO.commitSnapshot]], and differ
+  * in their operation label, their base (`pinned`: batch and row-level
+  * writes commit at the version they read or fail; streaming and delta
+  * commits take the head and retry a lost race), what `admit` checks
+  * against each attempt's base (false declines the commit), the txn
+  * watermark they record and the position deletes they add. */
 private[sources] object GraftLakeCommitter {
   def commitStaged(table: GraftLakeTable, dataDir: String,
       writeSchema: StructType, truncateFirst: Boolean,
@@ -3483,27 +3452,20 @@ private[sources] object GraftLakeCommitter {
       staged: Map[Int, Seq[GraftLakeCommit]],
       operationOverride: Option[String],
       txnUpdate: Option[(String, Long)],
+      pinned: Option[Int],
       extraDeletes: Map[Int, org.roaringbitmap.RoaringBitmap] =
         Map.empty,
-      baseVOverride: Option[Int] = None): Unit = {
-    // baseVOverride pins the base the caller VALIDATED against (the
-    // delta path's position-validity check) — any commit landing after
-    // that validation then fails the CAS instead of publishing deletes
-    // whose ordinals no longer bind
-    val baseV = baseVOverride.getOrElse(
-      op.fold(GraftLakeIO.latestVersion(dataDir))(_.snapshotV))
-    val baseDir = GraftLakeIO.versionDir(dataDir, baseV)
-    val build = GraftLakeIO.newBuildDir(dataDir)
-    try {
+      admit: Int => Boolean = _ => true): Unit = {
+    val operation = operationOverride
+      .orElse(op.map(_.command().name().toLowerCase(
+        java.util.Locale.ROOT)))
+      .getOrElse(if (truncateFirst) "overwrite" else "append")
+    def fill(baseV: Int, build: java.io.File): Unit = {
+      val baseDir = GraftLakeIO.versionDir(dataDir, baseV)
       val dropped: Set[Int] =
         if (truncateFirst) GraftLakeIO.existingShards(baseDir)
         else op.fold(Set.empty[Int])(_.replacedShards)
       val carriedBase = GraftLakeIO.existingShards(baseDir).diff(dropped)
-      def link(src: java.io.File, dst: java.io.File): Unit =
-        try java.nio.file.Files.createLink(dst.toPath, src.toPath): Unit
-        catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-          java.nio.file.Files.copy(src.toPath, dst.toPath): Unit
-        }
       val baseParts = GraftLakeIO.allShardParts(baseDir)
       // every carried shard — untouched OR appended-to — hardlinks its
       // existing parts verbatim: published parts are immutable, so an
@@ -3512,7 +3474,7 @@ private[sources] object GraftLakeCommitter {
       // for $changes and position-valid for stale delta commits.
       carriedBase.foreach { k =>
         baseParts.getOrElse(k, Nil).foreach(f =>
-          link(f, new java.io.File(build, f.getName)))
+          GraftLakeIO.linkOrCopy(f, new java.io.File(build, f.getName)))
       }
       val targetType = GraftShardCodec.messageType(writeSchema)
       // shard part-writes are independent — run them across a bounded
@@ -3532,26 +3494,14 @@ private[sources] object GraftLakeCommitter {
         if (srcs.lengthCompare(1) == 0) {
           // single staged file: adopt it directly (the stage dir is
           // unlinked after commit, the build's link keeps the bytes)
-          link(srcs.head, dst)
+          GraftLakeIO.linkOrCopy(srcs.head, dst)
           GraftLakeScanMetrics.adoptedParts.incrementAndGet(): Unit
         } else {
           GraftShardCodec.mergeShardFiles(dst, targetType, srcs)
           GraftLakeScanMetrics.mergedParts.incrementAndGet(): Unit
         }
       }
-      if (merges.lengthCompare(2) < 0) merges.foreach(_())
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(merges.length,
-            Runtime.getRuntime.availableProcessors()))
-        try {
-          val futures = merges.map(m =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = m()
-            }))
-          futures.foreach(_.get()) // propagate the first failure
-        } finally pool.shutdown()
-      }
+      GraftLakeIO.runBounded(merges)
       // zone maps for the new snapshot: carried shards keep the base
       // version's ranges verbatim; appended shards merge base + staged;
       // a shard the base had NO entry for stays entry-less (never
@@ -3765,26 +3715,10 @@ private[sources] object GraftLakeCommitter {
           }
         }
       GraftLakeIO.writeEqDel(build, eqOut)
-      val operation = operationOverride
-        .orElse(op.map(_.command().name().toLowerCase(
-          java.util.Locale.ROOT)))
-        .getOrElse(if (truncateFirst) "overwrite" else "append")
-      GraftLakeIO.writeCommitMeta(build,
-        GraftLakeIO.nextCommitStamp(dataDir, baseV), operation)
-      GraftLakeIO.commitVersion(dataDir, baseV, build): Unit
-    } catch {
-      case e: Throwable =>
-        // commitVersion cleans the build on CAS conflict; every other
-        // failure path must not leave the half-built dir behind
-        if (build.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(build)
-        }
-        throw e
     }
+    GraftLakeIO.commitSnapshot(dataDir, pinned, operation) {
+      (baseV, build) => Option.when(admit(baseV))(fill(baseV, build))
+    }: Unit
   }
 }
 
@@ -7863,15 +7797,7 @@ object Lake {
         dst.mkdirs()
         Option(src.listFiles()).foreach(_.foreach(f =>
           copyTree(f, new java.io.File(dst, f.getName))))
-      } else {
-        dst.delete()
-        try java.nio.file.Files.createLink(dst.toPath, src.toPath): Unit
-        catch {
-          case _: Exception => java.nio.file.Files.copy(src.toPath,
-            dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        }
-      }
+      } else GraftLakeIO.linkOrCopy(src, dst)
     def artifacts(n: String): Seq[String] = Seq(n, s"$n.lake.json")
     var built = false
     val memo = Memo.publish(

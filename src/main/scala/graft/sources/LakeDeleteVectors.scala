@@ -53,10 +53,9 @@ import org.roaringbitmap.RoaringBitmap
   * identity) before publishing; any concurrent rewrite or append of a
   * DV-touched shard raises [[GraftLakeCommitConflict]] instead of
   * deleting the wrong rows (Iceberg's position-delete conflict rule).
-  * The validated head is then pinned as the commit's CAS base
-  * (`baseVOverride`), closing the validate→publish window — a racing
-  * commit in between fails the CAS and this commit revalidates
-  * against the new head. Concurrent delta commits on DISJOINT shards
+  * The validated head is the commit's CAS base, closing the
+  * validate→publish window — a racing commit in between fails the
+  * CAS and this commit revalidates against the new head. Concurrent delta commits on DISJOINT shards
   * both land. */
 class GraftLakeDeltaOperation(table: GraftLakeTable,
     dataDir: String, info: RowLevelOperationInfo)
@@ -240,49 +239,39 @@ class GraftLakeDvBatchWrite(table: GraftLakeTable, dataDir: String,
       if (newDeletes.isEmpty && staged.isEmpty)
         return // DML matched nothing and inserted nothing: no commit
       val snapDir = GraftLakeIO.versionDir(dataDir, snapshotV)
-      var attempts = 0
-      while (true) {
-        val headV = GraftLakeIO.latestVersion(dataDir)
-        val headDir = GraftLakeIO.versionDir(dataDir, headV)
-        // position validity: a DV-touched shard's snapshot parts must
-        // still be an identity PREFIX of the head's parts — positions
-        // are concatenation ordinals, so a concurrent APPEND (new
-        // parts after the prefix) leaves every recorded ordinal
-        // binding the same row and COMMUTES with this commit, while a
-        // rewrite/compaction (prefix broken) means the ordinals may
-        // name the wrong rows and must conflict
-        newDeletes.keys.foreach { k =>
-          val snap = GraftLakeIO.shardParts(snapDir, k)
-          val head = GraftLakeIO.shardParts(headDir, k)
-          val prefixOk = snap.nonEmpty && head.length >= snap.length &&
-            snap.zip(head).forall { case (a, b) =>
-              java.nio.file.Files.isSameFile(a.toPath, b.toPath)
-            }
-          if (!prefixOk)
-            throw new GraftLakeCommitConflict(
-              s"$dataDir: shard $k was rewritten between snapshot " +
-                s"v$snapshotV and head v$headV — the position " +
-                "deletes no longer bind; re-run the statement " +
-                "against the new head")
-        }
-        try {
-          // the shared commit core does the rest: hardlink-carry of
-          // untouched shards, raw row-group append of staged parts,
-          // zone-map/routing/txn carry, DV carry ∪ newDeletes, and
-          // the CAS pinned at the JUST-VALIDATED head
-          GraftLakeCommitter.commitStaged(table, dataDir,
-            table.schema(), truncateFirst = false, op = None, staged,
-            operationOverride = Some(operation), txnUpdate = None,
-            extraDeletes = newDeletes.toMap,
-            baseVOverride = Some(headV))
-          return
-        } catch {
-          case _: GraftLakeCommitConflict if attempts < 5 =>
-            // CAS loss (commitStaged cleans its build): revalidate
-            // against the new head and retry
-            attempts += 1
-        }
-      }
+      // position validity, checked against each attempt's head: a
+      // DV-touched shard's snapshot parts must still be an identity
+      // PREFIX of the head's parts — positions are concatenation
+      // ordinals, so a concurrent APPEND (new parts after the prefix)
+      // leaves every recorded ordinal binding the same row and
+      // COMMUTES with this commit, while a rewrite/compaction (prefix
+      // broken) means the ordinals may name the wrong rows and must
+      // conflict. The shared commit core does the rest: hardlink-carry
+      // of untouched shards, raw row-group append of staged parts,
+      // zone-map/routing/txn carry, DV carry ∪ newDeletes, and the CAS
+      // at the just-validated head.
+      GraftLakeCommitter.commitStaged(table, dataDir, table.schema(),
+        truncateFirst = false, op = None, staged,
+        operationOverride = Some(operation), txnUpdate = None,
+        pinned = None, extraDeletes = newDeletes.toMap,
+        admit = { headV =>
+          val headDir = GraftLakeIO.versionDir(dataDir, headV)
+          newDeletes.keys.foreach { k =>
+            val snap = GraftLakeIO.shardParts(snapDir, k)
+            val head = GraftLakeIO.shardParts(headDir, k)
+            val prefixOk = snap.nonEmpty && head.length >= snap.length &&
+              snap.zip(head).forall { case (a, b) =>
+                java.nio.file.Files.isSameFile(a.toPath, b.toPath)
+              }
+            if (!prefixOk)
+              throw new GraftLakeCommitConflict(
+                s"$dataDir: shard $k was rewritten between snapshot " +
+                  s"v$snapshotV and head v$headV — the position " +
+                  "deletes no longer bind; re-run the statement " +
+                  "against the new head")
+          }
+          true
+        })
     } finally Memo.rmTree(stageDir)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -313,9 +302,11 @@ object GraftLakeMaintenance {
       threshold: Double = 0.1): Seq[Int] = {
     require(threshold >= 0.0 && threshold <= 1.0,
       s"threshold must be in [0,1], got $threshold")
-    var attempts = 0
-    while (true) {
-      val headV = GraftLakeIO.latestVersion(dataDir)
+    // the key columns for the equality masks (transforms cannot carry
+    // equality deletes, so the raw parse suffices)
+    lazy val keyCols = tableKeys(dataDir)._2
+    GraftLakeIO.commitSnapshot(dataDir, None, "optimize") {
+        (headV, build) =>
       val headDir = GraftLakeIO.versionDir(dataDir, headV)
       val dv = GraftLakeIO.readDv(headDir)
       val headParts = GraftLakeIO.allShardParts(headDir)
@@ -333,43 +324,11 @@ object GraftLakeMaintenance {
           rows > 0L && bm.getCardinality.toDouble / rows >= threshold
         } => k
       } ++ eqDel.keys).distinct.sorted
-      // the key columns for the equality masks, from the table
-      // descriptor beside the data dir (transforms cannot carry
-      // equality deletes, so the raw parse suffices); `upsertKeys`
-      // when declared (composite), the shard key otherwise
-      lazy val keyCols: Seq[String] = {
-        val d = new java.io.File(dataDir)
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val doc = om.readTree(java.nio.file.Files.readString(
-          new java.io.File(d.getParentFile,
-            s"${d.getName}.lake.json").toPath))
-        Option(doc.get("upsertKeys")).map(_.asText())
-          .filter(_.nonEmpty).fold(Seq(
-            GraftLakeTransform.parse(doc.get("shardKey").asText())._2))(
-            _.split(",").toSeq)
-      }
-      if (targets.isEmpty) return Nil
-      val build = GraftLakeIO.newBuildDir(dataDir)
-      try {
-        val targetFiles = targets
-          .flatMap(k => headParts.getOrElse(k, Nil))
-          .map(_.getName).toSet
-        Option(headDir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter { f =>
-            f.isFile && f.getName != "_commit" &&
-              f.getName != GraftLakeIO.dvFile(headDir).getName &&
-              f.getName != GraftLakeIO.eqDelFile(headDir).getName &&
-              !targetFiles.contains(f.getName)
-          }
-          .foreach { f =>
-            val dst = new java.io.File(build, f.getName)
-            try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-            catch {
-              case _: UnsupportedOperationException |
-                  _: java.io.IOException =>
-                java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-            }
-          }
+      Option.when(targets.nonEmpty) {
+        GraftLakeIO.linkSnapshot(headDir, build,
+          targets.flatMap(k => headParts.getOrElse(k, Nil))
+            .map(_.getName).toSet + GraftLakeIO.dvFile(headDir).getName +
+            GraftLakeIO.eqDelFile(headDir).getName)
         // each PART rewrites under its OWN schema (no value
         // conversion, evolution state preserved): the shard's vector
         // positions are concatenation ordinals, sliced per part by
@@ -378,7 +337,7 @@ object GraftLakeMaintenance {
         // for all) drop alongside them; a part left with zero live
         // rows is dropped entirely (seq numbers legitimately go
         // sparse)
-        val rewrites = targets.map { k => () =>
+        GraftLakeIO.runBounded(targets.map { k => () =>
           val mask = dv.getOrElse(k, new org.roaringbitmap.RoaringBitmap)
           val eq = eqDel.getOrElse(k, Map.empty[String, Long])
           var ordBase = 0L
@@ -419,39 +378,12 @@ object GraftLakeMaintenance {
             }
             ordBase += rows
           }
-        }
-        if (rewrites.lengthCompare(2) < 0) rewrites.foreach(_())
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(rewrites.length,
-              Runtime.getRuntime.availableProcessors()))
-          try {
-            val futures = rewrites.map(r =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                override def call(): Unit = r()
-              }))
-            futures.foreach(_.get())
-          } finally pool.shutdown()
-        }
+        })
         GraftLakeIO.writeDv(build, dv -- targets)
         GraftLakeIO.writeEqDel(build, eqDel -- targets)
-        GraftLakeIO.writeCommitMeta(build,
-          GraftLakeIO.nextCommitStamp(dataDir, headV), "optimize")
-        GraftLakeIO.commitVersion(dataDir, headV, build): Unit
-        return targets
-      } catch {
-        case _: GraftLakeCommitConflict if attempts < 5 =>
-          attempts += 1 // lost the CAS race: re-plan on the new head
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          if (build.exists()) rm(build)
-          throw e
+        targets
       }
-    }
-    Nil // unreachable
+    }.getOrElse(Nil)
   }
 
   /** SORT-REWRITE — Iceberg `rewrite_data_files(strategy => 'sort')`:
@@ -474,22 +406,13 @@ object GraftLakeMaintenance {
     * in memory at a time per pool thread. Commits as `optimize` with
     * CAS retry; returns the rewritten shard ids. */
   def rewriteSorted(dataDir: String): Seq[Int] = {
-    val d = new java.io.File(dataDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val doc = om.readTree(java.nio.file.Files.readString(
-      new java.io.File(d.getParentFile,
-        s"${d.getName}.lake.json").toPath))
-    val rawKey = doc.get("shardKey").asText()
+    val (rawKey, keyCols) = tableKeys(dataDir)
     val (transform, keyCol) = GraftLakeTransform.parse(rawKey)
     require(transform.isEmpty,
       s"rewrite_sorted: hidden-transform tables have no column sort " +
         s"order to restore (shard_key=$rawKey)")
-    val keyCols: Seq[String] =
-      Option(doc.get("upsertKeys")).map(_.asText())
-        .filter(_.nonEmpty).fold(Seq(keyCol))(_.split(",").toSeq)
-    var attempts = 0
-    while (true) {
-      val headV = GraftLakeIO.latestVersion(dataDir)
+    GraftLakeIO.commitSnapshot(dataDir, None, "optimize") {
+        (headV, build) =>
       val headDir = GraftLakeIO.versionDir(dataDir, headV)
       val dv = GraftLakeIO.readDv(headDir)
       val eqDel = GraftLakeIO.readEqDel(headDir)
@@ -502,30 +425,13 @@ object GraftLakeMaintenance {
               parts.map(f => GraftShardCodec.footer(f)._1)
                 .distinct.lengthCompare(1) == 0 => k
       }.toSeq.sorted
-      if (targets.isEmpty) return Nil
-      val build = GraftLakeIO.newBuildDir(dataDir)
-      try {
-        val targetFiles = targets
-          .flatMap(k => headParts.getOrElse(k, Nil))
-          .map(_.getName).toSet
-        Option(headDir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter { f =>
-            f.isFile && f.getName != "_commit" &&
-              f.getName != GraftLakeIO.dvFile(headDir).getName &&
-              f.getName != GraftLakeIO.eqDelFile(headDir).getName &&
-              f.getName != GraftLakeIO.sortedFile(headDir).getName &&
-              !targetFiles.contains(f.getName)
-          }
-          .foreach { f =>
-            val dst = new java.io.File(build, f.getName)
-            try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-            catch {
-              case _: UnsupportedOperationException |
-                  _: java.io.IOException =>
-                java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-            }
-          }
-        val rewrites = targets.map { k => () =>
+      Option.when(targets.nonEmpty) {
+        GraftLakeIO.linkSnapshot(headDir, build,
+          targets.flatMap(k => headParts.getOrElse(k, Nil))
+            .map(_.getName).toSet ++ Set(GraftLakeIO.dvFile(headDir),
+              GraftLakeIO.eqDelFile(headDir),
+              GraftLakeIO.sortedFile(headDir)).map(_.getName))
+        GraftLakeIO.runBounded(targets.map { k => () =>
           val mask = dv.getOrElse(k, new org.roaringbitmap.RoaringBitmap)
           val eq = eqDel.getOrElse(k, Map.empty[String, Long])
           val parts = GraftLakeIO.shardParts(headDir, k)
@@ -571,45 +477,17 @@ object GraftLakeMaintenance {
           val sorted = live.result().sortBy(_._1) // stable within key
           if (sorted.nonEmpty) {
             val writer = GraftShardCodec.openWriter(
-              new java.io.File(build,
-                GraftLakeIO.shardFile(build, k).getName), fileSchema)
+              GraftLakeIO.shardFile(build, k), fileSchema)
             try sorted.foreach { case (_, g) => writer.write(g) }
             finally writer.close()
           }
-        }
-        if (rewrites.lengthCompare(2) < 0) rewrites.foreach(_())
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(rewrites.length,
-              Runtime.getRuntime.availableProcessors()))
-          try {
-            val futures = rewrites.map(r =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                override def call(): Unit = r()
-              }))
-            futures.foreach(_.get())
-          } finally pool.shutdown()
-        }
+        })
         GraftLakeIO.writeDv(build, dv -- targets)
         GraftLakeIO.writeEqDel(build, eqDel -- targets)
         GraftLakeIO.writeSorted(build, sortedBase ++ targets)
-        GraftLakeIO.writeCommitMeta(build,
-          GraftLakeIO.nextCommitStamp(dataDir, headV), "optimize")
-        GraftLakeIO.commitVersion(dataDir, headV, build): Unit
-        return targets
-      } catch {
-        case _: GraftLakeCommitConflict if attempts < 5 =>
-          attempts += 1 // lost the CAS race: re-plan on the new head
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          if (build.exists()) rm(build)
-          throw e
+        targets
       }
-    }
-    Nil // unreachable
+    }.getOrElse(Nil)
   }
 
   /** PART-COUNT compaction — the file-compaction half of `OPTIMIZE`
@@ -628,9 +506,8 @@ object GraftLakeMaintenance {
     * returns the compacted shard ids. */
   def compactParts(dataDir: String, maxParts: Int = 4): Seq[Int] = {
     require(maxParts >= 1, s"maxParts must be >= 1, got $maxParts")
-    var attempts = 0
-    while (true) {
-      val headV = GraftLakeIO.latestVersion(dataDir)
+    GraftLakeIO.commitSnapshot(dataDir, None, "optimize") {
+        (headV, build) =>
       val headDir = GraftLakeIO.versionDir(dataDir, headV)
       val partsAll = GraftLakeIO.allShardParts(headDir)
       // equality-delete shards need NO exemption here: raw row-group
@@ -641,28 +518,13 @@ object GraftLakeMaintenance {
       val targets = partsAll.collect {
         case (k, parts) if parts.lengthCompare(maxParts) > 0 => k
       }.toSeq.sorted
-      if (targets.isEmpty) return Nil
-      val build = GraftLakeIO.newBuildDir(dataDir)
-      try {
-        val targetFiles = targets
-          .flatMap(k => partsAll.getOrElse(k, Nil))
-          .map(_.getName).toSet
-        Option(headDir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && f.getName != "_commit" &&
-            !targetFiles.contains(f.getName))
-          .foreach { f =>
-            val dst = new java.io.File(build, f.getName)
-            try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-            catch {
-              case _: UnsupportedOperationException |
-                  _: java.io.IOException =>
-                java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-            }
-          }
-        val merges = targets.map { k => () =>
-          val parts = partsAll(k)
+      Option.when(targets.nonEmpty) {
+        GraftLakeIO.linkSnapshot(headDir, build,
+          targets.flatMap(k => partsAll.getOrElse(k, Nil))
+            .map(_.getName).toSet)
+        GraftLakeIO.runBounded(targets.map { k => () =>
           // adjacent identical-schema runs (footer schema equality)
-          val runs = parts.foldLeft(
+          val runs = partsAll(k).foldLeft(
             List.empty[List[(java.io.File,
               org.apache.parquet.schema.MessageType)]]) { (acc, f) =>
             val s = GraftShardCodec.footer(f)._1
@@ -675,47 +537,27 @@ object GraftLakeMaintenance {
           runs.foreach { run =>
             val dst = new java.io.File(build, run.head._1.getName)
             if (run.lengthCompare(1) == 0)
-              try java.nio.file.Files.createLink(dst.toPath,
-                run.head._1.toPath): Unit
-              catch {
-                case _: UnsupportedOperationException |
-                    _: java.io.IOException =>
-                  java.nio.file.Files.copy(run.head._1.toPath,
-                    dst.toPath): Unit
-              }
+              GraftLakeIO.linkOrCopy(run.head._1, dst)
             else GraftShardCodec.mergeShardFiles(dst, run.head._2,
               run.map(_._1))
           }
-        }
-        if (merges.lengthCompare(2) < 0) merges.foreach(_())
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(merges.length,
-              Runtime.getRuntime.availableProcessors()))
-          try {
-            val futures = merges.map(m =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                override def call(): Unit = m()
-              }))
-            futures.foreach(_.get())
-          } finally pool.shutdown()
-        }
-        GraftLakeIO.writeCommitMeta(build,
-          GraftLakeIO.nextCommitStamp(dataDir, headV), "optimize")
-        GraftLakeIO.commitVersion(dataDir, headV, build): Unit
-        return targets
-      } catch {
-        case _: GraftLakeCommitConflict if attempts < 5 =>
-          attempts += 1 // lost the CAS race: re-plan on the new head
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          if (build.exists()) rm(build)
-          throw e
+        })
+        targets
       }
-    }
-    Nil // unreachable
+    }.getOrElse(Nil)
+  }
+
+  /** The table's raw `shardKey` and its equality-delete key columns
+    * (`upsertKeys` when declared — composite — the shard key's column
+    * otherwise), from the descriptor beside the data dir. */
+  private def tableKeys(dataDir: String): (String, Seq[String]) = {
+    val d = new java.io.File(dataDir)
+    val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(new java.io.File(d.getParentFile,
+        s"${d.getName}.lake.json").toPath))
+    val rawKey = doc.get("shardKey").asText()
+    (rawKey, Option(doc.get("upsertKeys")).map(_.asText())
+      .filter(_.nonEmpty)
+      .fold(Seq(GraftLakeTransform.parse(rawKey)._2))(_.split(",").toSeq))
   }
 }

@@ -302,13 +302,8 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
     val build = GraftLakeIO.newBuildDir(dataDir)
     try {
       if (!truncateFirst)
-        GraftMongoIO.shardFiles(dataDir).foreach { f =>
-          val dst = new java.io.File(build, f.getName)
-          try java.nio.file.Files.createLink(dst.toPath, f.toPath): Unit
-          catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(f.toPath, dst.toPath): Unit
-          }
-        }
+        GraftMongoIO.shardFiles(dataDir).foreach(f =>
+          GraftLakeIO.linkOrCopy(f, new java.io.File(build, f.getName)))
       messages.foreach { case GraftMongoCommit(path) =>
         val f = new java.io.File(path)
         // commit-unique names: carried shards from earlier commits may

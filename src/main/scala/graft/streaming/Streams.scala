@@ -144,20 +144,6 @@ object Streams {
     // exactly what the replay-equivalence specs re-run
     ns.conf.set("spark.sql.streaming.checkpointLocation",
       s"$scratchCheckpointRoot/run_${streamRunSeq.incrementAndGet()}")
-    // State-store provider A/B knob (BASELINE.md records the numbers):
-    // SPARK_GRAFT_STATE_STORE=rocksdb flips every registered stateful
-    // stream to RocksDB. Default stays HDFS-backed — measured FASTER
-    // at harness scale for the heavy stream-stream outer joins (tiny
-    // per-epoch state, 4 micro-batches: the JNI + per-commit
-    // checkpoint/compaction overhead outweighs off-heap wins until
-    // state outgrows executor memory; on a 100 TB cluster with
-    // million-key state the trade flips, which is why it's a knob,
-    // not a fork: stream_tws_running_agg pins the RocksDB binding
-    // itself).
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      ns.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
     ns
   }
 
@@ -430,10 +416,7 @@ object Streams {
       s"${System.getProperty("java.io.tmpdir")}/graft_fbsink_" +
         s"${ProcessHandle.current().pid()}_" +
         java.lang.Integer.toHexString(dir.hashCode))
-    if (out.exists()) {
-      out.listFiles().foreach(_.delete())
-      out.delete()
-    }
+    Memo.rmTree(out)
     val q = eventStream(s, dir)
       .selectExpr("event_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts",
         "user_id", "event_type", "value")

@@ -253,20 +253,101 @@ class RegistryGuardSpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  private def lineOf(src: String, at: Int): Int =
+    src.substring(0, at).count(_ == '\n') + 1
+
+  /** Private file-tree deletes in `src`, under any name: a def that
+    * calls itself and deletes, a `Files.walk` feeding a delete, or a
+    * `listFiles` sweep deleting each entry. */
+  private def treeDeletes(src: String): Seq[Int] = {
+    val del = raw"\.delete\(|Files\.delete(IfExists)?\(".r
+    val recursive = raw"\bdef\s+(\w+)".r.findAllMatchIn(src).filter { m =>
+      val rest = src.substring(m.end)
+      val body = rest.take(raw"\b(def|class|object|trait)\s".r
+        .findFirstMatchIn(rest).fold(rest.length)(_.start))
+      raw"\b${m.group(1)}\s*[()]".r.findFirstIn(body).nonEmpty &&
+        del.findFirstIn(body).nonEmpty
+    }
+    val walks = raw"Files\.walk\(".r.findAllMatchIn(src)
+      .filter(m => del.findFirstIn(src.slice(m.end, m.end + 200)).nonEmpty)
+    val sweeps = raw"foreach\(_\.delete\(\)\)".r.findAllMatchIn(src)
+    (recursive ++ walks ++ sweeps).map(m => lineOf(src, m.start)).toSeq
+  }
+
   test("source lint: tmpdir memos publish and trees are removed only " +
       "through Memo") {
     // one publish protocol (marker + lock) and one rmTree: a private
     // copy, or a memo trusting Spark's own completion file, is how the
     // per-site protocols drifted apart
+    Seq("def rm(f: File): Unit = {\n  Option(f.listFiles())" +
+        ".foreach(_.foreach(rm))\n  f.delete(): Unit\n}",
+      "def drop(p: Path): Unit = { Files.list(p).forEach(drop); " +
+        "Files.delete(p) }",
+      "Files.walk(t).sorted(rev).forEach(p => Files.delete(p))",
+      "out.listFiles().foreach(_.delete())")
+      .foreach(bad => assert(treeDeletes(bad).nonEmpty, bad))
+    Seq("def abort(): Unit = { out.close(); file.delete(): Unit }",
+      "def rm(f: File): Unit = Memo.rmTree(f)",
+      "Files.walk(root).count()")
+      .foreach(ok => assert(treeDeletes(ok).isEmpty, ok))
     val offenders = for {
       f <- scalaFiles(new java.io.File("src/main/scala/graft"))
       if f.getName != "Memo.scala"
-      lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
-      (line, i) <- lines.zipWithIndex
-      if line.contains("def rmTree") || line.contains("\"_SUCCESS\"")
-    } yield s"${f.getName}:${i + 1}"
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      lines = src.split("\n", -1).toVector
+      i <- (lines.indices.filter(i => lines(i).contains("def rmTree") ||
+        lines(i).contains("\"_SUCCESS\"")).map(_ + 1) ++
+        treeDeletes(src)).distinct.sorted
+    } yield s"${f.getName}:$i"
     assert(offenders.isEmpty,
-      s"memo protocol or rmTree outside Memo: ${offenders.mkString(", ")}")
+      s"memo protocol or tree delete outside Memo: " +
+        offenders.mkString(", "))
+  }
+
+  /** Hardlinks and snapshot commits in `src` that bypass
+    * GraftLakeIO's commit routine: `Files.createLink` outside
+    * `linkOrCopy`, and `commitVersion(` calls outside `commitSnapshot`
+    * and the document store's `GraftMongoBatchWrite` (which has no
+    * `_commit` stamp). The enclosing def or class is the nearest one
+    * declared before the call. */
+  private def commitBypasses(src: String): Seq[(Int, String)] = {
+    def nearest(at: Int, kw: String): String =
+      raw"\b$kw\s+(\w+)".r.findAllMatchIn(src.substring(0, at))
+        .foldLeft("")((_, m) => m.group(1))
+    val links = raw"Files\.createLink\(".r.findAllMatchIn(src)
+      .filter(m => nearest(m.start, "def") != "linkOrCopy")
+      .map(m => lineOf(src, m.start) -> "Files.createLink")
+    val commits = raw"(?<!def )commitVersion\(".r.findAllMatchIn(src)
+      .filter(m => nearest(m.start, "def") != "commitSnapshot" &&
+        nearest(m.start, "class") != "GraftMongoBatchWrite")
+      .map(m => lineOf(src, m.start) -> "commitVersion")
+    (links ++ commits).toSeq
+  }
+
+  test("source lint: lake snapshots are linked and committed only " +
+      "through GraftLakeIO's commit routine") {
+    Seq("def carry(a: File, b: File) = Files.createLink(b.toPath, a.toPath)",
+      "object W { def commit() = GraftLakeIO.commitVersion(d, 1, b) }",
+      "class GraftMongoBatchWrite { def commit() = 1 }\n" +
+        "class Other { def commit() = GraftLakeIO.commitVersion(d, 1, b) }")
+      .foreach(bad => assert(commitBypasses(bad).nonEmpty, bad))
+    Seq("def linkOrCopy(s: File, d: File) = Files.createLink(d.toPath, " +
+        "s.toPath)",
+      "def commitSnapshot[T](d: String) = { commitVersion(d, 1, b) }",
+      "def commitVersion(dataDir: String, base: Int) = 1",
+      "class GraftMongoBatchWrite { def commit() = " +
+        "GraftLakeIO.commitVersion(d, 1, b) }")
+      .foreach(ok => assert(commitBypasses(ok).isEmpty, ok))
+    val offenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      (line, what) <- commitBypasses(src)
+    } yield s"${f.getName}:$line ($what)"
+    assert(offenders.isEmpty,
+      s"lake links or commits outside GraftLakeIO.commitSnapshot: " +
+        offenders.mkString(", "))
   }
 
   /** Parquet opens in `src` that bypass the codec's shared Hadoop
@@ -305,9 +386,7 @@ class RegistryGuardSpec extends SparkSpec {
         (if (!src.contains("VectorizedParquetRecordReader")) Nil
         else calls(".initialize(", _ == 2)
           .map(_ -> "two-argument vectorized initialize"))
-    hits.map { case (at, what) =>
-      (src.substring(0, at).count(_ == '\n') + 1, what)
-    }
+    hits.map { case (at, what) => (lineOf(src, at), what) }
   }
 
   test("source lint: Parquet and Hadoop-conf opens go through " +
