@@ -1750,33 +1750,39 @@ object GraftLakeIO {
   // the live key count. Readers mask by key+ordinal; writers record
   // the appended part's base ordinal for each staged key — O(batch),
   // no target data file is ever read. Keys are ENCODED STRINGS
-  // ([[encodeEqKey]]) so composite and string-typed CDC keys carry the
+  // ([[eqKey]]) so composite and string-typed CDC keys carry the
   // same way single BIGINT keys always did.
 
   def eqDelFile(vdir: java.io.File): java.io.File =
     new java.io.File(vdir, "_eqdel.json")
 
-  /** Canonical string of one upsert-key part (the typed column value
-    * as decoded by the shard codec); null parts are the caller's to
-    * refuse — a null can never address an equality delete. */
-  def eqKeyPart(v: Any): String = v match {
-    case null => null
-    case l: java.lang.Long => l.toString
-    case i: java.lang.Integer => i.toString
-    case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-    case s: String => s
-    case other => throw new IllegalArgumentException(
-      s"unsupported upsert key part $other (${other.getClass})")
-  }
-
-  /** Encode an upsert key: a SINGLE part is its canonical string
-    * verbatim (byte-identical to the original BIGINT-keyed layout, so
-    * existing sidecars and fixtures keep reading); a COMPOSITE key is
-    * the length-prefixed join of its parts — unambiguous for
-    * arbitrary string content, no escaping needed. */
-  def encodeEqKey(parts: Seq[String]): String =
-    if (parts.lengthCompare(1) == 0) parts.head
+  /** The encoded upsert key of `row`: its columns `ords`, typed
+    * `types`, each as its canonical string. A SINGLE part is that
+    * string verbatim (byte-identical to the original BIGINT-keyed
+    * layout, so existing sidecars and fixtures keep reading); a
+    * COMPOSITE key is the length-prefixed join of its parts —
+    * unambiguous for arbitrary string content, no escaping needed.
+    * Null when any part is null: a null can never address an equality
+    * delete. */
+  def eqKey(row: InternalRow, ords: Array[Int],
+      types: Array[DataType]): String = {
+    val parts = new Array[String](ords.length)
+    var j = 0
+    while (j < ords.length) {
+      val o = ords(j)
+      if (row.isNullAt(o)) return null
+      parts(j) = types(j) match {
+        case LongType | TimestampType => row.getLong(o).toString
+        case IntegerType | DateType => row.getInt(o).toString
+        case StringType => row.getUTF8String(o).toString
+        case other => throw new IllegalArgumentException(
+          s"unsupported upsert key type $other")
+      }
+      j += 1
+    }
+    if (parts.length == 1) parts(0)
     else parts.map(p => s"${p.length}:$p").mkString("|")
+  }
 
   def readEqDel(vdir: java.io.File): Map[Int, Map[String, Long]] = {
     val f = eqDelFile(vdir)
@@ -1967,8 +1973,10 @@ object GraftLakeIO {
         !skip.contains(f.getName))
       .foreach(f => linkOrCopy(f, new java.io.File(build, f.getName)))
 
-  /** Run independent tasks on at most one thread per core; the first
-    * failure propagates once every task has been submitted. */
+  /** Run independent tasks on at most one thread per core. The first
+    * failure cancels and interrupts the other tasks and propagates only
+    * once none is still running, so a caller that cleans up after it
+    * (the commit routine removing its build) races no straggler. */
   def runBounded(tasks: Seq[() => Unit]): Unit =
     if (tasks.lengthCompare(2) < 0) tasks.foreach(_())
     else {
@@ -1977,7 +1985,13 @@ object GraftLakeIO {
       try tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = t()
       })).foreach(_.get())
-      finally pool.shutdown()
+      catch {
+        case e: Throwable =>
+          pool.shutdownNow(): Unit
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS): Unit
+          throw e
+      } finally pool.shutdown()
     }
 
   /** Optimistic compare-and-swap publish of an ALREADY-MATERIALIZED
@@ -3137,81 +3151,47 @@ class GraftLakeChangesReader(p: GraftLakeChangesPartition,
   // row identity for image pairing: the UPSERT key (composite for
   // equality-delete tables, the plain shard-key column otherwise)
   private val keyIdxs = pairKeys.map(dataSchema.fieldIndex).toArray
+  private val keyTypes = keyIdxs.map(dataSchema(_).dataType)
+  private val types = dataSchema.fields.map(_.dataType)
 
-  private def encKey(r: Array[Any]): String = {
-    val parts = keyIdxs.map(i => GraftLakeIO.eqKeyPart(r(i)))
-    if (parts.contains(null)) null
-    else GraftLakeIO.encodeEqKey(parts.toSeq)
-  }
-
-  // each side is masked by ITS OWN version's deletion vector before
-  // diffing (positions are CONCATENATION ordinals across the part
-  // list): a row whose position entered the post DV reads as absent
-  // there and emits a `delete`, exactly like a physical removal
-  private def eqDead(eq: Map[String, Long], r: Array[Any],
-      ord: Long): Boolean =
-    eq.nonEmpty && {
-      val k = encKey(r)
-      k != null && eq.get(k).exists(ord < _)
-    }
-
-  private def readAll(paths: Seq[String],
-      dvB: Array[Byte], eq: Map[String, Long]): Seq[Array[Any]] =
-    if (paths.isEmpty) Nil
-    else {
-      val dv = GraftLakeIO.dvOf(dvB)
-      paths.iterator.flatMap(p =>
-        GraftShardCodec.readRows(new java.io.File(p), dataSchema))
-        .zipWithIndex
-        .collect { case (r, i)
-          if !dv.contains(i) && !eqDead(eq, r, i.toLong) => r }
-        .toVector
-    }
+  // each side is read through the lake reader, masked by ITS OWN
+  // version's deletion vector and equality deletes before diffing
+  // (positions are CONCATENATION ordinals across the part list): a
+  // row whose position entered the post DV reads as absent there and
+  // emits a `delete`, exactly like a physical removal
+  private def side(paths: Seq[String], dv: Array[Byte],
+      eq: Map[String, Long]): Iterator[InternalRow] with AutoCloseable =
+    GraftLakeColumnarPartitionReader.rows(
+      new GraftLakeColumnarPartitionReader(paths, p.shard, dataSchema,
+        dv, eqDel = eq, eqKeys = pairKeys))
 
   // the POST side STREAMS (only the pre side needs indexing — the
-  // asymmetry of a hash join): peak memory is one shard map + one row,
-  // not two shard copies. The handles are kept so close() releases
-  // every opened part even when the consumer stops early (a LIMITed
-  // CDC read).
-  private val postClosers =
-    scala.collection.mutable.Buffer[AutoCloseable]()
-  private def postLines: Iterator[Array[Any]] =
-    if (p.postPaths.isEmpty) Iterator.empty
-    else {
-      val dv = GraftLakeIO.dvOf(p.postDv)
-      p.postPaths.iterator.flatMap { path =>
-        val (it, c) = GraftShardCodec.readRowsCloseable(
-          new java.io.File(path), dataSchema)
-        postClosers += c
-        it
-      }.zipWithIndex.collect { case (r, i)
-        if !dv.contains(i) && !eqDead(p.postEq, r, i.toLong) => r }
-    }
+  // asymmetry of a hash join): peak memory is one shard map + one
+  // batch, not two shard copies. The handle is kept so close()
+  // releases the open part even when the consumer stops early (a
+  // LIMITed CDC read).
+  private val post = side(p.postPaths, p.postDv, p.postEq)
 
-  private def sameVals(a: Array[Any], b: Array[Any]): Boolean = {
-    var i = 0
-    while (i < a.length) {
-      val eq = (a(i), b(i)) match {
-        case (null, null) => true
-        case (null, _) | (_, null) => false
-        // boxed-Double universal == has NaN != NaN, which would emit a
-        // spurious update image pair for an unchanged NaN row; match
-        // Spark SQL's <=> (the DataFrame-level tableChanges'
-        // comparator): NaN equals NaN, and -0.0 equals 0.0
-        case (x: java.lang.Double, y: java.lang.Double) =>
-          x.doubleValue() == y.doubleValue() ||
-            (x.doubleValue().isNaN && y.doubleValue().isNaN)
-        case (x, y) => x == y
-      }
-      if (!eq) return false
-      i += 1
+  private def cells(r: InternalRow): Seq[Any] =
+    types.indices.map(i => if (r.isNullAt(i)) null else r.get(i, types(i)))
+
+  private def sameVals(a: InternalRow, b: InternalRow): Boolean =
+    cells(a).zip(cells(b)).forall {
+      case (null, null) => true
+      case (null, _) | (_, null) => false
+      // boxed-Double universal == has NaN != NaN, which would emit a
+      // spurious update image pair for an unchanged NaN row; match
+      // Spark SQL's <=> (the DataFrame-level tableChanges'
+      // comparator): NaN equals NaN, and -0.0 equals 0.0
+      case (x: java.lang.Double, y: java.lang.Double) =>
+        x.doubleValue() == y.doubleValue() ||
+          (x.doubleValue().isNaN && y.doubleValue().isNaN)
+      case (x, y) => x == y
     }
-    true
-  }
 
   private val rows: Iterator[InternalRow] = {
-    def keyOf(vals: Array[Any]): String = {
-      val k = encKey(vals)
+    def keyOf(r: InternalRow): String = {
+      val k = GraftLakeIO.eqKey(r, keyIdxs, keyTypes)
       if (k == null) throw new IllegalStateException(
         s"shard ${p.shard}: NULL in pairing key " +
           s"(${pairKeys.mkString(", ")}) — the change feed cannot " +
@@ -3219,21 +3199,22 @@ class GraftLakeChangesReader(p: GraftLakeChangesPartition,
       k
     }
     val preByKey = scala.collection.mutable.LinkedHashMap[String,
-      Array[Any]]()
-    readAll(p.prePaths, p.preDv, p.preEq).foreach { v =>
-      val k = keyOf(v)
+      InternalRow]()
+    val pre = side(p.prePaths, p.preDv, p.preEq)
+    try pre.foreach { r =>
+      val k = keyOf(r)
       require(!preByKey.contains(k),
         s"shard ${p.shard} v${p.version - 1}: duplicate key $k — the " +
           "change feed requires a unique shard key per shard")
-      preByKey.update(k, v)
-    }
-    def mk(tag: String, vals: Array[Any]): InternalRow =
+      preByKey.update(k, r.copy())
+    } finally pre.close()
+    def mk(tag: String, r: InternalRow): InternalRow =
       new GenericInternalRow(
-        (UTF8String.fromString(tag): Any) +: (p.version.toLong: Any) +:
-          vals)
+        ((UTF8String.fromString(tag): Any) +: (p.version.toLong: Any) +:
+          cells(r)).toArray)
     val matchedPre = scala.collection.mutable.Set[String]()
     val seenPost = scala.collection.mutable.Set[String]()
-    val fromPost = postLines.flatMap { v =>
+    val fromPost = post.flatMap { v =>
       val k = keyOf(v)
       require(!seenPost.contains(k),
         s"shard ${p.shard} v${p.version}: duplicate key $k — the " +
@@ -3262,7 +3243,7 @@ class GraftLakeChangesReader(p: GraftLakeChangesPartition,
   override def next(): Boolean =
     if (rows.hasNext) { cur = rows.next(); true } else false
   override def get(): InternalRow = cur
-  override def close(): Unit = postClosers.foreach(_.close())
+  override def close(): Unit = post.close()
 }
 
 /** Writes route every row to its group (floorMod of the shard key) in
@@ -3683,15 +3664,19 @@ private[sources] object GraftLakeCommitter {
           // via the canonical single/length-prefixed layout)
           val keyFields = StructType(table.upsertKeys.map(n =>
             table.declared(table.declared.fieldIndex(n))))
-          val keys = GraftShardCodec.readRows(part, keyFields)
-            .map { row =>
-              val parts = row.map(GraftLakeIO.eqKeyPart)
-              require(!parts.contains(null),
-                s"${table.tableName}: write_upsert=equality-delete " +
-                  "refuses NULL upsert key parts — a null can never " +
-                  "address the older version it should replace")
-              GraftLakeIO.encodeEqKey(parts.toSeq)
-            }.toSeq
+          val keyTypes = keyFields.fields.map(_.dataType)
+          val rows = GraftLakeColumnarPartitionReader.rows(
+            new GraftLakeColumnarPartitionReader(Seq(part.getPath), k,
+              keyFields))
+          val keys = try rows.map { row =>
+            val key = GraftLakeIO.eqKey(row, keyTypes.indices.toArray,
+              keyTypes)
+            require(key != null,
+              s"${table.tableName}: write_upsert=equality-delete " +
+                "refuses NULL upsert key parts — a null can never " +
+                "address the older version it should replace")
+            key
+          }.toVector finally rows.close()
           // enforce the documented batch contract AT WRITE TIME:
           // duplicate keys within one appended batch all sit at
           // ord >= bound, so every copy would stay live — silently

@@ -148,13 +148,14 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
   }
 
   /** Ordinal-masked liveness: DV positions (int ordinals) and
-    * equality-deleted key versions. `keyOf` builds row i's ENCODED
-    * upsert key from the batch's key columns, null when any part is
-    * null (unaddressable — left live). */
-  private def live(ord: Long, keyOf: Int => String, i: Int): Boolean = {
+    * equality-deleted key versions (`key at ord < bound(key)`; a row
+    * with a null key part is unaddressable and stays live). `keyTypes`
+    * is null when the part is not key-masked. */
+  private def live(batch: ColumnarBatch, i: Int, ord: Long,
+      keyTypes: Array[DataType]): Boolean = {
     if (ord <= Int.MaxValue && dv.contains(ord.toInt)) return false
-    if (eqKeyBatchIdxs != null) {
-      val k = keyOf(i)
+    if (keyTypes != null) {
+      val k = GraftLakeIO.eqKey(batch.getRow(i), eqKeyBatchIdxs, keyTypes)
       if (k != null && eqDel.get(k).exists(ord < _)) return false
     }
     true
@@ -197,29 +198,17 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     * `batch`, or from no data page when null) into [[out]]; false when
     * none is live. */
   private def emit(batch: ColumnarBatch, n: Int, start: Long): Boolean = {
-    val keyCols =
-      if (eqKeyBatchIdxs != null) eqKeyBatchIdxs.map(batch.column)
+    val keyTypes =
+      if (eqKeyBatchIdxs != null)
+        eqKeyBatchIdxs.map(batch.column(_).dataType())
       else null
-    val keyOf: Int => String = i =>
-      if (keyCols == null) null
-      else {
-        val parts = keyCols.map { c =>
-          if (c.isNullAt(i)) null
-          else c.dataType() match {
-            case LongType | TimestampType => c.getLong(i).toString
-            case IntegerType | DateType => c.getInt(i).toString
-            case StringType => c.getUTF8String(i).toString
-            case other => throw new IllegalArgumentException(
-              s"unsupported upsert key type $other")
-          }
-        }
-        if (parts.contains(null)) null
-        else GraftLakeIO.encodeEqKey(parts.toSeq)
-      }
     var liveN = 0
     var i = 0
     while (i < n) {
-      if (live(start + i, keyOf, i)) { sel(liveN) = i; liveN += 1 }
+      if (live(batch, i, start + i, keyTypes)) {
+        sel(liveN) = i
+        liveN += 1
+      }
       i += 1
     }
     if (liveN == 0) return false
@@ -277,4 +266,34 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     shardConst.close()
     nullConsts.foreach(_.close())
   }
+}
+
+object GraftLakeColumnarPartitionReader {
+
+  /** The live rows of `reader`, one at a time, for consumers that work
+    * row by row (the change feed, commits, maintenance rewrites). A
+    * row is a view into the current batch, valid until the iterator
+    * moves on: `copy()` one to keep it. The reader is closed at
+    * exhaustion or on `close()`, whichever comes first. */
+  def rows(reader: PartitionReader[ColumnarBatch])
+      : Iterator[InternalRow] with AutoCloseable =
+    new Iterator[InternalRow] with AutoCloseable {
+      private var batch: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      private var closed = false
+      override def hasNext: Boolean = {
+        while (!batch.hasNext && !closed)
+          if (reader.next()) batch = reader.get().rowIterator()
+          else close()
+        batch.hasNext
+      }
+      override def next(): InternalRow =
+        if (hasNext) batch.next()
+        else throw new NoSuchElementException("no more lake rows")
+      override def close(): Unit = if (!closed) {
+        closed = true
+        batch = java.util.Collections.emptyIterator()
+        reader.close()
+      }
+    }
 }

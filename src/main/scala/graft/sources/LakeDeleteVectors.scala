@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions,
   NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, IntegerType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import org.roaringbitmap.RoaringBitmap
@@ -288,10 +288,10 @@ object GraftLakeMaintenance {
   /** Rewrite every shard whose DELETED FRACTION (vector cardinality /
     * file rows) is at least `threshold`, dropping the dead positions
     * and clearing the shard's vector entry; shards under the
-    * threshold hardlink-carry WITH their vectors. The rewrite is a
-    * straight Group copy under the FILE's own schema — no value
-    * conversion, schema-evolution state preserved verbatim — run
-    * across a bounded pool. Sidecars carry verbatim: base zone-map
+    * threshold hardlink-carry WITH their vectors. Each part's live
+    * rows are read by the lake reader and rewritten under the FILE's
+    * own schema — schema-evolution state preserved verbatim — across a
+    * bounded pool. Sidecars carry verbatim: base zone-map
     * ranges bound a superset of the surviving rows, so they stay
     * sound (just over-approximate until the shard's next real
     * rewrite); routing provenance and txn watermarks are untouched.
@@ -329,51 +329,31 @@ object GraftLakeMaintenance {
           targets.flatMap(k => headParts.getOrElse(k, Nil))
             .map(_.getName).toSet + GraftLakeIO.dvFile(headDir).getName +
             GraftLakeIO.eqDelFile(headDir).getName)
-        // each PART rewrites under its OWN schema (no value
-        // conversion, evolution state preserved): the shard's vector
-        // positions are concatenation ordinals, sliced per part by
-        // the running ordinal base; equality-dead rows (key at
-        // ordinal < bound — the reader's mask, applied here once and
-        // for all) drop alongside them; a part left with zero live
-        // rows is dropped entirely (seq numbers legitimately go
-        // sparse)
+        // each PART rewrites under its OWN schema (evolution state
+        // preserved), read alone at its running ordinal base so the
+        // shard's vector positions and equality bounds (concatenation
+        // ordinals) mask it exactly as a scan does — applied here once
+        // and for all; a part left with zero live rows is dropped
+        // entirely (seq numbers legitimately go sparse)
         GraftLakeIO.runBounded(targets.map { k => () =>
-          val mask = dv.getOrElse(k, new org.roaringbitmap.RoaringBitmap)
+          val dvB = GraftLakeIO.dvBytes(dv, k)
           val eq = eqDel.getOrElse(k, Map.empty[String, Long])
           var ordBase = 0L
           GraftLakeIO.shardParts(headDir, k).foreach { src =>
             val (fileSchema, rows) = GraftShardCodec.footer(src)
-            val eqIdxs: Array[Int] =
-              if (eq.isEmpty) null
-              else keyCols.map(fileSchema.getFieldIndex).toArray
-            def eqDead(g: org.apache.parquet.example.data.Group,
-                ord: Long): Boolean =
-              eqIdxs != null && {
-                val parts = eqIdxs.map(i =>
-                  GraftLakeIO.eqKeyPart(GraftShardCodec.rawValue(g, i)))
-                !parts.contains(null) &&
-                  eq.get(GraftLakeIO.encodeEqKey(parts.toSeq))
-                    .exists(ord < _)
-              }
-            val reader = GraftShardCodec.openReader(src, fileSchema)
+            val schema = GraftShardCodec.sparkSchema(fileSchema)
+            val fac = GraftShardCodec.groupFactory(fileSchema)
+            val live = liveRows(Seq(src), k, schema, dvB, Seq(ordBase),
+              eq, keyCols)
             var writer: org.apache.parquet.hadoop.ParquetWriter[
               org.apache.parquet.example.data.Group] = null
-            try {
-              var ord = ordBase
-              var g = reader.read()
-              while (g != null) {
-                if ((ord > Int.MaxValue || !mask.contains(ord.toInt)) &&
-                  !eqDead(g, ord)) {
-                  if (writer == null) // open lazily: all-dead parts drop
-                    writer = GraftShardCodec.openWriter(
-                      new java.io.File(build, src.getName), fileSchema)
-                  writer.write(g)
-                }
-                ord += 1
-                g = reader.read()
-              }
+            try live.foreach { r =>
+              if (writer == null) // open lazily: all-dead parts drop
+                writer = GraftShardCodec.openWriter(
+                  new java.io.File(build, src.getName), fileSchema)
+              writer.write(GraftShardCodec.toGroup(fac, schema, r))
             } finally {
-              reader.close()
+              live.close()
               if (writer != null) writer.close()
             }
             ordBase += rows
@@ -432,54 +412,30 @@ object GraftLakeMaintenance {
               GraftLakeIO.eqDelFile(headDir),
               GraftLakeIO.sortedFile(headDir)).map(_.getName))
         GraftLakeIO.runBounded(targets.map { k => () =>
-          val mask = dv.getOrElse(k, new org.roaringbitmap.RoaringBitmap)
-          val eq = eqDel.getOrElse(k, Map.empty[String, Long])
           val parts = GraftLakeIO.shardParts(headDir, k)
           val fileSchema = GraftShardCodec.footer(parts.head)._1
-          val keyIdx = fileSchema.getFieldIndex(keyCol)
-          val eqIdxs: Array[Int] =
-            if (eq.isEmpty) null
-            else keyCols.map(fileSchema.getFieldIndex).toArray
-          def eqDead(g: org.apache.parquet.example.data.Group,
-              ord: Long): Boolean =
-            eqIdxs != null && {
-              val ps = eqIdxs.map(i =>
-                GraftLakeIO.eqKeyPart(GraftShardCodec.rawValue(g, i)))
-              !ps.contains(null) &&
-                eq.get(GraftLakeIO.encodeEqKey(ps.toSeq))
-                  .exists(ord < _)
-            }
-          val live = Seq.newBuilder[
-            (Long, org.apache.parquet.example.data.Group)]
-          var ordBase = 0L
-          parts.foreach { src =>
-            val rows = GraftShardCodec.footer(src)._2
-            val reader = GraftShardCodec.openReader(src, fileSchema)
-            try {
-              var ord = ordBase
-              var g = reader.read()
-              while (g != null) {
-                if ((ord > Int.MaxValue || !mask.contains(ord.toInt)) &&
-                  !eqDead(g, ord)) {
-                  val key = GraftShardCodec.rawValue(g, keyIdx) match {
-                    case l: java.lang.Long => l.longValue
-                    case i: java.lang.Integer => i.longValue
-                    case _ => Long.MinValue // null keys sort first
-                  }
-                  live += key -> g
+          val schema = GraftShardCodec.sparkSchema(fileSchema)
+          val keyIdx = schema.fieldIndex(keyCol)
+          val live = liveRows(parts, k, schema, GraftLakeIO.dvBytes(dv, k),
+            Nil, eqDel.getOrElse(k, Map.empty[String, Long]), keyCols)
+          val sorted = // stable within key
+            try live.map { r =>
+              val key =
+                if (r.isNullAt(keyIdx)) Long.MinValue // nulls sort first
+                else schema(keyIdx).dataType match {
+                  case IntegerType | DateType => r.getInt(keyIdx).toLong
+                  case _ => r.getLong(keyIdx)
                 }
-                ord += 1
-                g = reader.read()
-              }
-            } finally reader.close()
-            ordBase += rows
-          }
-          val sorted = live.result().sortBy(_._1) // stable within key
+              key -> r.copy()
+            }.toVector.sortBy(_._1)
+            finally live.close()
           if (sorted.nonEmpty) {
+            val fac = GraftShardCodec.groupFactory(fileSchema)
             val writer = GraftShardCodec.openWriter(
               GraftLakeIO.shardFile(build, k), fileSchema)
-            try sorted.foreach { case (_, g) => writer.write(g) }
-            finally writer.close()
+            try sorted.foreach { case (_, r) =>
+              writer.write(GraftShardCodec.toGroup(fac, schema, r))
+            } finally writer.close()
           }
         })
         GraftLakeIO.writeDv(build, dv -- targets)
@@ -546,6 +502,17 @@ object GraftLakeMaintenance {
       }
     }.getOrElse(Nil)
   }
+
+  /** The live rows of one shard's `parts` (both masks applied by the
+    * lake reader, ordinals from `ordBases` when given), laid out as
+    * `schema`. */
+  private def liveRows(parts: Seq[java.io.File], shard: Int,
+      schema: StructType, dvB: Array[Byte], ordBases: Seq[Long],
+      eq: Map[String, Long], keyCols: => Seq[String])
+      : Iterator[InternalRow] with AutoCloseable =
+    GraftLakeColumnarPartitionReader.rows(
+      new GraftLakeColumnarPartitionReader(parts.map(_.getPath), shard,
+        schema, dvB, ordBases, eq, if (eq.isEmpty) Nil else keyCols))
 
   /** The table's raw `shardKey` and its equality-delete key columns
     * (`upsertKeys` when declared — composite — the shard key's column

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetReadSupport, ParquetToSparkSchemaConverter,
   VectorizedParquetRecordReader}
@@ -13,15 +14,12 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
-  GroupReadSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter,
-  ParquetInputFormat, ParquetReader, ParquetWriter}
+  ParquetInputFormat, ParquetWriter}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -30,9 +28,9 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
 
 /** COLUMNAR shard payloads for the lake catalog: each
   * `v<N>/shard-K.parquet` is a real parquet file written and read
-  * executor-side through the public parquet-hadoop Group API — no
-  * Spark job, no Hadoop FileSystem (`LocalInputFile`/`LocalOutputFile`,
-  * so no `.crc` sidecar noise in version dirs), no full-text parse.
+  * executor-side — no Spark job, no Hadoop FileSystem
+  * (`LocalInputFile`/`LocalOutputFile`, so no `.crc` sidecar noise in
+  * version dirs), no full-text parse.
   *
   * Why this matters at 100 TB (the reference ingests into real
   * engine storage — `fill_postgresql.sql:1-10`'s tables are heap
@@ -49,10 +47,15 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   *  - ENCODED + COMPRESSED pages (dictionary + snappy) instead of
   *    decimal-rendered text;
   *  - APPEND WITHOUT RE-ENCODE: commit-time shard merging copies raw
-  *    row groups ([[ParquetFileReader.appendTo]]) when schemas
-  *    match — I/O-bound byte movement, the same cost class as the old
-  *    text concatenation — and falls back to a Group-level re-encode
-  *    only for schema-evolved bases ([[mergeShardFiles]]).
+  *    row groups ([[ParquetFileReader.appendTo]]) between parts of one
+  *    schema — I/O-bound byte movement, the same cost class as the old
+  *    text concatenation ([[mergeShardFiles]]).
+  *
+  * Rows are written as parquet-mr example `Group`s ([[openWriter]],
+  * [[add]]): that is only the writer's record format. Every read of a
+  * part — scans, the change feed, commits and maintenance rewrites,
+  * document-store shards — decodes through Spark's vectorized reader
+  * ([[openVectorized]]).
   *
   * The commit protocol above this layer (CAS publish, hardlink
   * carrying, zone-map sidecars, routing provenance) is
@@ -147,6 +150,20 @@ object GraftShardCodec {
 
   def groupFactory(schema: MessageType): SimpleGroupFactory =
     new SimpleGroupFactory(schema)
+
+  /** `row`, laid out as `schema`, as a new Group of `fac` ([[add]] per
+    * non-null field). */
+  def toGroup(fac: SimpleGroupFactory, schema: StructType,
+      row: InternalRow): Group = {
+    val g = fac.newGroup()
+    var i = 0
+    while (i < schema.length) {
+      if (!row.isNullAt(i))
+        add(g, schema(i).name, row.get(i, schema(i).dataType))
+      i += 1
+    }
+    g
+  }
 
   /** Everything a planner reads from one part's footer: schema, total
     * rows, per-column null counts summed across row groups
@@ -311,19 +328,6 @@ object GraftShardCodec {
     b.named(fileSchema.getName)
   }
 
-  /** A Group reader over `file` decoding `projection`: a per-call
-    * clone of [[conf]] carries the read schema. */
-  def openReader(file: java.io.File,
-      projection: MessageType): ParquetReader[Group] = {
-    val c = new Configuration(conf)
-    c.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    new ParquetReader.Builder[Group](new LocalInputFile(file.toPath),
-        new HadoopParquetConfiguration(c)) {
-      override protected def getReadSupport(): ReadSupport[Group] =
-        new GroupReadSupport()
-    }.build()
-  }
-
   /** [[conf]] plus what the vectorized reader's `initialize(path,
     * columns)` convenience overload would set: the five
     * schema-conversion switches off and Spark's read support. */
@@ -354,10 +358,13 @@ object GraftShardCodec {
     vectorizedConfs.computeIfAbsent((fileSchema, names), { _ =>
       val c = new Configuration(vectorizedBase)
       c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
-        new ParquetToSparkSchemaConverter(vectorizedBase)
-          .convert(projectionFor(fileSchema, names)).json)
+        sparkSchema(projectionFor(fileSchema, names)).json)
       c
     })
+
+  /** The row schema the vectorized reader decodes `fileSchema` as. */
+  def sparkSchema(fileSchema: MessageType): StructType =
+    new ParquetToSparkSchemaConverter(vectorizedBase).convert(fileSchema)
 
   /** The confs [[vectorizedConf]] holds now (for tests). */
   private[graft] def memoizedVectorizedConfs: Seq[Configuration] =
@@ -399,48 +406,9 @@ object GraftShardCodec {
           s"TaskAttemptContext.${m.getName}")
     ).asInstanceOf[TaskAttemptContext]
 
-  /** One field of a Group as the JVM value the lake's InternalRows
-    * carry (java.lang boxes + UTF8String); null when unset. `idx` is
-    * the field's position in the READ projection. */
-  def value(g: Group, idx: Int, dt: DataType): Any = {
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    dt match {
-      case LongType | TimestampType => g.getLong(idx, 0)
-      case IntegerType | DateType => g.getInteger(idx, 0)
-      case DoubleType => g.getDouble(idx, 0)
-      case StringType => org.apache.spark.unsafe.types.UTF8String
-        .fromBytes(g.getBinary(idx, 0).getBytes)
-      case BooleanType => g.getBoolean(idx, 0)
-      case other => throw new IllegalArgumentException(
-        s"unsupported lake type: $other")
-    }
-  }
-
-  /** One field of a Group decoded by the FILE's own primitive type —
-    * for callers (the equality-delete key mask) that address a column
-    * without carrying its declared Spark type. Strings come back as
-    * java.lang.String (not UTF8String — key encoding wants the
-    * canonical form anyway). */
-  def rawValue(g: Group, idx: Int): Any = {
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-      case PrimitiveTypeName.INT64 =>
-        java.lang.Long.valueOf(g.getLong(idx, 0))
-      case PrimitiveTypeName.INT32 =>
-        java.lang.Integer.valueOf(g.getInteger(idx, 0))
-      case PrimitiveTypeName.BINARY =>
-        g.getBinary(idx, 0).toStringUsingUTF8
-      case PrimitiveTypeName.DOUBLE =>
-        java.lang.Double.valueOf(g.getDouble(idx, 0))
-      case PrimitiveTypeName.BOOLEAN =>
-        java.lang.Boolean.valueOf(g.getBoolean(idx, 0))
-      case other => throw new IllegalArgumentException(
-        s"unsupported raw column type: $other")
-    }
-  }
-
-  /** Append one JVM value (the same representation [[value]] reads)
-    * to a group under `name`; nulls are simply not added. */
+  /** Append one JVM value (java.lang boxes and UTF8String, as
+    * `InternalRow.get` returns them) to a group under `name`; nulls
+    * are simply not added. */
   def add(g: Group, name: String, v: Any): Unit = v match {
     case null => ()
     case l: java.lang.Long => g.add(name, l.longValue())
@@ -453,120 +421,28 @@ object GraftShardCodec {
       s"unsupported lake value $other (${other.getClass})")
   }
 
-  /** Read a whole shard file into JVM-typed rows laid out as
-    * `schema` (missing columns NULL) — the $changes differ and spec
-    * helpers use this; scans stream instead. */
-  def readRows(file: java.io.File,
-      schema: StructType): Iterator[Array[Any]] =
-    readRowsCloseable(file, schema)._1
-
-  /** [[readRows]] plus the underlying reader handle, for callers that
-    * may stop consuming early (a LIMITed scan) and must still release
-    * the file. The iterator also self-closes on exhaustion; closing
-    * twice is safe. */
-  def readRowsCloseable(file: java.io.File,
-      schema: StructType): (Iterator[Array[Any]], AutoCloseable) = {
-    val names = schema.fields.iterator.map(_.name).toSeq
-    val (fileSchema, _) = footer(file)
-    val proj = projectionFor(fileSchema, names)
-    val projIdx: Array[Int] = schema.fields.map(f =>
-      if (proj.containsField(f.name)) proj.getFieldIndex(f.name)
-      else -1)
-    val reader = openReader(file, proj)
-    var closed = false
-    val closer = new AutoCloseable {
-      override def close(): Unit =
-        if (!closed) { closed = true; reader.close() }
-    }
-    val it = new Iterator[Array[Any]] {
-      private var g: Group = reader.read()
-      override def hasNext: Boolean = {
-        if (g == null) closer.close()
-        g != null
-      }
-      override def next(): Array[Any] = {
-        val vals = new Array[Any](schema.length)
-        var i = 0
-        while (i < schema.length) {
-          vals(i) =
-            if (projIdx(i) < 0) null
-            else value(g, projIdx(i), schema(i).dataType)
-          i += 1
-        }
-        g = reader.read()
-        vals
-      }
-    }
-    (it, closer)
-  }
-
   /** Materialize `target` as the concatenation of `sources` (in
-    * order) under `targetSchema`. Sources whose file schema EQUALS the
-    * target schema are appended as raw row groups — no decode, no
-    * re-encode, pure I/O (the commit-time cost class of the old text
-    * concatenation). A schema-evolved source (columns since ADDed /
-    * DROPped) takes the Group re-encode fallback: rows are read under
-    * its own schema and rewritten under the target's, missing columns
-    * NULL, dropped columns gone. */
+    * order), appended as raw row groups — no decode, no re-encode, pure
+    * I/O (the commit-time cost class of the old text concatenation).
+    * Every source must carry `targetSchema` itself: staged parts are
+    * written under their commit's own schema, and part compaction
+    * merges only runs of one schema. */
   def mergeShardFiles(target: java.io.File, targetSchema: MessageType,
       sources: Seq[java.io.File]): Unit = {
-    val metas = sources.map(f => f -> footer(f)._1)
-    if (metas.forall(_._2 == targetSchema)) {
-      val w = new ParquetFileWriter(
-        new LocalOutputFile(target.toPath), targetSchema,
-        ParquetFileWriter.Mode.CREATE, RowGroupBytes,
-        /* maxPaddingSize = parquet's default */ 8388608)
-      w.start()
-      sources.foreach { f =>
-        val r = openFile(f)
-        try r.appendTo(w) finally r.close()
-      }
-      w.end(java.util.Collections.emptyMap[String, String]())
-    } else {
-      val kinds: Seq[(String, PrimitiveTypeName, Boolean)] =
-        (0 until targetSchema.getFieldCount).map { i =>
-          val t = targetSchema.getType(i).asPrimitiveType()
-          (t.getName, t.getPrimitiveTypeName,
-            t.getLogicalTypeAnnotation ==
-              LogicalTypeAnnotation.stringType())
-        }
-      val names = kinds.map(_._1)
-      val w = openWriter(target, targetSchema)
-      try {
-        val fac = groupFactory(targetSchema)
-        metas.foreach { case (f, fileSchema) =>
-          val proj = projectionFor(fileSchema, names)
-          val r = openReader(f, proj)
-          try {
-            var g = r.read()
-            while (g != null) {
-              val out = fac.newGroup()
-              kinds.foreach { case (n, ptn, isStr) =>
-                if (proj.containsField(n)) {
-                  val i = proj.getFieldIndex(n)
-                  if (g.getFieldRepetitionCount(i) > 0) ptn match {
-                    case PrimitiveTypeName.INT64 =>
-                      out.add(n, g.getLong(i, 0))
-                    case PrimitiveTypeName.INT32 =>
-                      out.add(n, g.getInteger(i, 0))
-                    case PrimitiveTypeName.DOUBLE =>
-                      out.add(n, g.getDouble(i, 0))
-                    case PrimitiveTypeName.BOOLEAN =>
-                      out.add(n, g.getBoolean(i, 0))
-                    case PrimitiveTypeName.BINARY if isStr =>
-                      out.add(n, g.getBinary(i, 0))
-                    case other =>
-                      throw new IllegalArgumentException(
-                        s"unsupported shard column $n: $other")
-                  }
-                }
-              }
-              w.write(out)
-              g = r.read()
-            }
-          } finally r.close()
-        }
-      } finally w.close()
+    sources.foreach { f =>
+      require(footer(f)._1 == targetSchema,
+        s"$f: cannot merge a part whose schema differs from the " +
+          s"target's:\n${footer(f)._1}\nvs\n$targetSchema")
     }
+    val w = new ParquetFileWriter(
+      new LocalOutputFile(target.toPath), targetSchema,
+      ParquetFileWriter.Mode.CREATE, RowGroupBytes,
+      /* maxPaddingSize = parquet's default */ 8388608)
+    w.start()
+    sources.foreach { f =>
+      val r = openFile(f)
+      try r.appendTo(w) finally r.close()
+    }
+    w.end(java.util.Collections.emptyMap[String, String]())
   }
 }

@@ -294,7 +294,8 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
     * resolved the pointer earlier keeps its immutable snapshot; a
     * concurrent WRITER that loses the race deletes only its own build
     * dir — it can never rmTree a just-published snapshot (the round-10
-    * shared-newDir flaw, closed here the same way as on the lake). */
+    * shared-newDir flaw, closed here the same way as on the lake). Any
+    * failure before the publish removes the build. */
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
       : Unit = {
@@ -314,6 +315,8 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       }
       GraftLakeIO.commitVersion(dataDir, baseV, build): Unit
+    } catch {
+      case e: Throwable => Memo.rmTree(build); throw e
     } finally Memo.rmTree(stageDir)
   }
   override def abort(
@@ -495,7 +498,7 @@ class GraftMongoReaderFactory(required: StructType,
         // parquet; the pre-seeded demo fixture (and any externally
         // staged wire dump) is extended-JSON text
         if (path.endsWith(".parquet"))
-          new GraftMongoParquetReader(path, required, bounds)
+          new GraftMongoColumnarReader(path, required, bounds)
         else new GraftMongoPartitionReader(path, required, bounds))
 }
 
@@ -534,33 +537,32 @@ object GraftMongoScanMetrics {
   * `_id` bounds before materializing the measure fields — the
   * columnar analog of the JSON reader's decode-`$date`-first
   * skipping. */
-class GraftMongoParquetReader(path: String, required: StructType,
+class GraftMongoColumnarReader(path: String, required: StructType,
     bounds: Option[(Long, Long)]) extends PartitionReader[InternalRow] {
 
   private val file = new java.io.File(path)
-  private val boundCol = bounds.map(_ => "_id")
-  private val wantNames =
-    (required.fieldNames.toSeq ++ boundCol).distinct
   private val (fileSchema, totalRows) = GraftShardCodec.footer(file)
-  private val projection =
-    GraftShardCodec.projectionFor(fileSchema, wantNames)
-  private val projIdx: Array[Int] = required.fields.map(f =>
-    if (projection.containsField(f.name))
-      projection.getFieldIndex(f.name)
-    else -1)
-  private val idIdx =
-    if (bounds.isDefined && projection.containsField("_id"))
-      projection.getFieldIndex("_id")
-    else -1
-  private val metadataOnly = projection.getFieldCount == 0
-  GraftMongoScanMetrics.decodedColumns
-    .addAndGet(projection.getFieldCount.toLong): Unit
+  // the requested columns stored in this shard, plus `_id` when pushed
+  // bounds need it; batch column i is names(i)
+  private val names = (required.fieldNames.toSeq ++
+    bounds.map(_ => "_id")).distinct.filter(fileSchema.containsField)
+  private val colIdx: Array[Int] = required.fieldNames.map(names.indexOf)
+  private val idIdx = if (bounds.isDefined) names.indexOf("_id") else -1
+  private val metadataOnly = names.isEmpty
+  GraftMongoScanMetrics.decodedColumns.addAndGet(names.length.toLong): Unit
   if (metadataOnly)
     GraftMongoScanMetrics.metadataOnlyReads.incrementAndGet(): Unit
   private val reader =
-    if (metadataOnly) null else GraftShardCodec.openReader(file, projection)
+    if (metadataOnly) null
+    else {
+      val vr = GraftShardCodec.openVectorized(file, fileSchema, names, 4096)
+      vr.initBatch(new StructType(), InternalRow.empty)
+      vr
+    }
 
   private var remaining = totalRows
+  private var batch: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
   private var row: InternalRow = _
 
   override def next(): Boolean = {
@@ -572,22 +574,23 @@ class GraftMongoParquetReader(path: String, required: StructType,
         if (bounds.isDefined || remaining <= 0L) return false
         remaining -= 1L
         row = new GenericInternalRow(required.length)
+      } else if (!batch.hasNext) {
+        if (!reader.nextBatch()) return false
+        batch = reader.resultBatch().rowIterator()
       } else {
-        val g = reader.read()
-        if (g == null) return false
+        val r = batch.next()
         val ok = bounds.forall { case (lo, hi) =>
-          idIdx >= 0 && g.getFieldRepetitionCount(idIdx) > 0 && {
-            val m = g.getLong(idIdx, 0); m >= lo && m <= hi
+          idIdx >= 0 && !r.isNullAt(idIdx) && {
+            val m = r.getLong(idIdx); m >= lo && m <= hi
           }
         }
         if (ok) {
           val vals = new Array[Any](required.length)
           var i = 0
           while (i < required.length) {
-            vals(i) =
-              if (projIdx(i) < 0) null
-              else GraftShardCodec.value(g, projIdx(i),
-                required(i).dataType)
+            val c = colIdx(i)
+            if (c >= 0 && !r.isNullAt(c))
+              vals(i) = r.get(c, required(i).dataType)
             i += 1
           }
           row = new GenericInternalRow(vals)

@@ -389,6 +389,22 @@ class RegistryGuardSpec extends SparkSpec {
     hits.map { case (at, what) => (lineOf(src, at), what) }
   }
 
+  /** Row-at-a-time Parquet reads in `src` (parquet-mr's Group
+    * reader and the codec entry points that wrapped it), and — outside
+    * the lake reader's own file — hand-written equality-delete masks:
+    * every shard row is read and masked by the vectorized lake
+    * reader. */
+  private def rowReads(src: String, file: String): Seq[(Int, String)] = {
+    val reads =
+      raw"GroupReadSupport|ParquetReader\b|\breadRows\(|\bopenReader\("
+        .r.findAllMatchIn(src).map(m => m.start -> m.matched).toSeq
+    val masks =
+      if (file == "LakeColumnarReader.scala") Nil
+      else raw"\.exists\(ord < _\)".r.findAllMatchIn(src)
+        .map(_.start -> "equality-delete mask").toSeq
+    (reads ++ masks).map { case (at, what) => (lineOf(src, at), what) }
+  }
+
   test("source lint: Parquet and Hadoop-conf opens go through " +
       "GraftShardCodec's one parsed conf") {
     // the lint itself catches every form it names
@@ -413,6 +429,34 @@ class RegistryGuardSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"Parquet/Hadoop-conf opens outside GraftShardCodec (use its " +
         s"shared conf): ${offenders.mkString(", ")}")
+    // and no row-at-a-time read or second liveness mask anywhere
+    Seq("import org.apache.parquet.hadoop.example.GroupReadSupport" ->
+        "X.scala",
+      "new ParquetReader.Builder[Group](in, c)" -> "X.scala",
+      "class GraftMongoParquetReader(path: String)" -> "X.scala",
+      "GraftShardCodec.readRows(f, schema)" -> "X.scala",
+      "val r = openReader(f, proj)" -> "LakeShardCodec.scala",
+      "eq.get(k).exists(ord < _)" -> "LakeDeleteVectors.scala")
+      .foreach { case (bad, file) =>
+        assert(rowReads(bad, file).nonEmpty, bad)
+      }
+    Seq("HadoopReadOptions.builder(conf).build()" -> "X.scala",
+      "var vr: VectorizedParquetRecordReader = null" -> "X.scala",
+      "ParquetFileReader.open(in, opts)" -> "X.scala",
+      "GraftLakeColumnarPartitionReader.rows(r)" -> "X.scala",
+      "eqDel.get(k).exists(ord < _)" -> "LakeColumnarReader.scala")
+      .foreach { case (ok, file) =>
+        assert(rowReads(ok, file).isEmpty, ok)
+      }
+    val rowOffenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      (line, what) <- rowReads(src, f.getName)
+    } yield s"${f.getName}:$line ($what)"
+    assert(rowOffenders.isEmpty,
+      s"row-at-a-time Parquet reads or liveness masks outside the " +
+        s"vectorized lake reader: ${rowOffenders.mkString(", ")}")
   }
 
   test("ORDER BY keys totally order every oracled result on the " +

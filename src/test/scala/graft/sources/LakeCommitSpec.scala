@@ -116,4 +116,44 @@ class LakeCommitSpec extends AnyFunSuite {
     assert(builds(dir).isEmpty)
     Memo.rmTree(new File(dir))
   }
+
+  test("a failing runBounded task stops its siblings before the error " +
+      "propagates, so the commit routine leaves no build behind") {
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    // the first task fails once its sibling is under way; the sibling
+    // sleeps, then runs `late`
+    def tasks(late: () => Unit): Seq[() => Unit] = {
+      val started = new java.util.concurrent.CountDownLatch(1)
+      Seq(() => {
+        started.await(5, java.util.concurrent.TimeUnit.SECONDS): Unit
+        throw new IllegalStateException("part write failed")
+      }, () => {
+        running.incrementAndGet(): Unit
+        started.countDown()
+        try { Thread.sleep(1000); late() }
+        finally running.decrementAndGet(): Unit
+      })
+    }
+    intercept[Exception](GraftLakeIO.runBounded(tasks(() => ())))
+    assert(running.get === 0, "a task still ran when runBounded threw")
+
+    val dir = freshTable()
+    commitMarker(dir, "a") // v1
+    intercept[Exception] {
+      GraftLakeIO.commitSnapshot(dir, None, "optimize") { (_, build) =>
+        GraftLakeIO.runBounded(tasks { () =>
+          // a straggler's part write, creating its parent dir
+          Files.createDirectories(build.toPath)
+          Files.writeString(new File(build, "part").toPath, "late"): Unit
+        })
+        Some(())
+      }
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (running.get > 0 && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(builds(dir).isEmpty, "a straggler task kept the build alive")
+    assert(GraftLakeIO.latestVersion(dir) === 1)
+    Memo.rmTree(new File(dir))
+  }
 }

@@ -69,11 +69,12 @@ class LakeSortOrderSpec extends SparkSpec {
     assert(GraftLakeIO.readSorted(head).size === 8,
       "all 8 shards must carry sorted provenance")
     val anyPart = GraftLakeIO.allShardParts(head).values.head.head
-    val keys = GraftShardCodec.readRows(anyPart,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType))))
-      .collect { case Array(k: java.lang.Long) => k.longValue }.toSeq
+    val rows = GraftLakeColumnarPartitionReader.rows(
+      new GraftLakeColumnarPartitionReader(Seq(anyPart.getPath), 0,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("user_id",
+            org.apache.spark.sql.types.LongType)))))
+    val keys = try rows.map(_.getLong(0)).toVector finally rows.close()
     assert(keys === keys.sorted, "shard file rows must be key-sorted")
 
     val df = joined(a, b)

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Property tests for the columnar shard codec — the storage layer
   * every lake/document byte now rides. Random typed rows (unicode
   * strings, NaN/±0.0/extreme doubles, nulls everywhere) must
-  * round-trip VALUE-EXACTLY through write→read, through the raw
-  * row-group append path, and through the schema-evolution re-encode
-  * path. Pure JVM — no SparkSession. */
+  * round-trip VALUE-EXACTLY from the Group writer through the lake's
+  * vectorized reader — the path queries read — and through the raw
+  * row-group append path, which refuses a source of another schema.
+  * Pure JVM — no SparkSession. */
 class ShardCodecSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
@@ -70,6 +71,14 @@ class ShardCodecSpec extends AnyFunSuite {
     } finally w.close()
   }
 
+  /** `f`'s rows laid out as `sch`, read back by the lake reader. */
+  private def readBack(f: File, sch: StructType): Seq[Array[Any]] = {
+    val rows = GraftLakeColumnarPartitionReader.rows(
+      new GraftLakeColumnarPartitionReader(Seq(f.getPath), 0, sch))
+    try rows.map(_.copy().toSeq(sch).toArray).toVector
+    finally rows.close()
+  }
+
   /** Bit-level equality (NaN == NaN, -0.0 != 0.0 — storage must not
     * normalize). */
   private def sameCell(a: Any, b: Any): Boolean = (a, b) match {
@@ -97,8 +106,7 @@ class ShardCodecSpec extends AnyFunSuite {
       val rows = Seq.fill(200 + rnd.nextInt(200))(randRow(rnd))
       val f = tmp(s"codec_rt_$seed")
       writeRows(f, schema, rows)
-      val got = GraftShardCodec.readRows(f, schema).toSeq
-      assertSame(got, rows, s"seed $seed")
+      assertSame(readBack(f, schema), rows, s"seed $seed")
       val (fs, n) = GraftShardCodec.footer(f)
       assert(n === rows.length.toLong &&
         fs.getFieldCount === schema.length)
@@ -106,38 +114,34 @@ class ShardCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("raw row-group append preserves order and values; evolved " +
-      "sources re-encode with missing columns NULL and dropped " +
-      "columns gone") {
+  test("raw row-group append preserves order and values; a source " +
+      "whose schema differs from the target is refused") {
     val rnd = new scala.util.Random(42)
     val a = Seq.fill(100)(randRow(rnd))
     val b = Seq.fill(50)(randRow(rnd))
     val fa = tmp("codec_a"); val fb = tmp("codec_b")
     writeRows(fa, schema, a)
     writeRows(fb, schema, b)
-    // fast path: identical schemas — raw row-group copy, a ++ b
+    // identical schemas — raw row-group copy, a ++ b
     val merged = tmp("codec_m")
     GraftShardCodec.mergeShardFiles(merged,
       GraftShardCodec.messageType(schema), Seq(fa, fb))
-    assertSame(GraftShardCodec.readRows(merged, schema).toSeq,
-      a ++ b, "append")
-    // evolution path: target drops `i` and adds `z` — the old-schema
-    // source re-encodes, `z` reads NULL, `i` disappears
+    assertSame(readBack(merged, schema), a ++ b, "append")
+    // a target that drops `i` and adds `z`: the old-schema source is
+    // refused, and no target file is started
     val evolved = StructType(
       schema.fields.filterNot(_.name == "i") :+
         StructField("z", LongType))
     val fe = tmp("codec_e")
-    GraftShardCodec.mergeShardFiles(fe,
-      GraftShardCodec.messageType(evolved), Seq(fa))
-    val keep = schema.fields.zipWithIndex.filterNot(_._1.name == "i")
-    val want = a.map(r => keep.map { case (_, i) => r(i) } :+ null)
-    assertSame(GraftShardCodec.readRows(fe, evolved).toSeq,
-      want.map(_.toArray), "evolution")
-    // projection: reading only (s, x) decodes a 2-field group
+    val err = intercept[IllegalArgumentException](
+      GraftShardCodec.mergeShardFiles(fe,
+        GraftShardCodec.messageType(evolved), Seq(fb, fa)))
+    assert(err.getMessage.contains(fb.getName), err.getMessage)
+    assert(!fe.exists())
+    // projection: reading only (s, x) decodes two columns
     val proj = StructType(Seq(schema("s"), schema("x")))
-    val got = GraftShardCodec.readRows(merged, proj).toSeq
-    assertSame(got,
+    assertSame(readBack(merged, proj),
       (a ++ b).map(r => Array(r(4), r(3))), "projection")
-    Seq(fa, fb, merged, fe).foreach(f => assert(f.delete()))
+    Seq(fa, fb, merged).foreach(f => assert(f.delete()))
   }
 }
