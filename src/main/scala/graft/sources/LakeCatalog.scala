@@ -3735,11 +3735,6 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
   private val keyIdx = writeSchema.fieldIndex(keyCol)
   private val keyIsLong = writeSchema(keyIdx).dataType == LongType ||
     writeSchema(keyIdx).dataType == TimestampType
-  // parquet payload: one columnar staged file per shard this task
-  // routes rows to ([[GraftShardCodec]] bounds each writer's row-group
-  // buffer)
-  private val msgType = GraftShardCodec.messageType(writeSchema)
-  private val groupFac = GraftShardCodec.groupFactory(msgType)
   // LRU-bounded open writers: each ParquetWriter buffers up to a row
   // group, so a task spraying rows across many shards (hash routing
   // under an unclustered input) would otherwise hold
@@ -3750,10 +3745,8 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
   // memory is thereby bounded at MaxOpenWriters x 16 MB regardless of
   // shard count.
   private val open = new java.util.LinkedHashMap[Int,
-    (java.io.File,
-      org.apache.parquet.hadoop.ParquetWriter[
-        org.apache.parquet.example.data.Group])](16, 0.75f,
-    /* accessOrder = */ true)
+    (java.io.File, org.apache.parquet.hadoop.ParquetWriter[InternalRow])](
+    16, 0.75f, /* accessOrder = */ true)
   // rotated-out staged files, still part of this task's commit
   private val closed =
     scala.collection.mutable.Buffer[(Int, java.io.File)]()
@@ -3763,8 +3756,8 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
   private val ranges = scala.collection.mutable.Map[Int,
     scala.collection.mutable.Map[String, GraftLakeIO.ColRange]]()
 
-  private def writerFor(k: Int): org.apache.parquet.hadoop
-      .ParquetWriter[org.apache.parquet.example.data.Group] = {
+  private def writerFor(
+      k: Int): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     val cur = open.get(k)
     if (cur != null) return cur._2
     if (open.size() >= GraftLakeDataWriter.MaxOpenWriters) {
@@ -3779,7 +3772,7 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
     val f = new java.io.File(stagePath,
       s"shard-${k}_p${partitionId}_t${taskId}_r$rotation.parquet")
     rotation += 1
-    val w = GraftShardCodec.openWriter(f, msgType)
+    val w = GraftShardCodec.openWriter(f, writeSchema)
     open.put(k, (f, w)): Unit
     w
   }
@@ -3810,64 +3803,49 @@ class GraftLakeDataWriter(stagePath: String, writeSchema: StructType,
         math.min(math.max(java.lang.Math.floorDiv(key, shardWidth), 0L),
           (nShards - 1).toLong).toInt
       else java.lang.Math.floorMod(key, nShards.toLong).toInt
-    val g = groupFac.newGroup()
+    // the row goes to Spark's Parquet writer as is; this pass only
+    // observes the zone maps and blooms
     var i = 0
     while (i < writeSchema.length) {
       val f = writeSchema(i)
-      if (f.name != "_shard" && !row.isNullAt(i)) {
-        // physical routing (`_shard`) is never stored; nulls are
-        // simply absent from the group
-        f.dataType match {
-          case LongType | TimestampType =>
-            // timestamps ride as INT64 micros (the codec's logical
-            // annotation restores the type at read); the zone map
-            // observes the micros — date predicates push as micros
-            // literals and prune on the integral range
-            val v = row.getLong(i)
-            g.add(f.name, v)
+      if (!row.isNullAt(i)) f.dataType match {
+        case LongType | TimestampType | IntegerType | DateType =>
+          // the zone map observes timestamps as micros and dates as
+          // days: date predicates push as such literals and prune on
+          // the integral range
+          val v = f.dataType match {
+            case LongType | TimestampType => row.getLong(i)
+            case _ => row.getInt(i).toLong
+          }
+          observe(k, f.name,
+            GraftLakeIO.ColRange(isFloat = false, v, v, v.toDouble,
+              v.toDouble))
+          if (bloomSet.contains(f.name))
+            GraftLakeBloom.addLong(bloomBuf(k, f.name), v)
+        case DoubleType =>
+          val v = row.getDouble(i)
+          // NaN never enters the zone map: math.min/max propagate
+          // NaN, and one poisoned bound would make every range
+          // comparison false — pruning shards that hold real rows.
+          // Skipping is sound like skipping null: the skippable
+          // predicate shapes are ordered comparisons, which no NaN
+          // row can satisfy anyway (Parquet/Iceberg do the same).
+          if (!v.isNaN)
             observe(k, f.name,
-              GraftLakeIO.ColRange(isFloat = false, v, v, v.toDouble,
-                v.toDouble))
-            if (bloomSet.contains(f.name))
-              GraftLakeBloom.addLong(bloomBuf(k, f.name), v)
-          case IntegerType | DateType =>
-            val v = row.getInt(i)
-            g.add(f.name, v)
-            observe(k, f.name,
-              GraftLakeIO.ColRange(isFloat = false, v.toLong, v.toLong,
-                v.toDouble, v.toDouble))
-            if (bloomSet.contains(f.name))
-              GraftLakeBloom.addLong(bloomBuf(k, f.name), v.toLong)
-          case DoubleType =>
-            val v = row.getDouble(i)
-            g.add(f.name, v)
-            // NaN never enters the zone map: math.min/max propagate
-            // NaN, and one poisoned bound would make every range
-            // comparison false — pruning shards that hold real rows.
-            // Skipping is sound like skipping null: the skippable
-            // predicate shapes are ordered comparisons, which no NaN
-            // row can satisfy anyway (Parquet/Iceberg do the same).
-            if (!v.isNaN)
-              observe(k, f.name,
-                GraftLakeIO.ColRange(isFloat = true, 0L, 0L, v, v))
-          case StringType =>
-            val u = row.getUTF8String(i)
-            g.add(f.name, org.apache.parquet.io.api.Binary
-              .fromConstantByteArray(u.getBytes))
-            // string zone map: exact value at-or-under the length
-            // bound, sticky-invalid past it (never a wrong skip)
-            observe(k, f.name, GraftLakeIO.ColRange.ofString(
-              u.toString))
-            if (bloomSet.contains(f.name))
-              GraftLakeBloom.addUtf8(bloomBuf(k, f.name), u)
-          case BooleanType => g.add(f.name, row.getBoolean(i))
-          case other => throw new IllegalArgumentException(
-            s"unsupported lake type for ${f.name}: $other")
-        }
+              GraftLakeIO.ColRange(isFloat = true, 0L, 0L, v, v))
+        case StringType =>
+          val u = row.getUTF8String(i)
+          // string zone map: exact value at-or-under the length
+          // bound, sticky-invalid past it (never a wrong skip)
+          observe(k, f.name, GraftLakeIO.ColRange.ofString(
+            u.toString))
+          if (bloomSet.contains(f.name))
+            GraftLakeBloom.addUtf8(bloomBuf(k, f.name), u)
+        case _ => () // BOOLEAN: no zone map
       }
       i += 1
     }
-    writerFor(k).write(g)
+    writerFor(k).write(row)
   }
 
   override def commit(): WriterCommitMessage = {

@@ -342,16 +342,15 @@ object GraftLakeMaintenance {
           GraftLakeIO.shardParts(headDir, k).foreach { src =>
             val (fileSchema, rows) = GraftShardCodec.footer(src)
             val schema = GraftShardCodec.sparkSchema(fileSchema)
-            val fac = GraftShardCodec.groupFactory(fileSchema)
             val live = liveRows(Seq(src), k, schema, dvB, Seq(ordBase),
               eq, keyCols)
             var writer: org.apache.parquet.hadoop.ParquetWriter[
-              org.apache.parquet.example.data.Group] = null
+              InternalRow] = null
             try live.foreach { r =>
               if (writer == null) // open lazily: all-dead parts drop
                 writer = GraftShardCodec.openWriter(
-                  new java.io.File(build, src.getName), fileSchema)
-              writer.write(GraftShardCodec.toGroup(fac, schema, r))
+                  new java.io.File(build, src.getName), schema)
+              writer.write(r)
             } finally {
               live.close()
               if (writer != null) writer.close()
@@ -430,12 +429,10 @@ object GraftLakeMaintenance {
             }.toVector.sortBy(_._1)
             finally live.close()
           if (sorted.nonEmpty) {
-            val fac = GraftShardCodec.groupFactory(fileSchema)
             val writer = GraftShardCodec.openWriter(
-              GraftLakeIO.shardFile(build, k), fileSchema)
-            try sorted.foreach { case (_, r) =>
-              writer.write(GraftShardCodec.toGroup(fac, schema, r))
-            } finally writer.close()
+              GraftLakeIO.shardFile(build, k), schema)
+            try sorted.foreach { case (_, r) => writer.write(r) }
+            finally writer.close()
           }
         })
         GraftLakeIO.writeDv(build, dv -- targets)

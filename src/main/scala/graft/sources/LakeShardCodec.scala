@@ -8,15 +8,13 @@ import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetReadSupport, ParquetToSparkSchemaConverter,
+  ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport,
   VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter,
   ParquetInputFormat, ParquetWriter}
@@ -51,11 +49,13 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   *    schema — I/O-bound byte movement, the same cost class as the old
   *    text concatenation ([[mergeShardFiles]]).
   *
-  * Rows are written as parquet-mr example `Group`s ([[openWriter]],
-  * [[add]]): that is only the writer's record format. Every read of a
-  * part — scans, the change feed, commits and maintenance rewrites,
-  * document-store shards — decodes through Spark's vectorized reader
-  * ([[openVectorized]]).
+  * Spark's own Parquet code encodes and decodes every value: parts
+  * are written from `InternalRow`s by Spark's `ParquetWriteSupport`
+  * ([[openWriter]]), and every read of a part — scans, the change
+  * feed, commits and maintenance rewrites, document-store shards —
+  * decodes through Spark's vectorized reader ([[openVectorized]]).
+  * This codec only maps the lake's SQL types to Parquet types
+  * ([[messageType]]).
   *
   * The commit protocol above this layer (CAS publish, hardlink
   * carrying, zone-map sidecars, routing provenance) is
@@ -132,6 +132,19 @@ object GraftShardCodec {
     c
   }
 
+  /** [[conf]] plus the keys Spark's write support and its schema
+    * converter require: the standard (non-legacy) layout, INT64 micros
+    * timestamps, no field ids, no variant annotation. */
+  private lazy val writeBase: Configuration = {
+    val c = new Configuration(conf)
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => c.setBoolean(e.key, false))
+    c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    c
+  }
+
   /** A footer/row-group reader over `file` on the shared conf. The
     * options are built per open: they carry a codec factory whose
     * caches are not thread-safe, and the reader releases it on close. */
@@ -139,31 +152,55 @@ object GraftShardCodec {
     ParquetFileReader.open(new LocalInputFile(file.toPath),
       HadoopReadOptions.builder(conf).build())
 
+  /** A SNAPPY part writer of rows laid out as `schema` (no `_shard`
+    * column). Spark's write support encodes each row under the footer
+    * schema [[messageType]]`(schema)`: Spark's own would be named
+    * `spark_schema`, and parts merge only with parts of an equal
+    * footer `MessageType`, name included. No extra footer metadata
+    * either: the reader never consults Spark's. */
   def openWriter(file: java.io.File,
-      schema: MessageType): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(new LocalOutputFile(file.toPath))
-      .withConf(conf)
-      .withType(schema)
+      schema: StructType): ParquetWriter[InternalRow] = {
+    val footer = messageType(schema)
+    // the support takes its datetime rebase mode from `SQLConf.get`
+    // (the thread's existing conf first, on task and driver threads)
+    // when built; parts are read CORRECTED ([[openVectorized]]), so
+    // they are written CORRECTED whatever the session says
+    val support = SQLConf.withExistingConf(correctedConf)(
+      new ParquetWriteSupport {
+        override def init(c: Configuration): WriteSupport.WriteContext = {
+          super.init(c): Unit
+          new WriteSupport.WriteContext(footer,
+            java.util.Collections.emptyMap[String, String]())
+        }
+      })
+    new RowWriterBuilder(file, support)
+      .withConf(writeConfs.computeIfAbsent(schema, { _ =>
+        val c = new Configuration(writeBase)
+        ParquetWriteSupport.setSchema(schema, c)
+        c
+      }))
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(RowGroupBytes)
       .build()
-
-  def groupFactory(schema: MessageType): SimpleGroupFactory =
-    new SimpleGroupFactory(schema)
-
-  /** `row`, laid out as `schema`, as a new Group of `fac` ([[add]] per
-    * non-null field). */
-  def toGroup(fac: SimpleGroupFactory, schema: StructType,
-      row: InternalRow): Group = {
-    val g = fac.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i))
-        add(g, schema(i).name, row.get(i, schema(i).dataType))
-      i += 1
-    }
-    g
   }
+
+  private final class RowWriterBuilder(file: java.io.File,
+      support: WriteSupport[InternalRow])
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](
+        new LocalOutputFile(file.toPath)) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(c: Configuration) = support
+  }
+
+  private lazy val correctedConf: SQLConf = {
+    val c = new SQLConf
+    c.setConfString(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    c
+  }
+
+  /** One read-only write conf per row schema (Spark's row schema key
+    * on a clone of [[writeBase]]), memoized like [[vectorizedConf]]. */
+  private val writeConfs = lru[StructType, Configuration](256)
 
   /** Everything a planner reads from one part's footer: schema, total
     * rows, per-column null counts summed across row groups
@@ -405,21 +442,6 @@ object GraftShardCodec {
         else throw new UnsupportedOperationException(
           s"TaskAttemptContext.${m.getName}")
     ).asInstanceOf[TaskAttemptContext]
-
-  /** Append one JVM value (java.lang boxes and UTF8String, as
-    * `InternalRow.get` returns them) to a group under `name`; nulls
-    * are simply not added. */
-  def add(g: Group, name: String, v: Any): Unit = v match {
-    case null => ()
-    case l: java.lang.Long => g.add(name, l.longValue())
-    case i: java.lang.Integer => g.add(name, i.intValue())
-    case d: java.lang.Double => g.add(name, d.doubleValue())
-    case s: org.apache.spark.unsafe.types.UTF8String =>
-      g.add(name, Binary.fromConstantByteArray(s.getBytes))
-    case b: java.lang.Boolean => g.add(name, b.booleanValue())
-    case other => throw new IllegalArgumentException(
-      s"unsupported lake value $other (${other.getClass})")
-  }
 
   /** Materialize `target` as the concatenation of `sources` (in
     * order), appended as raw row groups — no decode, no re-encode, pure

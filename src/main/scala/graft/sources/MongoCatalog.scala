@@ -347,27 +347,9 @@ class GraftMongoDataWriter(stagePath: String, declared: StructType,
   // file is reported and moved
   private val file = new java.io.File(stagePath,
     f"part-$partitionId%05d-$taskId.parquet")
-  private val msgType = GraftShardCodec.messageType(declared)
-  private val fac = GraftShardCodec.groupFactory(msgType)
-  private val out = GraftShardCodec.openWriter(file, msgType)
+  private val out = GraftShardCodec.openWriter(file, declared)
 
-  override def write(row: InternalRow): Unit = {
-    val g = fac.newGroup()
-    declared.fields.zipWithIndex.foreach { case (f, i) =>
-      if (!row.isNullAt(i)) f.dataType match {
-        case TimestampType | LongType => g.add(f.name, row.getLong(i))
-        case DoubleType => g.add(f.name, row.getDouble(i))
-        case IntegerType => g.add(f.name, row.getInt(i))
-        case BooleanType => g.add(f.name, row.getBoolean(i))
-        case StringType =>
-          g.add(f.name, org.apache.parquet.io.api.Binary
-            .fromConstantByteArray(row.getUTF8String(i).getBytes))
-        case other => throw new IllegalArgumentException(
-          s"unsupported declared type for field ${f.name}: $other")
-      }
-    }
-    out.write(g)
-  }
+  override def write(row: InternalRow): Unit = out.write(row)
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {

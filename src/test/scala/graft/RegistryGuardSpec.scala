@@ -405,6 +405,16 @@ class RegistryGuardSpec extends SparkSpec {
     (reads ++ masks).map { case (at, what) => (lineOf(src, at), what) }
   }
 
+  /** parquet-mr's example `Group` record and the codec entry points
+    * that built one in `src`: every part is written from `InternalRow`s
+    * by Spark's write support ([[GraftShardCodec.openWriter]]). */
+  private def groupWrites(src: String): Seq[(Int, String)] =
+    Seq("ExampleParquetWriter", "SimpleGroupFactory",
+      raw"org\.apache\.parquet\.example", raw"\bgroupFactory\(",
+      raw"\btoGroup\(", raw"GraftShardCodec\.add\(")
+      .mkString("|").r.findAllMatchIn(src)
+      .map(m => (lineOf(src, m.start), m.matched)).toSeq
+
   test("source lint: Parquet and Hadoop-conf opens go through " +
       "GraftShardCodec's one parsed conf") {
     // the lint itself catches every form it names
@@ -457,6 +467,27 @@ class RegistryGuardSpec extends SparkSpec {
     assert(rowOffenders.isEmpty,
       s"row-at-a-time Parquet reads or liveness masks outside the " +
         s"vectorized lake reader: ${rowOffenders.mkString(", ")}")
+    // and no Group-record write anywhere
+    Seq("ExampleParquetWriter.builder(out)",
+      "new SimpleGroupFactory(schema)",
+      "import org.apache.parquet.example.data.Group",
+      "val fac = GraftShardCodec.groupFactory(mt)",
+      "w.write(toGroup(fac, schema, r))",
+      "GraftShardCodec.add(g, f.name, v)")
+      .foreach(bad => assert(groupWrites(bad).nonEmpty, bad))
+    Seq("GraftShardCodec.openWriter(f, schema)", "w.write(row)",
+      "new ParquetWriteSupport", "g.add(name, v)",
+      "GraftShardCodec.addAll(x)")
+      .foreach(ok => assert(groupWrites(ok).isEmpty, ok))
+    val writeOffenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      (line, what) <- groupWrites(src)
+    } yield s"${f.getName}:$line ($what)"
+    assert(writeOffenders.isEmpty,
+      s"Group-record Parquet writes (write InternalRows through " +
+        s"GraftShardCodec.openWriter): ${writeOffenders.mkString(", ")}")
   }
 
   test("ORDER BY keys totally order every oracled result on the " +

@@ -284,4 +284,42 @@ class LakeColumnarSpec extends SparkSpec {
       "a read mutated a memoized reader conf")
     spark.sql(s"DROP TABLE $tbl")
   }
+
+  test("parts are written CORRECTED under a LEGACY datetime rebase " +
+      "session: pre-Gregorian dates and timestamps read back equal " +
+      "from a lake INSERT, its sort rewrite and a created collection") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
+    Lake.registerCatalog(s)
+    Mongo.registerCatalog(s, sf)
+    val tbl = "graft_lake.lake.spec_colnar_rebase"
+    val coll = "graft_mongo.weather.spec_colnar_rebase"
+    Seq(tbl, coll).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    s.sql(s"""CREATE TABLE $tbl (id BIGINT, d DATE, ts TIMESTAMP)
+      TBLPROPERTIES ('shard_key'='id', 'n_shards'='1')""")
+    s.sql(s"CREATE TABLE $coll (_id TIMESTAMP, id BIGINT)")
+    val ts = "1000-01-01 12:34:56.789012"
+    // two appends: two parts for the sort rewrite to merge
+    s.sql(s"INSERT INTO $tbl VALUES (2, DATE '1000-01-01', " +
+      s"TIMESTAMP '$ts')")
+    s.sql(s"INSERT INTO $tbl VALUES (1, DATE '1500-02-28', " +
+      s"TIMESTAMP '1582-10-04 23:59:59')")
+    // a collection has no DATE type (a BSON date is a TIMESTAMP): the
+    // date lands as its midnight
+    s.sql(s"INSERT INTO $coll VALUES (TIMESTAMP '$ts', 2), " +
+      "(CAST(DATE '1000-01-01' AS TIMESTAMP), 1)")
+    def lake(): Seq[String] = s.sql(s"SELECT CAST(d AS STRING), " +
+      s"CAST(ts AS STRING) FROM $tbl ORDER BY id").collect()
+      .toSeq.flatMap(r => Seq(r.getString(0), r.getString(1)))
+    val want = Seq("1500-02-28", "1582-10-04 23:59:59", "1000-01-01", ts)
+    assert(lake() === want)
+    // the sort rewrite writes on the driver, outside any task
+    assert(s.sql("""CALL graft_lake.system.rewrite_sorted(
+      table => 'spec_colnar_rebase')""").head.getInt(0) === 1)
+    assert(lake() === want, "after the sort rewrite")
+    assert(s.sql(s"SELECT CAST(_id AS STRING) FROM $coll ORDER BY id")
+      .collect().map(_.getString(0)).toSeq ===
+      Seq("1000-01-01 00:00:00", ts))
+    Seq(tbl, coll).foreach(t => s.sql(s"DROP TABLE $t"))
+  }
 }

@@ -275,6 +275,23 @@ class LakeDeleteVectorSpec extends SparkSpec {
     assert(GraftLakeMaintenance.compactDeletionVectors(dir, 0.5)
       === Nil)
     assert(GraftLakeIO.latestVersion(dir) === 4)
+    // the INSERT's parts and the compacted part carry the codec's
+    // footer schema, name included, so they still merge: after an
+    // append, shard 0 holds one part of each, and OPTIMIZE leaves one
+    val footer = GraftShardCodec.messageType(spark.table(tbl).schema)
+    (0 to 3).flatMap(k => GraftLakeIO.shardParts(v4dir, k))
+      .foreach(f => assert(GraftShardCodec.footer(f)._1 === footer,
+        f.getName))
+    spark.sql(s"INSERT INTO $tbl VALUES (16, 160)") // v5, shard 0
+    assert(GraftLakeIO.shardParts(GraftLakeIO.versionDir(dir, 5), 0)
+      .length === 2)
+    spark.sql("""CALL graft_lake.system.optimize(
+      table => 'spec_dv_opt', max_parts => 1)""").collect(): Unit
+    val head = GraftLakeIO.versionDir(dir, GraftLakeIO.latestVersion(dir))
+    assert(GraftLakeIO.shardParts(head, 0).length === 1,
+      "the INSERT part and the compacted part must merge")
+    assert(spark.sql(s"SELECT user_id FROM $tbl ORDER BY user_id")
+      .collect().map(_.getLong(0)).toSeq === live :+ 16L)
     spark.sql(s"DROP TABLE $tbl")
   }
 

@@ -116,6 +116,10 @@ class LakeSortOrderSpec extends SparkSpec {
     assert(GraftLakeIO.allShardParts(head2).values
       .forall(_.lengthCompare(1) == 0),
       "every shard must be one part after the sort-rewrite")
+    // in the codec's footer schema, name included
+    val bFooter = GraftShardCodec.messageType(ss.table(b).schema)
+    GraftLakeIO.allShardParts(head2).values.flatten.foreach(f =>
+      assert(GraftShardCodec.footer(f)._1 === bFooter, f.getName))
     val df3 = joined(a, b)
     val p3 = finalPlan(df3)
     assert(!p3.contains("Exchange") && !p3.contains("Sort "),

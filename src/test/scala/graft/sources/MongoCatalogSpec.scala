@@ -179,6 +179,8 @@ class MongoCatalogSpec extends SparkSpec {
     // (the decoded form of the wire `$date`)
     val (fsch, _) = GraftShardCodec.footer(files.head)
     assert(fsch.containsField("_id") && fsch.containsField("label"))
+    assert(fsch === GraftShardCodec.messageType(
+      spark.table("graft_mongo.weather.spec_rt").schema))
     // while the DEMO fixture stays extended-JSON text on disk (the
     // wire dump the reference's fillMongoDB.ipynb stages)
     val demo = GraftMongoIO.shardFiles(new java.io.File(

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.File
 
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -9,11 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the columnar shard codec — the storage layer
   * every lake/document byte now rides. Random typed rows (unicode
-  * strings, NaN/±0.0/extreme doubles, nulls everywhere) must
-  * round-trip VALUE-EXACTLY from the Group writer through the lake's
+  * strings, NaN/±0.0/extreme doubles, pre-Gregorian dates, nulls
+  * everywhere) must round-trip VALUE-EXACTLY from Spark's Parquet
+  * writer ([[GraftShardCodec.openWriter]]) through the lake's
   * vectorized reader — the path queries read — and through the raw
   * row-group append path, which refuses a source of another schema.
-  * Pure JVM — no SparkSession. */
+  * Every written footer carries the codec's own schema, name
+  * included. Pure JVM — no SparkSession. */
 class ShardCodecSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
@@ -38,7 +41,9 @@ class ShardCodecSpec extends AnyFunSuite {
     Array(
       maybe(java.lang.Long.valueOf(rnd.nextLong())),
       maybe(java.lang.Integer.valueOf(rnd.nextInt())),
-      maybe(java.lang.Integer.valueOf(rnd.nextInt(40000))),
+      // days from 0001-01-01 on: a Julian/Gregorian rebase of the
+      // ones before 1582-10-15 would move them
+      maybe(java.lang.Integer.valueOf(rnd.nextInt(760000) - 719162)),
       maybe(java.lang.Double.valueOf(rnd.nextInt(8) match {
         case 0 => Double.NaN
         case 1 => Double.PositiveInfinity
@@ -59,16 +64,10 @@ class ShardCodecSpec extends AnyFunSuite {
 
   private def writeRows(f: File, sch: StructType,
       rows: Seq[Array[Any]]): Unit = {
-    val mt = GraftShardCodec.messageType(sch)
-    val fac = GraftShardCodec.groupFactory(mt)
-    val w = GraftShardCodec.openWriter(f, mt)
-    try rows.foreach { vals =>
-      val g = fac.newGroup()
-      sch.fields.zipWithIndex.foreach { case (fld, i) =>
-        GraftShardCodec.add(g, fld.name, vals(i))
-      }
-      w.write(g)
-    } finally w.close()
+    val w = GraftShardCodec.openWriter(f, sch)
+    try rows.foreach(vals => w.write(new GenericInternalRow(vals)))
+    finally w.close()
+    assert(GraftShardCodec.footer(f)._1 === GraftShardCodec.messageType(sch))
   }
 
   /** `f`'s rows laid out as `sch`, read back by the lake reader. */
@@ -109,7 +108,8 @@ class ShardCodecSpec extends AnyFunSuite {
       assertSame(readBack(f, schema), rows, s"seed $seed")
       val (fs, n) = GraftShardCodec.footer(f)
       assert(n === rows.length.toLong &&
-        fs.getFieldCount === schema.length)
+        fs === GraftShardCodec.messageType(schema) &&
+        fs.getName === "graft_lake_shard")
       assert(f.delete())
     }
   }
