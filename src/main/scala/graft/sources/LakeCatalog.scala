@@ -1177,7 +1177,9 @@ object GraftLakeIO {
     * footers (O(shards) footer tail-reads, no data pages) — DESCRIBE
     * HISTORY then serves every version from this one line instead of
     * recounting the table per version (which is O(versions x
-    * table-scan) at a 1000-commit history). */
+    * table-scan) at a 1000-commit history). The counts cover lake
+    * `shard-*` parts only: a document collection's `part-*` files are
+    * neither opened nor counted, so its stamp reads `0 0`. */
   def writeCommitMeta(build: java.io.File, micros: Long,
       operation: String): Unit = {
     val shards = existingShards(build)
@@ -2075,7 +2077,7 @@ object GraftLakeIO {
 /** Driver-side observability for the zone-map skipping (spec hook +
   * plan-lint evidence): counts shards planned vs skipped-by-stats
   * since the last reset. */
-object GraftLakeScanMetrics {
+object GraftLakeScanMetrics extends GraftReadCounters {
   val planned = new java.util.concurrent.atomic.AtomicLong()
   val skippedByStats = new java.util.concurrent.atomic.AtomicLong()
   // read-side columnar honesty (local-mode observable): how many

@@ -45,12 +45,15 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * LIMIT-pushed scans stop BATCH-grained: the reader quits after the
   * batch that crosses `limit` live rows (the pushdown is declared
   * partial — `isPartiallyPushed` — so Spark's own Local/GlobalLimit
-  * trims the overshoot inside that final 4k-row batch). */
+  * trims the overshoot inside that final 4k-row batch).
+  *
+  * `metrics` is the counter set the reader adds to: the lake's, or the
+  * document store's when it serves a CREATEd collection. */
 class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     required: StructType, dvBytes: Array[Byte] = null,
     ordBases: Seq[Long] = Nil,
     eqDel: Map[String, Long] = Map.empty, eqKeys: Seq[String] = Nil,
-    limit: Int = -1)
+    limit: Int = -1, metrics: GraftReadCounters = GraftLakeScanMetrics)
     extends PartitionReader[ColumnarBatch] {
 
   require(eqDel.isEmpty || eqKeys.nonEmpty,
@@ -122,8 +125,7 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     partRows = rows
     consumed = 0L
     present = dataNames.filter(fileSchema.containsField)
-    GraftLakeScanMetrics.decodedColumns
-      .addAndGet(present.length.toLong): Unit
+    metrics.decodedColumns.addAndGet(present.length.toLong): Unit
     presentIdx = required.fields.map(fd => present.indexOf(fd.name))
     // composite masking needs EVERY key part decodable from this
     // part's own schema; a missing one can only mean rows that
@@ -135,7 +137,7 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     if (present.isEmpty) {
       // no requested column stored in this part: only the live rows'
       // count and ordinals matter, served from the footer
-      GraftLakeScanMetrics.metadataOnlyReads.incrementAndGet(): Unit
+      metrics.metadataOnlyReads.incrementAndGet(): Unit
       nullPartRemaining = rows
     } else {
       nullPartRemaining = 0L
@@ -183,7 +185,7 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
       } else if (!vr.nextBatch()) {
         consumed = partRows // defensive: footer said more than decoded
       } else {
-        GraftLakeScanMetrics.batchesDecoded.incrementAndGet(): Unit
+        metrics.batchesDecoded.incrementAndGet(): Unit
         val batch = vr.resultBatch()
         val n = batch.numRows()
         val start = ordBase + consumed
@@ -266,6 +268,15 @@ class GraftLakeColumnarPartitionReader(paths: Seq[String], shard: Int,
     shardConst.close()
     nullConsts.foreach(_.close())
   }
+}
+
+/** The read-side counters a [[GraftLakeColumnarPartitionReader]] adds
+  * to: columns decoded per part, parts served from the footer alone,
+  * and batches decoded. */
+trait GraftReadCounters {
+  val decodedColumns: java.util.concurrent.atomic.AtomicLong
+  val metadataOnlyReads: java.util.concurrent.atomic.AtomicLong
+  val batchesDecoded: java.util.concurrent.atomic.AtomicLong
 }
 
 object GraftLakeColumnarPartitionReader {

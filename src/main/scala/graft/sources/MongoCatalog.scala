@@ -45,7 +45,9 @@ import graft.sources.Tables.events
   *     chunk/partition per task)
   *   → PartitionReader ([[GraftMongoPartitionReader]]: streams one
   *     shard, Jackson-decodes each document to an InternalRow of ONLY
-  *     the required columns).
+  *     the required columns). A CREATEd collection is stored as the
+  *     lake's versioned Parquet snapshots instead, and reads through
+  *     the lake's columnar reader.
   *
   * Scale posture: reads parallelize per shard; per-task state is one
   * buffered line; pruned columns are never parsed into rows. The
@@ -126,13 +128,13 @@ class GraftMongoCatalog extends TableCatalog with SupportsNamespaces {
     if (isWeather(ident.namespace()) && ident.name() == "weatherny")
       new GraftMongoTable("weatherny",
         MongoSchemas.schemadefToStruct(MongoSchemas.weatherNyDescriptor),
-        s"$root/weatherny", writable = false)
+        s"$root/weatherny", writable = false, created = false)
     else if (isWeather(ident.namespace()) &&
         descriptorFile(ident.name()).exists())
       new GraftMongoTable(ident.name(),
         MongoSchemas.schemadefToStruct(java.nio.file.Files.readString(
           descriptorFile(ident.name()).toPath)),
-        tableDir(ident.name()).getPath, writable = true)
+        tableDir(ident.name()).getPath, writable = true, created = true)
     else throw new NoSuchTableException(ident)
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -142,6 +144,9 @@ class GraftMongoCatalog extends TableCatalog with SupportsNamespaces {
       throw new NoSuchNamespaceException(ident.namespace())
     require(partitions.isEmpty,
       "document collections take no partition transforms")
+    // the lake reader serves these two names as routing metadata
+    require(!schema.fieldNames.exists(Set("_shard", "_pos")),
+      "document collections cannot declare _shard or _pos")
     if (ident.name() == "weatherny" || descriptorFile(ident.name()).exists())
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(
@@ -173,7 +178,7 @@ class GraftMongoCatalog extends TableCatalog with SupportsNamespaces {
           s"${ident.name()}: version $v out of range 0..$latest")
         new GraftMongoTable(s"${ident.name()}@v$v", t.schema(),
           GraftLakeIO.versionDir(dir, v).getPath, writable = false,
-          allowEmptyRead = true)
+          created = true)
       case _ => throw readOnly // demo fixture: no snapshot history
     }
   }
@@ -194,19 +199,19 @@ class GraftMongoCatalog extends TableCatalog with SupportsNamespaces {
       newIdent: Identifier): Unit = throw readOnly
 }
 
-/** One declared-schema collection backed by a sharded extended-JSON
-  * document store. CREATEd collections are also writable
-  * ([[GraftMongoBatchWrite]]): one shard file per write task (the
-  * parallel-write unit, the analog of inserting through one mongos
-  * router connection per partition), staged per task and committed
-  * TABLE-ATOMICALLY through the versioned-snapshot protocol (version
-  * dir built complete, then one atomic pointer move — see
-  * [[GraftMongoBatchWrite.commit]]); a concurrent reader never
-  * observes an emptied or half-populated collection. The demo
-  * collection `weatherny` stays read-only (flat legacy layout). */
+/** One declared-schema collection. The demo collection `weatherny`
+  * (`created` false) is a read-only extended-JSON wire dump in a flat
+  * directory. A CREATEd collection is a versioned Parquet snapshot
+  * table on the lake's storage protocol. A write adds one Parquet part
+  * per write task (the analog of inserting through one mongos router
+  * connection per partition) and commits TABLE-ATOMICALLY through
+  * [[GraftLakeIO.commitSnapshot]] (see [[GraftMongoBatchWrite.commit]]),
+  * so a concurrent reader never observes an emptied or half-populated
+  * collection. Reads go through the lake's columnar reader. A pinned
+  * `VERSION AS OF` load is a read-only CREATEd collection whose data
+  * dir is the version dir. */
 class GraftMongoTable(tableName: String, declared: StructType,
-    dataDir: String, writable: Boolean,
-    allowEmptyRead: Boolean = false)
+    dataDir: String, writable: Boolean, created: Boolean)
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = tableName
   override def schema(): StructType = declared
@@ -217,8 +222,7 @@ class GraftMongoTable(tableName: String, declared: StructType,
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftMongoScanBuilder(declared, dataDir,
-      allowEmpty = writable || allowEmptyRead)
+    new GraftMongoScanBuilder(tableName, declared, dataDir, created)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -227,17 +231,13 @@ class GraftMongoTable(tableName: String, declared: StructType,
   }
 }
 
-/** Append/overwrite writes as canonical extended JSON — the exact
-  * inverse of [[GraftMongoPartitionReader]]'s wire decoder, so a
-  * round-trip through the store is value-exact: TimestampType renders
-  * as `{"$date": <iso-instant>}` at micro precision, scalars by
-  * declared type, NULL fields are omitted (the reader treats absent as
-  * null). Commit protocol: every task writes its shard into a
-  * query-scoped stage directory and reports the file in its commit
-  * message; job commit moves the reported shards into the collection
-  * (dropping the previous shards first under INSERT OVERWRITE /
-  * truncate), job abort removes the stage — readers never observe a
-  * half-written shard. */
+/** Append (INSERT) or overwrite (INSERT OVERWRITE, truncate) into a
+  * CREATEd collection. Every task writes one Parquet part
+  * ([[GraftMongoDataWriter]]) into a query-scoped stage directory and
+  * reports it in its commit message; job commit makes the reported
+  * parts the collection's next snapshot ([[GraftMongoBatchWrite]]),
+  * and job abort removes the stage, so readers never observe a
+  * half-written part. */
 class GraftMongoWriteBuilder(dataDir: String, declared: StructType,
     queryId: String)
     extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -258,11 +258,11 @@ class GraftMongoWriteBuilder(dataDir: String, declared: StructType,
 case class GraftMongoCommit(path: String)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-/** Collection shard-file resolution: a collection that has taken a
+/** Collection part-file resolution: a collection that has taken a
   * versioned commit reads through its `_latest` pointer (immutable
   * snapshot dirs, [[GraftLakeIO]]'s protocol); the pre-seeded demo
-  * fixture (`weatherny`, flat `part-*` files, never written) reads the
-  * legacy flat layout. */
+  * fixture (`weatherny`, flat `part-*` files, never written) and a
+  * pinned version dir read the flat layout. */
 object GraftMongoIO {
   def currentDir(dataDir: String): java.io.File =
     if (new java.io.File(dataDir, "_latest").exists())
@@ -284,41 +284,35 @@ class GraftMongoBatchWrite(dataDir: String, declared: StructType,
     stageDir.mkdirs()
     new GraftMongoWriterFactory(stageDir.getPath, declared)
   }
-  /** TABLE-LEVEL-ATOMIC commit via the versioned-snapshot protocol
-    * ([[GraftLakeIO]], proven on the lake catalog): version N+1 is
-    * built completely in a WRITER-UNIQUE build dir — prior shards
-    * hardlinked unless truncating, staged shards moved in under
-    * commit-unique names — and only then does
-    * [[GraftLakeIO.commitVersion]] CAS-rename it into place and move
-    * the pointer under the table lock. A concurrent reader that
-    * resolved the pointer earlier keeps its immutable snapshot; a
-    * concurrent WRITER that loses the race deletes only its own build
-    * dir — it can never rmTree a just-published snapshot (the round-10
-    * shared-newDir flaw, closed here the same way as on the lake). Any
-    * failure before the publish removes the build. */
+  /** TABLE-LEVEL-ATOMIC commit: one fill passed to the lake's commit
+    * routine, [[GraftLakeIO.commitSnapshot]], with the base pinned to
+    * the head, as the lake's batch write pins it. The fill links the
+    * base's parts into the build (none under truncate) and moves the
+    * staged parts in under commit-unique names; the routine stamps,
+    * renames and publishes, and removes the build on any failure. A
+    * writer whose base moved before the publish fails at once with
+    * [[GraftLakeCommitConflict]]. */
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit = {
-    val baseV = GraftLakeIO.latestVersion(dataDir)
-    val build = GraftLakeIO.newBuildDir(dataDir)
-    try {
+      : Unit =
+    try GraftLakeIO.commitSnapshot(dataDir,
+        Some(GraftLakeIO.latestVersion(dataDir)),
+        if (truncateFirst) "overwrite" else "append") { (baseV, build) =>
       if (!truncateFirst)
-        GraftMongoIO.shardFiles(dataDir).foreach(f =>
-          GraftLakeIO.linkOrCopy(f, new java.io.File(build, f.getName)))
+        GraftLakeIO.linkSnapshot(GraftLakeIO.versionDir(dataDir, baseV),
+          build)
       messages.foreach { case GraftMongoCommit(path) =>
         val f = new java.io.File(path)
-        // commit-unique names: carried shards from earlier commits may
-        // share partition/task ids with this query's staged shards
+        // commit-unique names: carried parts from earlier commits may
+        // share partition/task ids with this query's staged parts
         java.nio.file.Files.move(f.toPath,
           new java.io.File(build,
             s"part-v${baseV + 1}-${f.getName.stripPrefix("part-")}").toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       }
-      GraftLakeIO.commitVersion(dataDir, baseV, build): Unit
-    } catch {
-      case e: Throwable => Memo.rmTree(build); throw e
-    } finally Memo.rmTree(stageDir)
-  }
+      Some(())
+    }: Unit
+    finally Memo.rmTree(stageDir)
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
       : Unit = Memo.rmTree(stageDir)
@@ -363,15 +357,17 @@ class GraftMongoDataWriter(stagePath: String, declared: StructType,
 }
 
 /** Column pruning + filter pushdown: Catalyst hands the required
-  * column subset and the WHERE predicates here. Range/equality
-  * predicates on the `_id` datetime are ABSORBED into the scan (the
-  * document-store analog of sending `find({_id: {$gte, $lt}})` to the
-  * server): the reader checks the `$date` field first and skips the
-  * whole document — never decoding the measure fields — when it falls
-  * outside the bounds. Unsupported predicates are returned as residual
-  * for Spark to evaluate post-scan, so pushdown is always exact. */
-class GraftMongoScanBuilder(declared: StructType, dataDir: String,
-    allowEmpty: Boolean = false)
+  * column subset and the WHERE predicates here. On the demo
+  * collection's wire dump, range/equality predicates on the `_id`
+  * datetime are ABSORBED into the scan (the document-store analog of
+  * sending `find({_id: {$gte, $lt}})` to the server): the reader
+  * checks the `$date` field first and skips the whole document —
+  * never decoding the measure fields — when it falls outside the
+  * bounds. Unsupported predicates, and every predicate on a CREATEd
+  * collection, are returned as residual for Spark to evaluate
+  * post-scan, so pushdown is always exact. */
+class GraftMongoScanBuilder(tableName: String, declared: StructType,
+    dataDir: String, created: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = declared
@@ -396,6 +392,7 @@ class GraftMongoScanBuilder(declared: StructType, dataDir: String,
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (ok, residual) = filters.partition {
+      case _ if created => false
       case EqualTo("_id", v) => micros(v).isDefined
       case GreaterThan("_id", v) => micros(v).isDefined
       case GreaterThanOrEqual("_id", v) => micros(v).isDefined
@@ -419,27 +416,32 @@ class GraftMongoScanBuilder(declared: StructType, dataDir: String,
 
   override def pushedFilters(): Array[Filter] = accepted
 
-  override def build(): Scan = new GraftMongoScan(required, dataDir,
-    accepted, if (accepted.isEmpty) None else Some((lo, hi)), allowEmpty)
+  override def build(): Scan = new GraftMongoScan(tableName, required,
+    dataDir, accepted, if (accepted.isEmpty) None else Some((lo, hi)),
+    created)
 }
 
-class GraftMongoScan(required: StructType, dataDir: String,
-    pushed: Array[Filter], bounds: Option[(Long, Long)],
-    allowEmpty: Boolean = false)
+/** A collection scan. The demo's wire dump reads row by row through
+  * [[GraftMongoPartitionReader]]; a CREATEd collection's Parquet parts
+  * read as columnar batches through the lake's reader. Spark needs one
+  * answer per scan, so the table kind decides, not the files. */
+class GraftMongoScan(tableName: String, required: StructType,
+    dataDir: String, pushed: Array[Filter], bounds: Option[(Long, Long)],
+    created: Boolean)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftMongoScan(weatherny, cols=[${required.fieldNames.mkString(",")}]" +
-      s", pushed=[${pushed.mkString(",")}])"
+    s"GraftMongoScan($tableName, cols=[${required.fieldNames.mkString(",")}]" +
+      (if (created) "" else s", pushed=[${pushed.mkString(",")}]") + ")"
 
   // resolve the snapshot pointer ONCE per scan (versioned collections);
   // the read then touches only immutable shard files
   private lazy val shards: Array[java.io.File] = {
     val fs = GraftMongoIO.shardFiles(dataDir).sortBy(_.getAbsolutePath)
-    // a freshly CREATEd (writable) collection is legitimately empty;
+    // a CREATEd collection (or a pinned version of one) may be empty;
     // an empty path for the demo collection means a misconfigured root
-    require(allowEmpty || fs.nonEmpty, s"empty document store at $dataDir")
+    require(created || fs.nonEmpty, s"empty document store at $dataDir")
     fs
   }
   private lazy val totalBytes = shards.map(_.length).sum
@@ -465,29 +467,31 @@ class GraftMongoScan(required: StructType, dataDir: String,
     else paths.map(p => GraftMongoInputPartition(Seq(p))).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftMongoReaderFactory(required, bounds)
+    new GraftMongoReaderFactory(required, bounds, created)
 }
 
 case class GraftMongoInputPartition(paths: Seq[String]) extends InputPartition
 
 class GraftMongoReaderFactory(required: StructType,
-    bounds: Option[(Long, Long)]) extends PartitionReaderFactory {
+    bounds: Option[(Long, Long)], columnar: Boolean)
+    extends PartitionReaderFactory {
+  private def paths(partition: InputPartition) =
+    partition.asInstanceOf[GraftMongoInputPartition].paths
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftMongoShardsReader(
-      partition.asInstanceOf[GraftMongoInputPartition].paths, path =>
-        // per-file dispatch: connector-written shards are columnar
-        // parquet; the pre-seeded demo fixture (and any externally
-        // staged wire dump) is extended-JSON text
-        if (path.endsWith(".parquet"))
-          new GraftMongoColumnarReader(path, required, bounds)
-        else new GraftMongoPartitionReader(path, required, bounds))
+    new GraftMongoShardsReader(paths(partition), required, bounds)
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    columnar
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftLakeColumnarPartitionReader(paths(partition), 0, required,
+      metrics = GraftMongoScanMetrics)
 }
 
-/** Reads a partition's shard files one after another, opening each
-  * only when the previous one is exhausted. */
-class GraftMongoShardsReader(paths: Seq[String],
-    open: String => PartitionReader[InternalRow])
+/** Reads a partition's wire-dump shard files one after another,
+  * opening each only when the previous one is exhausted. */
+class GraftMongoShardsReader(paths: Seq[String], required: StructType,
+    bounds: Option[(Long, Long)])
     extends PartitionReader[InternalRow] {
   private val rest = paths.iterator
   private var cur: PartitionReader[InternalRow] = _
@@ -497,7 +501,7 @@ class GraftMongoShardsReader(paths: Seq[String],
       close()
       cur = null
       if (!rest.hasNext) return false
-      cur = open(rest.next())
+      cur = new GraftMongoPartitionReader(rest.next(), required, bounds)
     }
     true
   }
@@ -506,84 +510,15 @@ class GraftMongoShardsReader(paths: Seq[String],
 }
 
 /** Spec observability for the columnar collection reads (same role as
-  * [[GraftLakeScanMetrics]] on the lake side). */
-object GraftMongoScanMetrics {
+  * [[GraftLakeScanMetrics]] on the lake side): the lake reader adds to
+  * these when it serves a CREATEd collection. */
+object GraftMongoScanMetrics extends GraftReadCounters {
   val decodedColumns = new java.util.concurrent.atomic.AtomicLong()
   val metadataOnlyReads = new java.util.concurrent.atomic.AtomicLong()
-  def reset(): Unit = { decodedColumns.set(0); metadataOnlyReads.set(0) }
-}
-
-/** Columnar collection shard: decodes ONLY the requested columns'
-  * pages (plus `_id` when pushed bounds need it), serves
-  * projection-empty reads from footer row counts, and applies pushed
-  * `_id` bounds before materializing the measure fields — the
-  * columnar analog of the JSON reader's decode-`$date`-first
-  * skipping. */
-class GraftMongoColumnarReader(path: String, required: StructType,
-    bounds: Option[(Long, Long)]) extends PartitionReader[InternalRow] {
-
-  private val file = new java.io.File(path)
-  private val (fileSchema, totalRows) = GraftShardCodec.footer(file)
-  // the requested columns stored in this shard, plus `_id` when pushed
-  // bounds need it; batch column i is names(i)
-  private val names = (required.fieldNames.toSeq ++
-    bounds.map(_ => "_id")).distinct.filter(fileSchema.containsField)
-  private val colIdx: Array[Int] = required.fieldNames.map(names.indexOf)
-  private val idIdx = if (bounds.isDefined) names.indexOf("_id") else -1
-  private val metadataOnly = names.isEmpty
-  GraftMongoScanMetrics.decodedColumns.addAndGet(names.length.toLong): Unit
-  if (metadataOnly)
-    GraftMongoScanMetrics.metadataOnlyReads.incrementAndGet(): Unit
-  private val reader =
-    if (metadataOnly) null
-    else {
-      val vr = GraftShardCodec.openVectorized(file, fileSchema, names, 4096)
-      vr.initBatch(new StructType(), InternalRow.empty)
-      vr
-    }
-
-  private var remaining = totalRows
-  private var batch: java.util.Iterator[InternalRow] =
-    java.util.Collections.emptyIterator()
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    row = null
-    while (row == null) {
-      if (metadataOnly) {
-        // bounds with no `_id` column in the file: nothing can match
-        // (the JSON reader's inBounds is false for absent `$date`)
-        if (bounds.isDefined || remaining <= 0L) return false
-        remaining -= 1L
-        row = new GenericInternalRow(required.length)
-      } else if (!batch.hasNext) {
-        if (!reader.nextBatch()) return false
-        batch = reader.resultBatch().rowIterator()
-      } else {
-        val r = batch.next()
-        val ok = bounds.forall { case (lo, hi) =>
-          idIdx >= 0 && !r.isNullAt(idIdx) && {
-            val m = r.getLong(idIdx); m >= lo && m <= hi
-          }
-        }
-        if (ok) {
-          val vals = new Array[Any](required.length)
-          var i = 0
-          while (i < required.length) {
-            val c = colIdx(i)
-            if (c >= 0 && !r.isNullAt(c))
-              vals(i) = r.get(c, required(i).dataType)
-            i += 1
-          }
-          row = new GenericInternalRow(vals)
-        }
-      }
-    }
-    true
+  val batchesDecoded = new java.util.concurrent.atomic.AtomicLong()
+  def reset(): Unit = {
+    decodedColumns.set(0); metadataOnlyReads.set(0); batchesDecoded.set(0)
   }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = if (reader != null) reader.close()
 }
 
 /** Streams one shard of JSON-lines documents; decodes canonical
@@ -812,12 +747,12 @@ object Mongo {
     * store; queries then read them back): CREATE a collection through
     * the catalog (persisting its schemadef descriptor), INSERT
     * OVERWRITE a deterministic daily aggregate of orders through the
-    * DSv2 write path (one extended-JSON shard per write task, staged
-    * commit), then read it back through the same connector's pruned
-    * scan. INSERT OVERWRITE (not append) keeps the store idempotent
-    * across runs; the DuckDB oracle recomputes the aggregate from
-    * orders directly, so a pass proves the wire encode→decode
-    * round-trip is value-exact. */
+    * DSv2 write path (one Parquet part per write task, committed as
+    * the collection's next snapshot), then read it back through the
+    * same connector's pruned columnar scan. INSERT OVERWRITE (not
+    * append) keeps the store idempotent across runs; the DuckDB oracle
+    * recomputes the aggregate from orders directly, so a pass proves
+    * the Parquet write and read round-trip is value-exact. */
   val mongoIngestRoundtrip: Q = (s, dir) => {
     registerCatalog(s, dir)
     s.sql(

@@ -307,10 +307,9 @@ class RegistryGuardSpec extends SparkSpec {
 
   /** Hardlinks and snapshot commits in `src` that bypass
     * GraftLakeIO's commit routine: `Files.createLink` outside
-    * `linkOrCopy`, and `commitVersion(` calls outside `commitSnapshot`
-    * and the document store's `GraftMongoBatchWrite` (which has no
-    * `_commit` stamp). The enclosing def or class is the nearest one
-    * declared before the call. */
+    * `linkOrCopy`, and `commitVersion(` calls outside
+    * `commitSnapshot`. The enclosing def is the nearest one declared
+    * before the call. */
   private def commitBypasses(src: String): Seq[(Int, String)] = {
     def nearest(at: Int, kw: String): String =
       raw"\b$kw\s+(\w+)".r.findAllMatchIn(src.substring(0, at))
@@ -319,8 +318,7 @@ class RegistryGuardSpec extends SparkSpec {
       .filter(m => nearest(m.start, "def") != "linkOrCopy")
       .map(m => lineOf(src, m.start) -> "Files.createLink")
     val commits = raw"(?<!def )commitVersion\(".r.findAllMatchIn(src)
-      .filter(m => nearest(m.start, "def") != "commitSnapshot" &&
-        nearest(m.start, "class") != "GraftMongoBatchWrite")
+      .filter(m => nearest(m.start, "def") != "commitSnapshot")
       .map(m => lineOf(src, m.start) -> "commitVersion")
     (links ++ commits).toSeq
   }
@@ -330,14 +328,14 @@ class RegistryGuardSpec extends SparkSpec {
     Seq("def carry(a: File, b: File) = Files.createLink(b.toPath, a.toPath)",
       "object W { def commit() = GraftLakeIO.commitVersion(d, 1, b) }",
       "class GraftMongoBatchWrite { def commit() = 1 }\n" +
-        "class Other { def commit() = GraftLakeIO.commitVersion(d, 1, b) }")
+        "class Other { def commit() = GraftLakeIO.commitVersion(d, 1, b) }",
+      "class GraftMongoBatchWrite { def commit() = " +
+        "GraftLakeIO.commitVersion(d, 1, b) }")
       .foreach(bad => assert(commitBypasses(bad).nonEmpty, bad))
     Seq("def linkOrCopy(s: File, d: File) = Files.createLink(d.toPath, " +
         "s.toPath)",
       "def commitSnapshot[T](d: String) = { commitVersion(d, 1, b) }",
-      "def commitVersion(dataDir: String, base: Int) = 1",
-      "class GraftMongoBatchWrite { def commit() = " +
-        "GraftLakeIO.commitVersion(d, 1, b) }")
+      "def commitVersion(dataDir: String, base: Int) = 1")
       .foreach(ok => assert(commitBypasses(ok).isEmpty, ok))
     val offenders = for {
       f <- scalaFiles(new java.io.File("src/main/scala"))
@@ -415,6 +413,19 @@ class RegistryGuardSpec extends SparkSpec {
       .mkString("|").r.findAllMatchIn(src)
       .map(m => (lineOf(src, m.start), m.matched)).toSeq
 
+  /** Vectorized Parquet opens outside the lake reader's own file, and
+    * the retired collection reader anywhere: every part's rows are
+    * decoded by [[graft.sources.GraftLakeColumnarPartitionReader]]. */
+  private def secondReaders(src: String, file: String): Seq[(Int, String)] = {
+    val opens =
+      if (file == "LakeColumnarReader.scala") Nil
+      else raw"(?<!def )\bopenVectorized\(".r.findAllMatchIn(src)
+        .map(_.start -> "openVectorized").toSeq
+    val retired = raw"\bGraftMongoColumnarReader\b".r.findAllMatchIn(src)
+      .map(_.start -> "GraftMongoColumnarReader").toSeq
+    (opens ++ retired).map { case (at, what) => (lineOf(src, at), what) }
+  }
+
   test("source lint: Parquet and Hadoop-conf opens go through " +
       "GraftShardCodec's one parsed conf") {
     // the lint itself catches every form it names
@@ -488,6 +499,34 @@ class RegistryGuardSpec extends SparkSpec {
     assert(writeOffenders.isEmpty,
       s"Group-record Parquet writes (write InternalRows through " +
         s"GraftShardCodec.openWriter): ${writeOffenders.mkString(", ")}")
+    // and one vectorized part reader, the lake's
+    Seq("val vr = GraftShardCodec.openVectorized(f, s, names, 4096)" ->
+        "MongoCatalog.scala",
+      "new GraftMongoColumnarReader(path, required, bounds)" ->
+        "MongoCatalog.scala",
+      "class GraftMongoColumnarReader(path: String)" ->
+        "LakeColumnarReader.scala")
+      .foreach { case (bad, file) =>
+        assert(secondReaders(bad, file).nonEmpty, bad)
+      }
+    Seq("vr = GraftShardCodec.openVectorized(f, fileSchema, present, c)" ->
+        "LakeColumnarReader.scala",
+      "def openVectorized(file: java.io.File, fileSchema: MessageType," ->
+        "LakeShardCodec.scala",
+      "new GraftLakeColumnarPartitionReader(paths, 0, required)" ->
+        "MongoCatalog.scala")
+      .foreach { case (ok, file) =>
+        assert(secondReaders(ok, file).isEmpty, ok)
+      }
+    val readerOffenders = for {
+      f <- scalaFiles(new java.io.File("src/main/scala"))
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      (line, what) <- secondReaders(src, f.getName)
+    } yield s"${f.getName}:$line ($what)"
+    assert(readerOffenders.isEmpty,
+      s"vectorized Parquet reads outside the lake reader: " +
+        readerOffenders.mkString(", "))
   }
 
   test("ORDER BY keys totally order every oracled result on the " +

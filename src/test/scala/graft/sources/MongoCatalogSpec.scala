@@ -324,4 +324,48 @@ class MongoCatalogSpec extends SparkSpec {
       lim.queryExecution.executedPlan.toString)
     assert(lim.collect().length === 7)
   }
+
+  test("a CREATEd collection reads through the lake's columnar reader: " +
+      "ColumnarToRow over the scan, an _id range stays a residual " +
+      "Filter, and the scan names the collection") {
+    Mongo.registerCatalog(spark, sf)
+    spark.sql("DROP TABLE IF EXISTS graft_mongo.weather.spec_col")
+    spark.sql(
+      "CREATE TABLE graft_mongo.weather.spec_col (_id TIMESTAMP, a BIGINT)")
+    spark.sql(
+      """INSERT INTO graft_mongo.weather.spec_col VALUES
+         (TIMESTAMP '1995-01-02 00:00:00', 1),
+         (TIMESTAMP '1995-01-03 00:00:00', 2),
+         (TIMESTAMP '1995-01-04 00:00:00', 3),
+         (TIMESTAMP '1995-01-05 00:00:00', 4)""")
+    val df = spark.sql(
+      """SELECT a FROM graft_mongo.weather.spec_col
+         WHERE _id >= TIMESTAMP '1995-01-03 00:00:00'
+           AND _id < TIMESTAMP '1995-01-05 00:00:00'""")
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect {
+      case c: org.apache.spark.sql.execution.ColumnarToRowExec => c
+    }.flatMap(_.collect { case b: BatchScanExec => b.scan })
+    assert(scans.length === 1, plan.toString)
+    assert(scans.head.isInstanceOf[GraftMongoScan], plan.toString)
+    // nothing is absorbed: Spark filters the rows above the scan
+    assert(plan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f
+    }.nonEmpty, plan.toString)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 3L))
+    val desc = scans.head.description()
+    assert(desc.startsWith("GraftMongoScan(spec_col, ") &&
+      !desc.contains("weatherny") && !desc.contains("pushed"), desc)
+    spark.sql("DROP TABLE graft_mongo.weather.spec_col")
+    // the lake reader serves `_shard` and `_pos` itself, so a
+    // collection may not declare them
+    val e = intercept[Exception] {
+      spark.sql("CREATE TABLE graft_mongo.weather.spec_pos " +
+        "(_id TIMESTAMP, _pos BIGINT)")
+    }
+    assert(e.getMessage.contains("cannot declare _shard or _pos"),
+      e.getMessage)
+    assert(!spark.sql("SHOW TABLES IN graft_mongo.weather").collect()
+      .map(_.getString(1)).contains("spec_pos"))
+  }
 }
